@@ -173,14 +173,18 @@ object Tables {
   private val spreadMaxBytes = 128L << 20
   private def maybeSpread(
       spark: SparkSession, df: DataFrame, path: String): DataFrame = {
+    import java.nio.file.{Files, InvalidPathException, Paths}
     val bytes =
       try {
         import scala.jdk.CollectionConverters._
-        val root = java.nio.file.Paths.get(path)
-        java.nio.file.Files.walk(root).iterator().asScala
-          .filter(java.nio.file.Files.isRegularFile(_))
-          .map(java.nio.file.Files.size).sum
-      } catch { case _: Throwable => Long.MaxValue } // non-local: no spread
+        val walk = Files.walk(Paths.get(path))
+        try walk.iterator().asScala
+          .filter(Files.isRegularFile(_)).map(Files.size).sum
+        finally walk.close()
+      } catch { // non-local or unreadable: no spread
+        case _: java.io.IOException | _: java.io.UncheckedIOException |
+            _: InvalidPathException => Long.MaxValue
+      }
     if (bytes <= spreadMaxBytes)
       df.repartition(spark.sparkContext.defaultParallelism)
     else df

@@ -14,10 +14,13 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * materializes the intersection array only to take its size; measured
   * 4.2 s → sub-second on the q70 verification tail at sf0.1).
   *
-  * Preconditions (the caller's contract, not checked): both arrays
-  * ascending-sorted (Spark's `array_sort` order — UTF8String binary
-  * order), element-distinct, no null elements. Under those,
+  * Preconditions (the caller's contract): both arrays ascending-sorted
+  * (Spark's `array_sort` order — UTF8String binary order),
+  * element-distinct, no null elements. Under those,
   * `SortedIntersectCount(a, b) == size(array_intersect(a, b))` exactly.
+  * Order and distinctness are not checked; a null element the merge
+  * reaches fails the task with an error naming the function, in both the
+  * interpreted and the generated path.
   */
 case class SortedIntersectCount(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -30,6 +33,8 @@ case class SortedIntersectCount(left: Expression, right: Expression)
     val na = a.numElements(); val nb = b.numElements()
     var i = 0; var j = 0; var c = 0L
     while (i < na && j < nb) {
+      if (a.isNullAt(i) || b.isNullAt(j))
+        throw new IllegalArgumentException(SortedIntersectCount.NullElementMsg)
       val cmp = a.getUTF8String(i).compareTo(b.getUTF8String(j))
       if (cmp == 0) { c += 1L; i += 1; j += 1 }
       else if (cmp < 0) i += 1
@@ -50,6 +55,9 @@ case class SortedIntersectCount(left: Expression, right: Expression)
          |int $na = $a.numElements(); int $nb = $b.numElements();
          |int $i = 0; int $j = 0; long $c = 0L;
          |while ($i < $na && $j < $nb) {
+         |  if ($a.isNullAt($i) || $b.isNullAt($j)) {
+         |    throw new IllegalArgumentException("${SortedIntersectCount.NullElementMsg}");
+         |  }
          |  int $cmp = $a.getUTF8String($i).compareTo($b.getUTF8String($j));
          |  if ($cmp == 0) { $c++; $i++; $j++; }
          |  else if ($cmp < 0) { $i++; } else { $j++; }
@@ -61,6 +69,12 @@ case class SortedIntersectCount(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): SortedIntersectCount =
     copy(left = newLeft, right = newRight)
+}
+
+object SortedIntersectCount {
+  private[functions] val NullElementMsg =
+    "graft_sorted_intersect_count: null array element; both arguments " +
+      "must be sorted, distinct, non-null string arrays"
 }
 
 object SetOps {

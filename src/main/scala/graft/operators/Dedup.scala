@@ -127,17 +127,11 @@ object Dedup {
     // stays one hash aggregate.
     val banded = sigs.select($"id", $"n",
       posexplode(lshBands($"sig", bands, rowsPerBand)).as(Seq("band", "bucket")))
-    val posting = banded.groupBy($"band", $"bucket")
-      .agg(collect_list(struct($"id", $"n")).as("ps"))
-      .filter(size($"ps") > 1 &&
-        (if (maxBucketSize > 0) size($"ps") <= maxBucketSize else lit(true)))
-    val cand = posting
-      .select($"ps", posexplode($"ps").as(Seq("i", "x")))
-      .select($"x", explode(slice($"ps", $"i" + lit(2), size($"ps"))).as("y"))
-      .select(when($"x.id" < $"y.id", struct($"x".as("a"), $"y".as("b")))
-        .otherwise(struct($"y".as("a"), $"x".as("b"))).as("p"))
-      .groupBy($"p.a.id".as("a_id"), $"p.b.id".as("b_id"),
-        $"p.a.n".as("na"), $"p.b.n".as("nb"))
+    val cand = postingPairs(banded.groupBy($"band", $"bucket")
+        .agg(collect_list(struct($"id", $"n")).as("ps")),
+        "ps", maxBucketSize, key = "id")
+      .groupBy($"a.id".as("a_id"), $"b.id".as("b_id"),
+        $"a.n".as("na"), $"b.n".as("nb"))
       .agg(lit(1))
       .select($"a_id", $"b_id", $"na", $"nb")
 
@@ -299,6 +293,37 @@ object Dedup {
     }
   }
 
+  /** Every unordered pair of a grouped posting list, canonicalized —
+    * the one candidate expansion behind the posting-list pair finders
+    * (minhash bands, exact and prefix Jaccard, winnowing, simhash, LSH
+    * buckets). Lists of fewer than two entries, or of more than `cap`
+    * (0 = uncapped), die as a filter on the grouped row. Position i pairs
+    * with every later element, so each unordered pair of a list comes
+    * out exactly once, as (a, b) with key(a) < key(b): the key is the
+    * element itself for a list of ids, or its field `key` for a list of
+    * payload structs (a doc appears at most once per posting list, so
+    * the comparison is strict).
+    *
+    * The expansion stays CODEGEN'D: two Generates + a Slice (all
+    * whole-stage-codegen expressions), NOT array higher-order functions
+    * — flatten(transform(transform(...))) computes the identical pair
+    * array but HOFs are CodegenFallback, and the interpreted per-element
+    * cost measured 2-3× slower than the whole original join form.
+    */
+  private[graft] def postingPairs(posting: DataFrame, list: String,
+      cap: Int = 0, key: String = ""): DataFrame = {
+    val ps = col(list)
+    val (x, y) = (col("x"), col("y"))
+    def k(c: Column): Column = if (key.isEmpty) c else c.getField(key)
+    val xFirst = k(x) < k(y)
+    posting
+      .filter(size(ps) > 1 && (if (cap > 0) size(ps) <= cap else lit(true)))
+      .select(ps, posexplode(ps).as(Seq("i", "x")))
+      .select(x, explode(slice(ps, col("i") + lit(2), size(ps))).as("y"))
+      .select(when(xFirst, x).otherwise(y).as("a"),
+        when(xFirst, y).otherwise(x).as("b"))
+  }
+
   /** The UNCAPPED exact path of [[jaccardPairs]] as a posting-list
     * pipeline — same result set and values, two exchanges instead of
     * five-plus (optimization guide §2.4 "remove shuffles outright"):
@@ -353,24 +378,11 @@ object Dedup {
           array_distinct(TextOps.shingles($"toks", shingleLen)))).as("arr"))
       .select($"doc_id", size($"arr").cast("long").as("n"),
         explode($"arr").as("sh"))
-    // Pair expansion stays CODEGEN'D: two Generates + a Slice (all
-    // whole-stage-codegen expressions), NOT array higher-order functions
-    // — flatten(transform(transform(...))) computes the identical pair
-    // array but HOFs are CodegenFallback, and the interpreted per-element
-    // cost measured 2-3× slower than the whole original join form.
-    // Position i pairs with every later element; (i, j>i) hits each
-    // unordered pair exactly once, and the projection canonicalizes to
-    // a_id < b_id (a doc appears at most once per posting list, so the
-    // comparison is strict).
-    val pairs = sh.groupBy($"sh")
-      .agg(collect_list(struct($"doc_id", $"n")).as("ps"))
-      .filter(size($"ps") > 1)
-      .select($"ps", posexplode($"ps").as(Seq("i", "x")))
-      .select($"x", explode(slice($"ps", $"i" + lit(2), size($"ps"))).as("y"))
-      .select(when($"x.doc_id" < $"y.doc_id", struct($"x".as("a"), $"y".as("b")))
-        .otherwise(struct($"y".as("a"), $"x".as("b"))).as("p"))
-      .groupBy($"p.a.doc_id".as("a_id"), $"p.b.doc_id".as("b_id"),
-        $"p.a.n".as("na"), $"p.b.n".as("nb"))
+    val pairs = postingPairs(sh.groupBy($"sh")
+        .agg(collect_list(struct($"doc_id", $"n")).as("ps")), "ps",
+        key = "doc_id")
+      .groupBy($"a.doc_id".as("a_id"), $"b.doc_id".as("b_id"),
+        $"a.n".as("na"), $"b.n".as("nb"))
       .agg(count(lit(1)).as("inter"))
       .withColumn("jaccard",
         $"inter".cast("double") / ($"na" + $"nb" - $"inter"))
@@ -592,25 +604,21 @@ object Dedup {
     // because a true pair's FIRST shared token always passes the
     // positional bound; rows failing it matched only on LATE prefix
     // tokens and are pruned before the pair aggregate.
-    val cand = prefix.groupBy($"sh")
-      .agg(collect_list(struct($"doc_id", $"n", $"pos", $"idx")).as("ps"))
-      .filter(size($"ps") > 1)
-      .select($"ps", posexplode($"ps").as(Seq("i", "x")))
-      .select($"x", explode(slice($"ps", $"i" + lit(2), size($"ps"))).as("y"))
-      .select(when($"x.doc_id" < $"y.doc_id", struct($"x".as("a"), $"y".as("b")))
-        .otherwise(struct($"y".as("a"), $"x".as("b"))).as("p"))
+    val cand = postingPairs(prefix.groupBy($"sh")
+        .agg(collect_list(struct($"doc_id", $"n", $"pos", $"idx")).as("ps")),
+        "ps", key = "doc_id")
       // indexing-prefix filter: the strictly smaller side's token must
       // lie within ITS indexing prefix (on ties either side may play
       // the smaller role, so either flag admits the row)
-      .filter(when($"p.a.n" < $"p.b.n", $"p.a.idx")
-        .when($"p.b.n" < $"p.a.n", $"p.b.idx")
-        .otherwise($"p.a.idx" || $"p.b.idx"))
-      .filter(greatest($"p.a.n", $"p.b.n") * threshold <=
-        least($"p.a.n", $"p.b.n") + 1e-9)
-      .filter(lit(1) + least($"p.a.n" - $"p.a.pos", $"p.b.n" - $"p.b.pos") >=
-        ($"p.a.n" + $"p.b.n") * (threshold / (1.0 + threshold)) - 1e-9)
-      .groupBy($"p.a.doc_id".as("a_id"), $"p.b.doc_id".as("b_id"),
-        $"p.a.n".as("na"), $"p.b.n".as("nb"))
+      .filter(when($"a.n" < $"b.n", $"a.idx")
+        .when($"b.n" < $"a.n", $"b.idx")
+        .otherwise($"a.idx" || $"b.idx"))
+      .filter(greatest($"a.n", $"b.n") * threshold <=
+        least($"a.n", $"b.n") + 1e-9)
+      .filter(lit(1) + least($"a.n" - $"a.pos", $"b.n" - $"b.pos") >=
+        ($"a.n" + $"b.n") * (threshold / (1.0 + threshold)) - 1e-9)
+      .groupBy($"a.doc_id".as("a_id"), $"b.doc_id".as("b_id"),
+        $"a.n".as("na"), $"b.n".as("nb"))
       .agg(count(lit(1)).as("hits"))
       .select($"a_id", $"b_id", $"na", $"nb")
     // Verification: exact |x∩y| as a MAP-SIDE array_intersect over the
@@ -863,37 +871,9 @@ object Dedup {
       bucketCounts: DataFrame, // (band, bucket, population)
       numBands: Int,
       rowsPerBand: Int,
-      shingleLen: Int) {
-    /** Materialize the persisted relations (e.g. before timing probes). */
-    def build(): this.type =
-      // self-release on failure: fluent `minhashIndex(...).build()`
-      // callers never receive the reference, so nothing else could
-      // unpersist it
-      BroadcastGate.releasingOnFailure(
-        Seq(shingleHashes, bands, sizes, bucketCounts)) {
-        shingleHashes.count(); bands.count(); sizes.count()
-        bucketCounts.count(); this
-      }
-    def unpersist(): Unit = {
-      shingleHashes.unpersist(blocking = false)
-      bands.unpersist(blocking = false)
-      sizes.unpersist(blocking = false)
-      bucketCounts.unpersist(blocking = false)
-    }
-    /** Self-heal the caches (the [[SimilaritySearch.IvfPqIndex]]
-      * `ensureCached` pattern): a bench teardown or external clearCache
-      * that dropped the blocks also dropped the persist REGISTRATIONS,
-      * after which every probe recomputes the corpus shingle relation
-      * once per consumer — re-mark them so the next action rebuilds the
-      * cache instead.
-      */
-    def ensureCached(): this.type = {
-      Seq(shingleHashes, bands, sizes, bucketCounts).foreach { df =>
-        if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-          df.persist()
-      }
-      this
-    }
+      shingleLen: Int) extends CachedRelations {
+    protected def relations: Seq[DataFrame] =
+      Seq(shingleHashes, bands, sizes, bucketCounts)
   }
 
   private def shingleHashRelation(
@@ -949,76 +929,48 @@ object Dedup {
     MinhashIndex(cEx, cBand, cSizes, cBuckets, bands, rowsPerBand, shingleLen)
   }
 
+  /** The durable minhash index's shape ([[DurableIndex.Store]]): four
+    * tables, bucket populations stored as per-append partial counts.
+    */
+  private val minhashStore = DurableIndex.Store("minhash",
+    Seq("shingles", "bands", "sizes", "bucket_counts"),
+    counts = Some("bucket_counts" -> Seq("band", "bucket")),
+    meta = Seq("numBands", "rowsPerBand", "shingleLen"))
+
   /** Persist a [[MinhashIndex]] as parquet tables — the DURABLE form of
     * the standing index: a daily dedup pipeline builds it once, then each
     * increment probes the loaded index and, once accepted, appends its
     * own rows ([[appendToMinhashIndex]]) — no driver ever re-indexes the
     * corpus. Bucket populations are stored as per-append PARTIAL counts
     * (append-only — an aggregated file could not be appended to); the
-    * loader re-aggregates them, a relation of at most one row per
-    * (append, band, bucket). At cluster scale the shingle and band
+    * loader re-aggregates them. At cluster scale the shingle and band
     * tables would be written `bucketBy(corpus_id)` / `(band, bucket)` so
     * probe joins are co-located; plain parquet keeps the sandbox path
     * simple.
     */
-  def saveMinhashIndex(index: MinhashIndex, path: String): Unit = {
-    index.shingleHashes.write.mode("overwrite")
-      .parquet(s"$path/shingles/append=base")
-    index.bands.write.mode("overwrite").parquet(s"$path/bands/append=base")
-    index.sizes.write.mode("overwrite").parquet(s"$path/sizes/append=base")
-    index.bucketCounts
-      .select(col("band"), col("bucket"), col("population").as("partial"))
-      .write.mode("overwrite").parquet(s"$path/bucket_counts/append=base")
-    val meta = s"""{"numBands":${index.numBands},""" +
-      s""""rowsPerBand":${index.rowsPerBand},"shingleLen":${index.shingleLen}}"""
-    java.nio.file.Files.write(java.nio.file.Paths.get(path, "index_meta.json"),
-      meta.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    // the manifest publishes LAST: a crash anywhere above leaves a
-    // manifest-less (hence unloadable) index, never a torn-but-readable one
-    DurableIndex.initManifest(path)
-  }
+  def saveMinhashIndex(index: MinhashIndex, path: String): Unit =
+    DurableIndex.save(path, minhashStore,
+      Seq(index.shingleHashes, index.bands, index.sizes, index.bucketCounts),
+      Seq(index.numBands, index.rowsPerBand, index.shingleLen))
 
   /** Load a durable [[MinhashIndex]] written by [[saveMinhashIndex]] /
     * grown by [[appendToMinhashIndex]]. Relations come back persisted;
-    * partial bucket counts are re-aggregated on load.
-    *
-    * Visibility resolves from the [[DurableIndex]] manifest: only
-    * manifest-committed appends are read, so a load concurrent with (or
-    * after a crash of) an in-flight append sees the WHOLE prior index
-    * and none of the increment — never bands without sizes.
-    *
-    * `pinId` (from [[DurableIndex.acquirePin]]) resolves visibility from
-    * that pin's recorded snapshot instead, and the sweep holds the
-    * snapshot's partitions for the pin's lease — take one when the scan
-    * may outlive `tombstoneRetentionMs` of concurrent index maintenance.
-    * Unpinned, the relations are persisted at load, so the exposure is
-    * the first materialization (keep retention above it).
+    * partial bucket counts are re-aggregated on load. Visibility (the
+    * committed appends minus `excludeAppends`, or the snapshot of
+    * `pinId`) resolves as [[DurableIndex.load]] describes — never bands
+    * without sizes. Unpinned, the relations are persisted at load, so
+    * the exposure to concurrent maintenance is the first
+    * materialization (keep `tombstoneRetentionMs` above it).
     */
   def loadMinhashIndex(
       spark: org.apache.spark.sql.SparkSession, path: String,
       excludeAppends: Seq[String] = Nil,
       pinId: Option[String] = None): MinhashIndex = {
-    import spark.implicits._
-    val (numBands, rowsPerBand, shingleLen) = loadIndexMeta(path)
-    // the append=<id> partition column is a durability artifact, not part
-    // of the relations — used only to SELECT the manifest-committed
-    // appends minus the caller's exclusions (a replaying increment must
-    // not see its own prior partial append), then selected away.
-    // Selection is partition pruning: unlisted appends' files are never
-    // read.
-    val vis = pinId
-      .map(DurableIndex.pinnedVisible(path, _, excludeAppends))
-      .getOrElse(DurableIndex.visible(path, excludeAppends))
-    def part(sub: String): DataFrame =
-      spark.read.parquet(s"$path/$sub").filter($"append".isin(vis: _*))
-    val counts = part("bucket_counts")
-      .groupBy($"band", $"bucket").agg(sum($"partial").as("population"))
-    MinhashIndex(
-      part("shingles").select($"corpus_id", $"h").persist(),
-      part("bands").select($"corpus_id", $"band", $"bucket").persist(),
-      part("sizes").select($"corpus_id", $"nc").persist(),
-      counts.persist(),
-      numBands, rowsPerBand, shingleLen)
+    val (m, Seq(shingles, bands, sizes, counts)) =
+      DurableIndex.load(spark, path, minhashStore, excludeAppends, pinId)
+    MinhashIndex(shingles.persist(), bands.persist(), sizes.persist(),
+      counts.persist(), m("numBands").toInt, m("rowsPerBand").toInt,
+      m("shingleLen").toInt)
   }
 
   /** Append an ACCEPTED increment's rows to a durable index — the write
@@ -1026,20 +978,11 @@ object Dedup {
     * Signatures and buckets are pure per-doc functions of the same hash
     * family, so appending never rewrites existing rows; bucket counts
     * append as partials. Cost: one narrow pass over the batch.
-    *
-    * `appendId` names the increment's partition (`append=<id>`) and makes
-    * the operation IDEMPOTENT: a replayed increment (streaming batch
-    * redelivery, retried job) whose prior attempt fully committed is a
-    * NO-OP (rewriting intact, manifest-visible partitions would
-    * transiently empty them under a concurrent reader); one whose prior
-    * attempt crashed overwrites partitions no reader could list.
-    *
-    * Atomicity: the four tables still WRITE sequentially, but none is
-    * reader-visible until [[DurableIndex.commitAppend]] republishes the
-    * manifest as the final step — an out-of-band [[loadMinhashIndex]]
-    * at ANY instant (including after a crash between table writes) sees
-    * either the whole increment or none of it, never bands without
-    * sizes.
+    * Idempotent per `appendId` and atomic to readers — the
+    * [[DurableIndex.append]] contract: an out-of-band
+    * [[loadMinhashIndex]] at ANY instant (including after a crash
+    * between table writes) sees either the whole increment or none of
+    * it, never bands without sizes.
     */
   def appendToMinhashIndex(
       path: String,
@@ -1047,106 +990,35 @@ object Dedup {
       idCol: String,
       textCol: String,
       appendId: String,
-      txn: Option[(String, Long)] = None): Unit = {
-    val spark = batch.sparkSession
-    import spark.implicits._
-    requireAppendId(appendId)
-    // the (app, seq) high-water catches replays even after the folded-id
-    // record was pruned past the retention horizon (DurableIndex.hasTxn)
-    if (DurableIndex.isCommitted(path, appendId) ||
-        txn.exists { case (a, s) => DurableIndex.hasTxn(path, a, s) }) return
-    // pre-flight the manifest invariant BEFORE any table write: appending
-    // to a torn or pre-manifest index must fail loudly up front, not
-    // fabricate a manifest that hides (then sweeps) legacy partitions
-    DurableIndex.requireCommitted(path)
-    val (numBands, rowsPerBand, shingleLen) = loadIndexMeta(path)
-    val bEx = shingleHashRelation(batch, idCol, "corpus_id", textCol,
-      shingleLen).persist()
-    val bBand = bandRelation(bEx, "corpus_id", numBands, rowsPerBand).persist()
-    // unpersist in finally: the caches are transient write-side state,
-    // and a failed write (the appender retries — that is the overwrite
-    // partition's whole point) must not strand them
-    try {
-      bEx.write.mode("overwrite").parquet(s"$path/shingles/append=$appendId")
-      DurableIndex.seam("minhash:shingles-written")
-      bBand.write.mode("overwrite").parquet(s"$path/bands/append=$appendId")
-      DurableIndex.seam("minhash:bands-written")
-      bEx.groupBy($"corpus_id").agg(count(lit(1)).as("nc"))
-        .write.mode("overwrite").parquet(s"$path/sizes/append=$appendId")
-      DurableIndex.seam("minhash:sizes-written")
-      bBand.groupBy($"band", $"bucket").agg(count(lit(1)).as("partial"))
-        .write.mode("overwrite")
-        .parquet(s"$path/bucket_counts/append=$appendId")
-    } finally {
-      bEx.unpersist(blocking = false)
-      bBand.unpersist(blocking = false)
+      txn: Option[(String, Long)] = None): Unit =
+    DurableIndex.append(path, minhashStore, appendId, txn) { m =>
+      val bEx = shingleHashRelation(batch, idCol, "corpus_id", textCol,
+        m("shingleLen").toInt).persist()
+      val bBand = bandRelation(bEx, "corpus_id", m("numBands").toInt,
+        m("rowsPerBand").toInt).persist()
+      (Seq(bEx, bBand,
+        bEx.groupBy(col("corpus_id")).agg(count(lit(1)).as("nc")),
+        bBand.groupBy(col("band"), col("bucket"))
+          .agg(count(lit(1)).as("partial"))),
+        Seq(bEx, bBand))
     }
-    DurableIndex.commitAppend(path, appendId, txn)
-  }
 
-  private[operators] def requireAppendId(appendId: String): Unit =
-    require(appendId.nonEmpty && appendId != "base" &&
-      appendId.forall(c => c.isLetterOrDigit || c == '-' || c == '_'),
-      s"appendId must be a filesystem-safe token, got '$appendId'")
-
-  private val minhashTables =
-    Seq("shingles", "bands", "sizes", "bucket_counts")
-
-  /** Compact a durable minhash index: fold the committed append HISTORY
-    * into one fresh `base-<runId>` partition per table, so a perpetual
-    * incremental stream keeps O(1) partitions (and manifest entries)
-    * instead of one per micro-batch — the lake-compaction discipline
-    * applied to the index. Returns the number of appends folded (0 =
-    * nothing worth folding).
-    *
-    * The NEWEST append is deliberately KEPT unfolded: under the
-    * streaming contract at most the latest batch can be redelivered
-    * after a crash, and its replay must still be able to exclude its own
-    * append when probing ([[loadMinhashIndex]]'s excludeAppends) — an
-    * exclusion that cannot prune rows already merged into a folded base.
-    * Folded ids are recorded in the manifest, so a LATE retry of an
-    * older increment no-ops instead of double-appending rows the base
-    * already holds.
-    *
-    * Crash-safe and reader-safe like every other maintenance pass here:
-    * folded partitions are invisible until [[DurableIndex.commitFold]]
-    * atomically republishes the manifest (a crash leaves orphans no
-    * reader lists); superseded partitions stay on disk for
-    * `tombstoneRetentionMs` (readers that pinned the pre-fold manifest
-    * keep scanning intact files) and are deleted by a LATER compaction's
-    * sweep. Single maintenance caller: run from the owning writer,
-    * quiescent between appends — commitFold fails loudly if the manifest
-    * moved mid-fold.
+  /** Compact a durable minhash index — the [[DurableIndex.compact]] fold:
+    * history folds into one fresh base per table, the newest append
+    * stays unfolded for streaming replay exclusion, folded ids are
+    * recorded so late retries no-op, superseded partitions outlive the
+    * fold by `tombstoneRetentionMs` for pinned readers.
     */
   def compactMinhashIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, tombstoneRetentionMs: Long = 10L * 60L * 1000L): Int = {
-    import spark.implicits._
-    val appends = DurableIndex.visible(path, Nil)
-    DurableIndex.sweepUnreferenced(path, minhashTables, tombstoneRetentionMs)
-    // the sweep deletes files with raw IO, which Spark's session-level
-    // file-status and cached-plan caches cannot see — drop them, or a
-    // later same-session read can plan against a stale listing and hit
-    // FAILED_READ on the swept files
-    spark.catalog.refreshByPath(path)
-    if (appends.size <= 2) return 0 // base (+ newest): nothing to fold
-    val kept = Seq(appends.last)
-    val toFold = appends.dropRight(1)
-    val newId = s"base-${java.util.UUID.randomUUID().toString.take(8)}"
-    def part(sub: String): DataFrame =
-      spark.read.parquet(s"$path/$sub").filter($"append".isin(toFold: _*))
-    part("shingles").select($"corpus_id", $"h")
-      .write.mode("overwrite").parquet(s"$path/shingles/append=$newId")
-    part("bands").select($"corpus_id", $"band", $"bucket")
-      .write.mode("overwrite").parquet(s"$path/bands/append=$newId")
-    part("sizes").select($"corpus_id", $"nc")
-      .write.mode("overwrite").parquet(s"$path/sizes/append=$newId")
-    part("bucket_counts")
-      .groupBy($"band", $"bucket").agg(sum($"partial").as("partial"))
-      .write.mode("overwrite").parquet(s"$path/bucket_counts/append=$newId")
-    DurableIndex.seam("minhash:fold-written")
-    DurableIndex.commitFold(path, appends, newId, kept, minhashTables)
-    toFold.size
-  }
+      path: String,
+      tombstoneRetentionMs: Long = DurableIndex.DefaultRetentionMs): Int =
+    DurableIndex.compact(spark, path, minhashStore, tombstoneRetentionMs)
+
+  /** The durable pair table: one relation at the root, created by its
+    * first append.
+    */
+  private val pairStore =
+    DurableIndex.Store("pairs", Seq(""), createByAppend = true)
 
   /** Persist a verified near-dup PAIR SET as a durable parquet table —
     * the cluster pipeline's second piece of standing state (the first is
@@ -1157,51 +1029,26 @@ object Dedup {
     * table works for (a_id, b_id, jaccard) text pairs and
     * (a_id, b_id, cosine) embedding pairs.
     */
-  def savePairs(pairs: DataFrame, path: String): Unit = {
-    pairs.write.mode("overwrite").parquet(s"$path/append=base")
-    DurableIndex.initManifest(path)
-  }
+  def savePairs(pairs: DataFrame, path: String): Unit =
+    DurableIndex.save(path, pairStore, Seq(pairs))
 
   /** Append an increment's pairs (batch-vs-corpus + within-batch) under
     * an `append=<id>` partition — same manifest-committed idempotent
     * contract as [[appendToMinhashIndex]] (one table here, so the
     * manifest additionally shields readers from a partially
-    * job-committed parquet write).
+    * job-committed parquet write). The streaming loop's first batch
+    * creates the table; there is no savePairs bootstrap step.
     */
   def appendPairs(path: String, pairs: DataFrame, appendId: String,
-      txn: Option[(String, Long)] = None): Unit = {
-    requireAppendId(appendId)
-    if (DurableIndex.isCommitted(path, appendId) ||
-        txn.exists { case (a, s) => DurableIndex.hasTxn(path, a, s) }) return
-    // pre-flight BEFORE writing, as in the index appends — but the pair
-    // table supports create-by-append (the streaming loop's first batch
-    // creates it; there is no savePairs bootstrap step), so a truly
-    // empty root initializes an empty manifest instead of failing
-    DurableIndex.requireCommittedOrInit(path, Seq(""))
-    pairs.write.mode("overwrite").parquet(s"$path/append=$appendId")
-    DurableIndex.commitAppend(path, appendId, txn)
-  }
+      txn: Option[(String, Long)] = None): Unit =
+    DurableIndex.append(path, pairStore, appendId, txn)(_ => (Seq(pairs), Nil))
 
   /** Compact the durable pair table — [[compactMinhashIndex]]'s contract
-    * (fold history, keep the newest append, manifest-committed,
-    * retention-deferred deletion) applied to its single relation.
+    * applied to its single relation.
     */
   def compactPairs(spark: org.apache.spark.sql.SparkSession, path: String,
-      tombstoneRetentionMs: Long = 10L * 60L * 1000L): Int = {
-    val appends = DurableIndex.visible(path, Nil)
-    DurableIndex.sweepUnreferenced(path, Seq(""), tombstoneRetentionMs)
-    spark.catalog.refreshByPath(path) // see compactMinhashIndex
-    if (appends.size <= 2) return 0
-    val kept = Seq(appends.last)
-    val toFold = appends.dropRight(1)
-    val newId = s"base-${java.util.UUID.randomUUID().toString.take(8)}"
-    spark.read.parquet(path)
-      .filter(col("append").isin(toFold: _*)).drop("append")
-      .write.mode("overwrite").parquet(s"$path/append=$newId")
-    DurableIndex.seam("pairs:fold-written")
-    DurableIndex.commitFold(path, appends, newId, kept, Seq(""))
-    toFold.size
-  }
+      tombstoneRetentionMs: Long = DurableIndex.DefaultRetentionMs): Int =
+    DurableIndex.compact(spark, path, pairStore, tombstoneRetentionMs)
 
   /** Load the durable pair table: the manifest-committed appends minus
     * `excludeAppends` (replay safety, as in [[loadMinhashIndex]]).
@@ -1209,24 +1056,8 @@ object Dedup {
   def loadPairs(
       spark: org.apache.spark.sql.SparkSession, path: String,
       excludeAppends: Seq[String] = Nil,
-      pinId: Option[String] = None): DataFrame = {
-    val vis = pinId
-      .map(DurableIndex.pinnedVisible(path, _, excludeAppends))
-      .getOrElse(DurableIndex.visible(path, excludeAppends))
-    spark.read.parquet(path)
-      .filter(col("append").isin(vis: _*))
-      .drop("append")
-  }
-
-  private def loadIndexMeta(path: String): (Int, Int, Int) = {
-    val meta = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path, "index_meta.json")),
-      java.nio.charset.StandardCharsets.UTF_8)
-    def metaInt(key: String): Int =
-      s""""$key":(\\d+)""".r.findFirstMatchIn(meta)
-        .getOrElse(sys.error(s"index_meta.json missing $key")).group(1).toInt
-    (metaInt("numBands"), metaInt("rowsPerBand"), metaInt("shingleLen"))
-  }
+      pinId: Option[String] = None): DataFrame =
+    DurableIndex.load(spark, path, pairStore, excludeAppends, pinId)._2.head
 
   /** Probe a standing [[MinhashIndex]] with a new batch — the steady-state
     * increment cost: shingle + sign + band the BATCH, bucket-join its
@@ -1378,8 +1209,8 @@ object Dedup {
     * in MapReduce and Beyond", SoCC 2014), which converges in
     * O(log² n) rounds regardless of component DIAMETER — a chain of
     * length d collapses in ~log d alternations where min-label
-    * propagation ([[connectedComponentsLabelProp]]) needs d rounds, each
-    * a full shuffle over the edge set. Near-dup graphs are usually
+    * propagation (the specs' reference implementation) needs d rounds,
+    * each a full shuffle over the edge set. Near-dup graphs are usually
     * shallow, but one boilerplate chain is all it takes to stall the
     * propagation form at scale.
     *
@@ -1641,83 +1472,12 @@ object Dedup {
     }
   }
 
-  /** Min-label propagation CC — the simple O(diameter)-round variant,
-    * kept as the reference implementation ([[connectedComponents]] is
-    * spec-asserted equal to it): every node starts labeled with its own
-    * id; each round takes the min of its own and its neighbors' labels.
-    * Each round is one shuffle (join) + one aggregation, and labels are
-    * `localCheckpoint`ed to truncate the exponentially-growing iterative
-    * lineage — the standard guard for loop-shaped DataFrame algorithms.
-    *
-    * @param pairs (srcCol, dstCol) undirected edges
-    * @return (id, component) — component = min node id reachable
-    */
-  def connectedComponentsLabelProp(
-      pairs: DataFrame,
-      srcCol: String = "a_id",
-      dstCol: String = "b_id",
-      maxIter: Int = 50): DataFrame =
-    connectedComponentsLabelPropWithRounds(pairs, srcCol, dstCol, maxIter)._1
-
-  private[graft] def connectedComponentsLabelPropWithRounds(
-      pairs: DataFrame,
-      srcCol: String = "a_id",
-      dstCol: String = "b_id",
-      maxIter: Int = 50): (DataFrame, Int) = {
-    val spark = pairs.sparkSession
-    import spark.implicits._
-    val edges = pairs.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .union(pairs.select(col(dstCol).as("src"), col(srcCol).as("dst")))
-      .distinct().persist()
-    var labels = edges.select($"src".as("id")).distinct()
-      .select($"id", $"id".as("component")).localCheckpoint()
-    // Convergence via the label-sum invariant: min-propagation only ever
-    // DECREASES a label, so "some label changed" ⇔ "the sum strictly
-    // dropped" — one narrow aggregate over the already-checkpointed
-    // frame, replacing the prior per-round join-with-previous (a whole
-    // extra shuffle). Decimal sum: immune to long overflow at any
-    // (id magnitude × node count).
-    // coalesce: sum() over an EMPTY labels frame is null — an empty pair
-    // set (no duplicates found) must converge cleanly, not NPE
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      df.select(coalesce(sum($"component".cast("decimal(38,0)")),
-          lit(0).cast("decimal(38,0)"))).head()
-        .getDecimal(0)
-    var prevSum = labelSum(labels)
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      val viaNeighbor = edges
-        .join(labels, $"src" === $"id")
-        .select($"dst".as("id"), $"component")
-      val next = labels.union(viaNeighbor)
-        .groupBy($"id").agg(min($"component").as("component"))
-        .localCheckpoint()
-      val nextSum = labelSum(next)
-      converged = nextSum.compareTo(prevSum) == 0
-      prevSum = nextSum
-      // the previous round's checkpoint has had its last read — release
-      // its blocks now, or executor storage grows O(iterations × |nodes|)
-      freeLocalCheckpoint(labels)
-      labels = next
-      iter += 1
-    }
-    edges.unpersist()
-    // a silent non-converged return would report one real component as
-    // several clusters — fail loudly instead (diameter > maxIter means
-    // the caller's graph is not near-dup-shaped; raise maxIter)
-    if (!converged) sys.error(
-      s"connectedComponents did not converge in $maxIter rounds " +
-        "(component diameter exceeds maxIter)")
-    (labels, iter)
-  }
-
   /** Release the cached blocks behind a `localCheckpoint`ed DataFrame.
     * `df.unpersist` only consults the CacheManager, which never saw a
     * checkpoint's RDD — the blocks live on the RDD itself, reachable
     * through the plan's LogicalRDD leaf.
     */
-  private def freeLocalCheckpoint(df: DataFrame): Unit =
+  private[graft] def freeLocalCheckpoint(df: DataFrame): Unit =
     df.queryExecution.analyzed.collectLeaves().foreach {
       case l: org.apache.spark.sql.execution.LogicalRDD =>
         l.rdd.unpersist(blocking = false)
@@ -1813,14 +1573,9 @@ object Dedup {
     // expand map-side through codegen'd Generates. No persists: each
     // relation has exactly one consumer.
     val fp = winnowFingerprintsRaw(df, idCol, textCol, n, w)
-    val posting = fp.groupBy($"fp").agg(collect_set($"id").as("ids"))
-      .filter(size($"ids") > 1 &&
-        (if (maxDf > 0) size($"ids") <= maxDf else lit(true)))
-    posting
-      .select($"ids", posexplode($"ids").as(Seq("i", "x")))
-      .select($"x", explode(slice($"ids", $"i" + lit(2), size($"ids"))).as("y"))
-      .select(least($"x", $"y").as("a_id"), greatest($"x", $"y").as("b_id"))
-      .groupBy($"a_id", $"b_id")
+    postingPairs(fp.groupBy($"fp").agg(collect_set($"id").as("ids")),
+        "ids", maxDf)
+      .groupBy($"a".as("a_id"), $"b".as("b_id"))
       .agg(count(lit(1)).as("shared_fps"))
       .filter($"shared_fps" >= minShared)
   }
@@ -1855,21 +1610,15 @@ object Dedup {
           j => call_function("shiftright", $"sig", j * 16)
             .bitwiseAND(lit(0xFFFFL))))
           .as(Seq("chunk", "chunkval")))
-    val posting = chunks.groupBy($"chunk", $"chunkval")
-      .agg(collect_list(struct($"id", $"sig")).as("ps"))
-      .filter(size($"ps") > 1 &&
-        (if (maxBucketSize > 0) size($"ps") <= maxBucketSize else lit(true)))
     // Cross-chunk dedup as one hash aggregate (the minhashPairs pattern):
     // a pair sharing k of the 4 chunks reaches the aggregate k times but
     // is bit-counted ONCE, after dedup — not per duplicate expanded row
     // (min = the one value; a doc's sig is constant).
-    posting
-      .select($"ps", posexplode($"ps").as(Seq("i", "x")))
-      .select($"x", explode(slice($"ps", $"i" + lit(2), size($"ps"))).as("y"))
-      .select(when($"x.id" < $"y.id", struct($"x".as("a"), $"y".as("b")))
-        .otherwise(struct($"y".as("a"), $"x".as("b"))).as("p"))
-      .groupBy($"p.a.id".as("a_id"), $"p.b.id".as("b_id"))
-      .agg(min($"p.a.sig").as("a_sig"), min($"p.b.sig").as("b_sig"))
+    postingPairs(chunks.groupBy($"chunk", $"chunkval")
+        .agg(collect_list(struct($"id", $"sig")).as("ps")),
+        "ps", maxBucketSize, key = "id")
+      .groupBy($"a.id".as("a_id"), $"b.id".as("b_id"))
+      .agg(min($"a.sig").as("a_sig"), min($"b.sig").as("b_sig"))
       .select($"a_id", $"b_id",
         bit_count($"a_sig".bitwiseXOR($"b_sig")).as("hamming"))
       .filter($"hamming" <= maxHamming)

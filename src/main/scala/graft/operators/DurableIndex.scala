@@ -5,7 +5,11 @@ import java.nio.channels.FileChannel
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, sum}
 
 /** Manifest commit protocol for the durable on-disk indexes (the minhash
   * index's four parquet tables, the LSH index's three, the pair table's
@@ -60,8 +64,210 @@ import com.fasterxml.jackson.databind.ObjectMapper
   * The underscore-prefixed manifest, pins, and markers and the
   * dot-prefixed staging temps are all invisible to Spark's file listing,
   * so they coexist with the parquet partitions at the same root.
+  *
+  * The three stores built on this protocol (the minhash index, the LSH
+  * index, the pair table) differ only in their [[Store]] description;
+  * [[save]], [[load]], [[append]] and [[compact]] are written once here.
   */
 object DurableIndex {
+
+  /** One durable store's shape — all the shared save / load / append /
+    * compact paths need to know about it:
+    *   - `seams`: the crash-seam prefix (`<seams>:<table>-written`
+    *     between table writes, `<seams>:fold-written` before a fold
+    *     commits);
+    *   - `tables`: the relations' subdirectories in write order (`""`
+    *     is a single relation at the root);
+    *   - `counts`: the table holding per-append PARTIAL counts and the
+    *     keys it re-aggregates on — an aggregated file could not be
+    *     appended to, so loads and folds sum the partials (a relation of
+    *     at most one row per (append, key));
+    *   - `meta`: the geometry keys recorded in `index_meta.json`, so an
+    *     appender re-derives the saved geometry exactly;
+    *   - `createByAppend`: the first append may create the store (the
+    *     streaming pair table has no initial save).
+    */
+  private[operators] final case class Store(
+      seams: String,
+      tables: Seq[String],
+      counts: Option[(String, Seq[String])] = None,
+      meta: Seq[String] = Nil,
+      createByAppend: Boolean = false) {
+
+    /** The count table summed over its appends into column `as`; every
+      * other table passes through.
+      */
+    private[DurableIndex] def summed(table: String, df: DataFrame,
+        as: String): DataFrame = counts match {
+      case Some((`table`, keys)) =>
+        df.groupBy(keys.map(col): _*).agg(sum(col("partial")).as(as))
+      case _ => df
+    }
+  }
+
+  /** Default retention of superseded partitions after a fold. */
+  val DefaultRetentionMs: Long = 10L * 60L * 1000L
+
+  private def tableDir(path: String, table: String): String =
+    if (table.isEmpty) path else s"$path/$table"
+
+  /** The entries of `dir` that `keep` admits, the listing stream closed. */
+  private def listed(dir: Path)(keep: Path => Boolean): List[Path] = {
+    val s = Files.list(dir)
+    try s.iterator().asScala.filter(keep).toList finally s.close()
+  }
+
+  private def writePart(df: DataFrame, path: String, table: String,
+      id: String): Unit =
+    df.write.mode("overwrite").parquet(s"${tableDir(path, table)}/append=$id")
+
+  /** The `append=<id>` partition column is a durability artifact, not
+    * part of the relation — it only SELECTS the wanted appends (partition
+    * pruning: unlisted appends' files are never read), then goes.
+    */
+  private def readParts(spark: SparkSession, path: String, table: String,
+      ids: Seq[String]): DataFrame =
+    spark.read.parquet(tableDir(path, table))
+      .filter(col("append").isin(ids: _*)).drop("append")
+
+  private def metaPath(path: String) = Paths.get(path, "index_meta.json")
+
+  private def readMeta(path: String, store: Store): Map[String, Long] =
+    if (store.meta.isEmpty) Map.empty
+    else {
+      val node = mapper.readTree(Files.readAllBytes(metaPath(path)))
+      store.meta.map(k => k -> Option(node.get(k)).filter(_.isIntegralNumber)
+        .getOrElse(sys.error(s"index_meta.json missing $k")).asLong()).toMap
+    }
+
+  private[operators] def requireAppendId(appendId: String): Unit =
+    require(appendId.nonEmpty && appendId != "base" &&
+      appendId.forall(c => c.isLetterOrDigit || c == '-' || c == '_'),
+      s"appendId must be a filesystem-safe token, got '$appendId'")
+
+  /** Initial save: every table's `append=base` partition (the count
+    * table's in-memory `population` column stored as its `partial`),
+    * then the meta file, and the manifest LAST — a crash anywhere before
+    * it leaves a manifest-less (hence unloadable) store, never a
+    * torn-but-readable one.
+    */
+  private[operators] def save(path: String, store: Store,
+      relations: Seq[DataFrame], meta: Seq[Long] = Nil): Unit = {
+    store.tables.zip(relations).foreach { case (t, df) =>
+      writePart(if (store.counts.exists(_._1 == t))
+        df.withColumnRenamed("population", "partial") else df, path, t, "base")
+    }
+    if (store.meta.nonEmpty) {
+      val node = mapper.createObjectNode()
+      store.meta.zip(meta).foreach { case (k, v) => node.put(k, v) }
+      Files.write(metaPath(path),
+        mapper.writeValueAsString(node).getBytes(StandardCharsets.UTF_8))
+    }
+    initManifest(path)
+  }
+
+  /** Load a store's relations (in `tables` order, the count table summed
+    * to `population`) and its meta. Visibility resolves from the
+    * manifest: only committed appends minus `excludeAppends` (the
+    * replay-safety primitive — a replaying increment must probe the
+    * pre-increment corpus) are read, so a load concurrent with (or after
+    * a crash of) an in-flight append sees the WHOLE prior store and none
+    * of the increment. `pinId` (from [[acquirePin]]) resolves visibility
+    * from that pin's snapshot instead, and the sweep holds the
+    * snapshot's partitions for the pin's lease.
+    */
+  private[operators] def load(spark: SparkSession, path: String,
+      store: Store, excludeAppends: Seq[String],
+      pinId: Option[String]): (Map[String, Long], Seq[DataFrame]) = {
+    val meta = readMeta(path, store)
+    val vis = pinId.map(pinnedVisible(path, _, excludeAppends))
+      .getOrElse(visible(path, excludeAppends))
+    (meta, store.tables.map(t =>
+      store.summed(t, readParts(spark, path, t, vis), "population")))
+  }
+
+  /** Append one increment under `append=<appendId>`, IDEMPOTENTLY: a
+    * replay whose prior attempt fully committed (or whose declared
+    * (app, seq) the high-water already covers) is a NO-OP — rewriting
+    * intact, manifest-visible partitions would transiently empty them
+    * under a concurrent reader; a replay of a crashed attempt overwrites
+    * partitions no reader could list. `increment` receives the stored
+    * meta and returns the tables in `tables` order plus the write-side
+    * caches it persisted, released once the writes finish or fail (the
+    * appender retries — that is the overwrite partition's whole point —
+    * and must not strand them). The tables write sequentially, but none
+    * is reader-visible until [[commitAppend]] republishes the manifest
+    * as the final step.
+    */
+  private[operators] def append(path: String, store: Store,
+      appendId: String, txn: Option[(String, Long)])(
+      increment: Map[String, Long] => (Seq[DataFrame], Seq[DataFrame]))
+      : Unit = {
+    requireAppendId(appendId)
+    // the (app, seq) high-water catches replays even after the folded-id
+    // record was pruned past the retention horizon (hasTxn)
+    if (isCommitted(path, appendId) ||
+        txn.exists { case (a, s) => hasTxn(path, a, s) }) return
+    // pre-flight the manifest invariant BEFORE any table write: appending
+    // to a torn or pre-manifest store must fail loudly up front, not
+    // fabricate a manifest that hides (then sweeps) legacy partitions —
+    // except that a create-by-append store bootstraps a truly empty root
+    if (store.createByAppend) requireCommittedOrInit(path, store.tables)
+    else requireCommitted(path)
+    val (relations, caches) = increment(readMeta(path, store))
+    try store.tables.zip(relations).zipWithIndex.foreach {
+      case ((t, df), i) =>
+        writePart(df, path, t, appendId)
+        if (i < store.tables.size - 1) seam(s"${store.seams}:$t-written")
+    } finally caches.foreach(_.unpersist(blocking = false))
+    commitAppend(path, appendId, txn)
+  }
+
+  /** Compact a store: fold the committed append HISTORY into one fresh
+    * `base-<runId>` partition per table, so a perpetual incremental
+    * stream keeps O(1) partitions (and manifest entries) instead of one
+    * per micro-batch — the lake-compaction discipline applied to the
+    * index. Returns the number of appends folded (0 = nothing worth
+    * folding).
+    *
+    * The NEWEST append is deliberately KEPT unfolded: under the
+    * streaming contract at most the latest batch can be redelivered
+    * after a crash, and its replay must still be able to exclude its own
+    * append when probing ([[load]]'s excludeAppends) — an exclusion that
+    * cannot prune rows already merged into a folded base. Folded ids are
+    * recorded in the manifest, so a LATE retry of an older increment
+    * no-ops instead of double-appending rows the base already holds.
+    *
+    * Crash-safe and reader-safe: folded partitions are invisible until
+    * [[commitFold]] atomically republishes the manifest (a crash leaves
+    * orphans no reader lists); superseded partitions stay on disk for
+    * `tombstoneRetentionMs` (readers that pinned the pre-fold manifest
+    * keep scanning intact files) and are deleted by a LATER compaction's
+    * sweep. Single maintenance caller: run from the owning writer,
+    * quiescent between appends — commitFold fails loudly if the manifest
+    * moved mid-fold.
+    */
+  private[operators] def compact(spark: SparkSession, path: String,
+      store: Store, tombstoneRetentionMs: Long): Int = {
+    val appends = visible(path, Nil)
+    sweepUnreferenced(path, store.tables, tombstoneRetentionMs)
+    // the sweep deletes files with raw IO, which Spark's session-level
+    // file-status and cached-plan caches cannot see — drop them, or a
+    // later same-session read can plan against a stale listing and hit
+    // FAILED_READ on the swept files
+    spark.catalog.refreshByPath(path)
+    if (appends.size <= 2) return 0 // base (+ newest): nothing to fold
+    val kept = Seq(appends.last)
+    val toFold = appends.dropRight(1)
+    val newId = s"base-${java.util.UUID.randomUUID().toString.take(8)}"
+    store.tables.foreach { t =>
+      writePart(store.summed(t, readParts(spark, path, t, toFold),
+        "partial"), path, t, newId)
+    }
+    seam(s"${store.seams}:fold-written")
+    commitFold(path, appends, newId, kept, store.tables)
+    toFold.size
+  }
 
   /** Crash-seam hook for the append-protocol specs (the
     * [[graft.sources.TxnLog.crashSeam]] pattern): a spec installs a
@@ -123,39 +329,23 @@ object DurableIndex {
     * derive appends/folded/txns from a SINGLE node — three separate
     * re-reads per commit would be redundant I/O at streaming cadence.
     */
-  private def manifestNode(path: String)
-      : Option[com.fasterxml.jackson.databind.JsonNode] = {
+  private def manifestNode(path: String): Option[JsonNode] = {
     val p = manifestPath(path)
     if (!Files.exists(p)) None
     else Some(mapper.readTree(Files.readAllBytes(p)))
   }
 
-  private def appendsOf(
-      node: com.fasterxml.jackson.databind.JsonNode): Seq[String] = {
-    import scala.jdk.CollectionConverters._
-    node.get("appends").elements().asScala.map(_.asText()).toSeq
-  }
+  /** A string-array field of a manifest or pin node (empty if absent). */
+  private def texts(node: JsonNode, field: String): List[String] =
+    Option(node.get(field)).toList.flatMap(_.elements().asScala.map(_.asText()))
 
-  private def foldedOf(
-      node: com.fasterxml.jackson.databind.JsonNode): Seq[String] = {
-    val f = node.get("folded")
-    if (f == null) Nil
-    else {
-      import scala.jdk.CollectionConverters._
-      f.elements().asScala.map(_.asText()).toSeq
-    }
-  }
+  private def appendsOf(node: JsonNode): Seq[String] = texts(node, "appends")
 
-  private def txnsOf(
-      node: com.fasterxml.jackson.databind.JsonNode): Map[String, Long] = {
-    val t = node.get("txns")
-    if (t == null) Map.empty
-    else {
-      import scala.jdk.CollectionConverters._
-      t.properties().asScala
-        .map(e => e.getKey -> e.getValue.asLong()).toMap
-    }
-  }
+  private def foldedOf(node: JsonNode): Seq[String] = texts(node, "folded")
+
+  private def txnsOf(node: JsonNode): Map[String, Long] =
+    Option(node.get("txns")).fold(Map.empty[String, Long])(
+      _.properties().asScala.map(e => e.getKey -> e.getValue.asLong()).toMap)
 
   /** The committed append set, or None when no manifest exists (initial
     * save incomplete, or a pre-manifest directory). Order is commit
@@ -272,15 +462,10 @@ object DurableIndex {
   def requireCommittedOrInit(path: String,
       tableDirs: Seq[String]): Seq[String] =
     committed(path).getOrElse {
-      import scala.jdk.CollectionConverters._
       val hasPartitions = tableDirs.exists { sub =>
-        val root = if (sub.isEmpty) Paths.get(path) else Paths.get(path, sub)
-        Files.isDirectory(root) && {
-          val s = Files.list(root)
-          try s.iterator().asScala
-            .exists(_.getFileName.toString.startsWith("append="))
-          finally s.close()
-        }
+        val root = Paths.get(tableDir(path, sub))
+        Files.isDirectory(root) &&
+          listed(root)(_.getFileName.toString.startsWith("append=")).nonEmpty
       }
       if (hasPartitions) requireCommitted(path) // loud: torn/legacy
       else {
@@ -346,10 +531,8 @@ object DurableIndex {
       s"index at $path changed during compaction (manifest $now vs entry " +
         s"$entryAppends) — compaction must run from the single writer, " +
         "quiescent between appends")
-    def partDirs(id: String): Seq[Path] = tableDirs.map { sub =>
-      if (sub.isEmpty) Paths.get(path, s"append=$id")
-      else Paths.get(path, sub, s"append=$id")
-    }
+    def partDirs(id: String): Seq[Path] =
+      tableDirs.map(sub => Paths.get(tableDir(path, sub), s"append=$id"))
     val superseded = entryAppends.filterNot(kept.contains)
     superseded.foreach { id =>
       partDirs(id).filter(Files.isDirectory(_)).foreach { d =>
@@ -448,24 +631,18 @@ object DurableIndex {
     if (mtimeMs + lease < System.currentTimeMillis())
       sys.error(s"pin $pinId at $path has expired (lease ${lease}ms) — " +
         "its partitions may already be swept; re-acquire and re-load")
-    import scala.jdk.CollectionConverters._
-    node.get("ids").elements().asScala.map(_.asText()).toSeq
-      .filterNot(excludeAppends.contains)
+    texts(node, "ids").filterNot(excludeAppends.contains)
   }
 
   /** Ids referenced by live (unexpired) pins; expired pin files are
     * deleted on the way.
     */
   private def pinnedIds(path: String): Set[String] = {
-    import scala.jdk.CollectionConverters._
     val nowMs = System.currentTimeMillis()
-    val s = Files.list(Paths.get(path))
-    val pins =
-      try s.iterator().asScala.filter { p =>
-        val n = p.getFileName.toString
-        n.startsWith("_pin-") && n.endsWith(".json")
-      }.toList
-      finally s.close()
+    val pins = listed(Paths.get(path)) { p =>
+      val n = p.getFileName.toString
+      n.startsWith("_pin-") && n.endsWith(".json")
+    }
     pins.flatMap { p =>
       // a pin vanishing between the listing and the read is a reader's
       // concurrent releasePin — the designed usage — and holds nothing;
@@ -483,7 +660,7 @@ object DurableIndex {
           if (Files.getLastModifiedTime(p).toMillis +
               node.get("leaseMs").asLong() < nowMs) {
             Files.deleteIfExists(p); Nil
-          } else node.get("ids").elements().asScala.map(_.asText()).toList
+          } else texts(node, "ids")
         } catch {
           case _: com.fasterxml.jackson.core.JacksonException => Nil
           case _: NullPointerException => Nil // missing fields: not a pin
@@ -510,27 +687,22 @@ object DurableIndex {
     if (liveOpt.isEmpty) return // no manifest: nothing is safely sweepable
     val live = liveOpt.get.toSet ++ pinnedIds(path)
     val cutoff = System.currentTimeMillis() - math.max(0L, retentionMs)
-    import scala.jdk.CollectionConverters._
     // supersession-time aging: a partition a committed fold tombstoned
     // ages from the marker's mtime; an unmarked unreferenced partition
     // (orphan of a crashed append/fold — never reader-visible) from its
     // own write time
-    def old(p: java.nio.file.Path): Boolean = {
+    def old(p: Path): Boolean = {
       val marker = p.resolve(SupersededMarker)
       val clock = if (Files.exists(marker)) marker else p
       Files.getLastModifiedTime(clock).toMillis <= cutoff
     }
-    tableDirs.foreach { sub =>
-      val root = if (sub.isEmpty) Paths.get(path) else Paths.get(path, sub)
-      if (Files.isDirectory(root)) {
-        val s = Files.list(root)
-        val doomed =
-          try s.iterator().asScala.filter { p =>
-            val n = p.getFileName.toString
-            Files.isDirectory(p) && n.startsWith("append=") &&
-              !live.contains(n.stripPrefix("append=")) && old(p)
-          }.toList
-          finally s.close()
+    tableDirs.map(sub => Paths.get(tableDir(path, sub)))
+      .filter(Files.isDirectory(_)).foreach { root =>
+        val doomed = listed(root) { p =>
+          val n = p.getFileName.toString
+          Files.isDirectory(p) && n.startsWith("append=") &&
+            !live.contains(n.stripPrefix("append=")) && old(p)
+        }
         doomed.foreach { d =>
           val w = Files.walk(d)
           try w.sorted(java.util.Comparator.reverseOrder())
@@ -538,16 +710,10 @@ object DurableIndex {
           finally w.close()
         }
       }
-    }
-    val s = Files.list(Paths.get(path))
-    try s.iterator().asScala
-      .filter { p =>
-        val n = p.getFileName.toString
-        (n.startsWith(".manifest") || n.startsWith(".pin")) &&
-          n.endsWith(".tmp") &&
-          Files.getLastModifiedTime(p).toMillis <= cutoff
-      }
-      .toList.foreach(Files.deleteIfExists(_))
-    finally s.close()
+    listed(Paths.get(path)) { p =>
+      val n = p.getFileName.toString
+      (n.startsWith(".manifest") || n.startsWith(".pin")) &&
+        n.endsWith(".tmp") && Files.getLastModifiedTime(p).toMillis <= cutoff
+    }.foreach(Files.deleteIfExists(_))
   }
 }

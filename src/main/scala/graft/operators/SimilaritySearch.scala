@@ -367,12 +367,8 @@ object SimilaritySearch {
       // post-dedup) candidate set back to the vectors — right when the
       // threshold is high enough for the buckets to discriminate, so
       // candidates ≪ n² and the dedup exchange is cheap.
-      val cand = groupedCapped
-        .filter(size($"ids") > 1)
-        .select($"ids", posexplode($"ids").as(Seq("i", "x")))
-        .select($"x", explode(slice($"ids", $"i" + lit(2), size($"ids"))).as("y"))
-        .select(least($"x", $"y").as("a_id"), greatest($"x", $"y").as("b_id"))
-        .groupBy($"a_id", $"b_id").agg(lit(1))
+      val cand = Dedup.postingPairs(grouped, "ids", maxBucketSize)
+        .groupBy($"a".as("a_id"), $"b".as("b_id")).agg(lit(1))
         .select($"a_id", $"b_id")
       cand
         .join(e.select($"id".as("a_id"), $"v".as("a_v"), $"nrm".as("a_n")), "a_id")
@@ -695,31 +691,9 @@ object SimilaritySearch {
       numPlanes: Int,
       numTables: Int,
       dim: Int,
-      seed: Long) {
-    def build(): this.type =
-      // self-release on failure: fluent `lshIndex(...).build()` callers
-      // never receive the reference, so nothing else could unpersist it
-      BroadcastGate.releasingOnFailure(Seq(vectors, buckets, bucketCounts)) {
-        vectors.count(); buckets.count(); bucketCounts.count(); this
-      }
-    def unpersist(): Unit = {
-      vectors.unpersist(blocking = false)
-      buckets.unpersist(blocking = false)
-      bucketCounts.unpersist(blocking = false)
-    }
-    /** Self-heal the caches (the [[IvfPqIndex.ensureCached]] pattern): a
-      * bench teardown or external clearCache that dropped the blocks also
-      * dropped the persist REGISTRATIONS, after which every probe
-      * recomputes the corpus relations once per consumer — re-mark them
-      * so the next action rebuilds the cache instead.
-      */
-    def ensureCached(): this.type = {
-      Seq(vectors, buckets, bucketCounts).foreach { df =>
-        if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-          df.persist()
-      }
-      this
-    }
+      seed: Long) extends CachedRelations {
+    protected def relations: Seq[DataFrame] =
+      Seq(vectors, buckets, bucketCounts)
     /** Corpus row count, computed once per index instance — a standing
       * index's corpus is immutable by construction (appends build a NEW
       * index object), so repeated probes must not each pay a count job
@@ -992,6 +966,14 @@ object SimilaritySearch {
     }
   }
 
+  /** The durable LSH index's shape ([[DurableIndex.Store]]): three
+    * tables, bucket populations stored as per-append partial counts.
+    */
+  private val lshStore = DurableIndex.Store("lsh",
+    Seq("vectors", "buckets", "bucket_counts"),
+    counts = Some("bucket_counts" -> Seq("tbl", "bucket")),
+    meta = Seq("numPlanes", "numTables", "dim", "seed"))
+
   /** Persist an [[LshIndex]] as parquet tables — same durability contract
     * as [[graft.operators.Dedup.saveMinhashIndex]]: appends are
     * per-increment OVERWRITE partitions (`append=<id>`), so replaying an
@@ -999,65 +981,29 @@ object SimilaritySearch {
     * pure functions recorded in the meta file, so an appender re-derives
     * identical bucket geometry.
     */
-  def saveLshIndex(index: LshIndex, path: String): Unit = {
-    index.vectors.write.mode("overwrite").parquet(s"$path/vectors/append=base")
-    index.buckets.write.mode("overwrite").parquet(s"$path/buckets/append=base")
-    index.bucketCounts
-      .select(col("tbl"), col("bucket"), col("population").as("partial"))
-      .write.mode("overwrite").parquet(s"$path/bucket_counts/append=base")
-    val meta = s"""{"numPlanes":${index.numPlanes},""" +
-      s""""numTables":${index.numTables},"dim":${index.dim},""" +
-      s""""seed":${index.seed}}"""
-    java.nio.file.Files.write(java.nio.file.Paths.get(path, "index_meta.json"),
-      meta.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    // manifest publishes LAST — a torn initial save stays unloadable
-    DurableIndex.initManifest(path)
-  }
-
-  private val lshTables = Seq("vectors", "buckets", "bucket_counts")
-
-  private def loadLshMeta(path: String): (Int, Int, Int, Long) = {
-    val meta = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path, "index_meta.json")),
-      java.nio.charset.StandardCharsets.UTF_8)
-    def metaNum(key: String): Long =
-      s""""$key":(-?\\d+)""".r.findFirstMatchIn(meta)
-        .getOrElse(sys.error(s"index_meta.json missing $key")).group(1).toLong
-    (metaNum("numPlanes").toInt, metaNum("numTables").toInt,
-      metaNum("dim").toInt, metaNum("seed"))
-  }
+  def saveLshIndex(index: LshIndex, path: String): Unit =
+    DurableIndex.save(path, lshStore,
+      Seq(index.vectors, index.buckets, index.bucketCounts),
+      Seq(index.numPlanes, index.numTables, index.dim, index.seed))
 
   /** Load a durable [[LshIndex]] written by [[saveLshIndex]] / grown by
-    * [[appendToLshIndex]]. `pinId` (from [[DurableIndex.acquirePin]])
-    * resolves visibility from that pin's snapshot and holds its
-    * partitions against post-retention sweeps — take one when the scan
-    * may outlive `tombstoneRetentionMs` of concurrent maintenance.
+    * [[appendToLshIndex]] — the [[DurableIndex.load]] visibility, as in
+    * [[graft.operators.Dedup.loadMinhashIndex]]: whole increments or
+    * none of them; `pinId` holds a snapshot's partitions against
+    * post-retention sweeps.
     */
   def loadLshIndex(
       spark: org.apache.spark.sql.SparkSession, path: String,
       excludeAppends: Seq[String] = Nil,
       pinId: Option[String] = None): LshIndex = {
-    import spark.implicits._
-    val (numPlanes, numTables, dim, seed) = loadLshMeta(path)
-    // same manifest-resolved visibility as Dedup.loadMinhashIndex: only
-    // committed appends (minus the caller's replay exclusions) are read,
-    // so a load at any instant sees whole increments or none of them
-    val vis = pinId
-      .map(DurableIndex.pinnedVisible(path, _, excludeAppends))
-      .getOrElse(DurableIndex.visible(path, excludeAppends))
-    def part(sub: String): DataFrame =
-      spark.read.parquet(s"$path/$sub").filter($"append".isin(vis: _*))
-    val counts = part("bucket_counts")
-      .groupBy($"tbl", $"bucket").agg(sum($"partial").as("population"))
-    LshIndex(
-      part("vectors").select($"corpus_id", $"v", $"nrm").persist(),
-      part("buckets").select($"corpus_id", $"tbl", $"bucket").persist(),
-      counts.persist(),
-      numPlanes, numTables, dim, seed)
+    val (m, Seq(vectors, buckets, counts)) =
+      DurableIndex.load(spark, path, lshStore, excludeAppends, pinId)
+    LshIndex(vectors.persist(), buckets.persist(), counts.persist(),
+      m("numPlanes").toInt, m("numTables").toInt, m("dim").toInt, m("seed"))
   }
 
   /** Append an ACCEPTED embedding increment to a durable index — same
-    * manifest-committed contract as
+    * [[DurableIndex.append]] contract as
     * [[graft.operators.Dedup.appendToMinhashIndex]]: the three tables
     * write sequentially but become reader-visible only when the final
     * manifest republish lands, so an out-of-band [[loadLshIndex]] at any
@@ -1070,73 +1016,25 @@ object SimilaritySearch {
       idCol: String,
       vecCol: String,
       appendId: String,
-      txn: Option[(String, Long)] = None): Unit = {
-    val spark = batch.sparkSession
-    import spark.implicits._
-    Dedup.requireAppendId(appendId)
-    // the (app, seq) high-water catches replays even after the folded-id
-    // record was pruned past the retention horizon (DurableIndex.hasTxn)
-    if (DurableIndex.isCommitted(path, appendId) ||
-        txn.exists { case (a, s) => DurableIndex.hasTxn(path, a, s) }) return
-    // pre-flight the manifest invariant BEFORE any table write (see
-    // Dedup.appendToMinhashIndex)
-    DurableIndex.requireCommitted(path)
-    val (numPlanes, numTables, dim, seed) = loadLshMeta(path)
-    val e = normedVectors(batch, idCol, vecCol, "corpus_id", "v", "nrm")
-      .persist()
-    val bucketed = hyperplaneBucketRelation(e, "corpus_id", "v",
-      numPlanes, numTables, dim, seed).persist()
-    // unpersist in finally: the caches are transient write-side state,
-    // and a failed write (the appender retries — that is the overwrite
-    // partition's whole point) must not strand them
-    try {
-      e.write.mode("overwrite").parquet(s"$path/vectors/append=$appendId")
-      DurableIndex.seam("lsh:vectors-written")
-      bucketed.write.mode("overwrite")
-        .parquet(s"$path/buckets/append=$appendId")
-      DurableIndex.seam("lsh:buckets-written")
-      bucketed.groupBy($"tbl", $"bucket").agg(count(lit(1)).as("partial"))
-        .write.mode("overwrite")
-        .parquet(s"$path/bucket_counts/append=$appendId")
-    } finally {
-      e.unpersist(blocking = false)
-      bucketed.unpersist(blocking = false)
+      txn: Option[(String, Long)] = None): Unit =
+    DurableIndex.append(path, lshStore, appendId, txn) { m =>
+      val e = normedVectors(batch, idCol, vecCol, "corpus_id", "v", "nrm")
+        .persist()
+      val bucketed = hyperplaneBucketRelation(e, "corpus_id", "v",
+        m("numPlanes").toInt, m("numTables").toInt, m("dim").toInt,
+        m("seed")).persist()
+      (Seq(e, bucketed, bucketed.groupBy(col("tbl"), col("bucket"))
+        .agg(count(lit(1)).as("partial"))), Seq(e, bucketed))
     }
-    DurableIndex.commitAppend(path, appendId, txn)
-  }
 
   /** Compact a durable LSH index — the embedding twin of
-    * [[graft.operators.Dedup.compactMinhashIndex]], same fold contract:
-    * history folds into one fresh base per table, the newest append
-    * stays unfolded for streaming replay exclusion, folded ids are
-    * recorded so late retries no-op, superseded partitions outlive the
-    * fold by `tombstoneRetentionMs` for pinned readers.
+    * [[graft.operators.Dedup.compactMinhashIndex]], same
+    * [[DurableIndex.compact]] fold.
     */
   def compactLshIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, tombstoneRetentionMs: Long = 10L * 60L * 1000L): Int = {
-    import spark.implicits._
-    val appends = DurableIndex.visible(path, Nil)
-    DurableIndex.sweepUnreferenced(path, lshTables, tombstoneRetentionMs)
-    // drop Spark's stale file-status/plan caches over the swept files
-    // (see Dedup.compactMinhashIndex)
-    spark.catalog.refreshByPath(path)
-    if (appends.size <= 2) return 0
-    val kept = Seq(appends.last)
-    val toFold = appends.dropRight(1)
-    val newId = s"base-${java.util.UUID.randomUUID().toString.take(8)}"
-    def part(sub: String): DataFrame =
-      spark.read.parquet(s"$path/$sub").filter($"append".isin(toFold: _*))
-    part("vectors").select($"corpus_id", $"v", $"nrm")
-      .write.mode("overwrite").parquet(s"$path/vectors/append=$newId")
-    part("buckets").select($"corpus_id", $"tbl", $"bucket")
-      .write.mode("overwrite").parquet(s"$path/buckets/append=$newId")
-    part("bucket_counts")
-      .groupBy($"tbl", $"bucket").agg(sum($"partial").as("partial"))
-      .write.mode("overwrite").parquet(s"$path/bucket_counts/append=$newId")
-    DurableIndex.seam("lsh:fold-written")
-    DurableIndex.commitFold(path, appends, newId, kept, lshTables)
-    toFold.size
-  }
+      path: String,
+      tombstoneRetentionMs: Long = DurableIndex.DefaultRetentionMs): Int =
+    DurableIndex.compact(spark, path, lshStore, tombstoneRetentionMs)
 
   /** Probe a standing [[LshIndex]] with a batch of new embeddings — the
     * incremental shape of [[lshPairs]] (semantic dedup of an increment
@@ -1460,21 +1358,10 @@ object SimilaritySearch {
   final case class IvfPqIndex private[operators] (
       encoded: DataFrame, // (id, cell, code) — persisted by [[fitIvfPq]]
       centroids: Array[Array[Double]],
-      codebooks: Array[Array[Array[Double]]]) {
-    /** Release the persisted code relation when done probing. */
-    def unpersist(): Unit = encoded.unpersist(blocking = false)
-
-    /** Self-heal the cache: a long-lived session (or a bench harness's
-      * cold-isolation teardown) may have unpersisted the code relation
-      * out from under a memoized index — re-mark it so the next action
-      * rebuilds the cache instead of recomputing the encode per probe.
-      */
-    def ensureCached(): this.type = {
-      if (encoded.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-        encoded.persist()
-      this
-    }
+      codebooks: Array[Array[Array[Double]]]) extends CachedRelations {
+    protected def relations: Seq[DataFrame] = Seq(encoded)
   }
+
 
   /** Fit coarse centroids + residual codebooks, and encode the corpus.
     * The residual map uses zip_with (interpreted) — acceptable: encoding

@@ -53,6 +53,24 @@ class DurableIndexSpec extends SparkSpec {
     finally idx.unpersist()
   }
 
+  /** Kill `fold` at its `<store>:fold-written` seam — after the folded
+    * base is written, before the manifest commit — and check that the
+    * reader view and the committed list are both unchanged.
+    */
+  private def killedFold[T](at: String, path: String, view: () => T)(
+      fold: => Int): Unit = {
+    val pre = view()
+    val committed = DurableIndex.committed(path).get
+    DurableIndex.crashSeam =
+      n => if (n == at) throw new RuntimeException(s"kill at $n")
+    val e =
+      try intercept[RuntimeException](fold)
+      finally DurableIndex.crashSeam = null
+    assert(e.getMessage.contains(at))
+    assert(view() == pre, s"reader view moved after $at")
+    assert(DurableIndex.committed(path).get == committed, at)
+  }
+
   test("minhash append killed at every seam: out-of-band load sees all of the increment or none") {
     val docs = Tables.load(spark, sfDir, "documents")
     val a = docs.filter($"doc_id" % 4 === 2)
@@ -327,6 +345,9 @@ class DurableIndexSpec extends SparkSpec {
         s"inc$i")
     }
     val pre = lshProbe(path)
+    // a fold killed at its seam changes nothing; the clean fold succeeds
+    killedFold("lsh:fold-written", path, () => lshProbe(path))(
+      SimilaritySearch.compactLshIndex(spark, path))
     assert(SimilaritySearch.compactLshIndex(spark, path) == 3)
     assert(lshProbe(path) == pre)
     assert(DurableIndex.committed(path).get.last == "inc2")
@@ -344,6 +365,8 @@ class DurableIndexSpec extends SparkSpec {
       .as[(Long, Long, Double)].collect().toSet
     val all = pairSet()
     assert(all.size == 3)
+    killedFold("pairs:fold-written", pairs, () => pairSet())(
+      Dedup.compactPairs(spark, pairs))
     assert(Dedup.compactPairs(spark, pairs) == 2)
     assert(pairSet() == all)
     assert(Dedup.compactPairs(spark, pairs, tombstoneRetentionMs = 0L) == 0)

@@ -681,7 +681,7 @@ class OperatorsSpec extends SparkSpec {
     // ADVICE r4: label-prop NPE'd here (sum over an empty frame is null)
     val empty = Seq.empty[(Long, Long)].toDF("a_id", "b_id")
     assert(Dedup.connectedComponents(empty).count() == 0)
-    assert(Dedup.connectedComponentsLabelProp(empty).count() == 0)
+    assert(LabelPropCC.connectedComponentsLabelProp(empty).count() == 0)
   }
 
   test("star CC == label-prop CC on a random graph (hybrid and distributed)") {
@@ -697,7 +697,7 @@ class OperatorsSpec extends SparkSpec {
     // forced distributed star iteration must label identically
     val distributed = Dedup.connectedComponents(df, driverFinishEdges = 0L)
       .as[(Long, Long)].collect().toMap
-    val prop = Dedup.connectedComponentsLabelProp(df)
+    val prop = LabelPropCC.connectedComponentsLabelProp(df)
       .as[(Long, Long)].collect().toMap
     assert(hybrid == prop)
     assert(distributed == prop)
@@ -715,13 +715,40 @@ class OperatorsSpec extends SparkSpec {
     val (starLabels, starRounds) =
       Dedup.connectedComponentsStarWithRounds(chain, driverFinishEdges = 0L)
     val (propLabels, propRounds) =
-      Dedup.connectedComponentsLabelPropWithRounds(chain)
+      LabelPropCC.connectedComponentsLabelPropWithRounds(chain)
     val want = (1L to 24L).map(_ -> 1L).toMap
     assert(starLabels.as[(Long, Long)].collect().toMap == want)
     assert(propLabels.as[(Long, Long)].collect().toMap == want)
     info(s"chain-24 rounds: star=$starRounds labelProp=$propRounds")
     assert(starRounds * 2 <= propRounds,
       s"star=$starRounds not ~half of labelProp=$propRounds")
+  }
+
+  test("sorted intersect count: a null element fails loudly, naming the function, in both eval paths") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types.{ArrayType, StringType}
+    def messages(t: Throwable): Seq[String] =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+        .flatMap(e => Option(e.getMessage)).toSeq
+    val want = "graft_sorted_intersect_count: null array element"
+    // interpreted
+    val arr = ArrayType(StringType)
+    val e1 = intercept[IllegalArgumentException] {
+      graft.functions.SortedIntersectCount(
+        Literal.create(Seq("a", null), arr),
+        Literal.create(Seq("a", "c"), arr)).eval()
+    }
+    assert(e1.getMessage.contains(want))
+    // generated: a per-row (non-foldable) null, so the merge runs in the
+    // whole-stage-codegen projection rather than in constant folding
+    val df = spark.range(1).select(
+      array(lit("a"), when($"id" > 0, lit("b"))).as("x"),
+      array(lit("a"), lit("c")).as("y"))
+    val e2 = intercept[Exception] {
+      df.select(graft.functions.SetOps.sortedIntersectCount(
+        spark, $"x", $"y")).collect()
+    }
+    assert(messages(e2).exists(_.contains(want)), messages(e2))
   }
 
   test("as-of join: out-of-range right keys are dropped, never wrapped") {

@@ -67,6 +67,43 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("posting-list pair expansion: two Generates inside whole-stage codegen, no fallback expression") {
+    // the one expansion every posting-list pair finder shares must stay
+    // the codegen'd posexplode + explode(slice) form: the equivalent
+    // flatten(transform(...)) higher-order form is CodegenFallback and
+    // measured 2-3x slower
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+    import org.apache.spark.sql.execution.{GenerateExec, InputAdapter,
+      SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.functions._
+    val posting = spark.range(60)
+      .select((col("id") % 7).as("k"), col("id"), (col("id") * 3).as("n"))
+      .groupBy(col("k")).agg(collect_list(struct(col("id"), col("n"))).as("ps"))
+    val pairs = graft.operators.Dedup.postingPairs(posting, "ps", key = "id")
+    // 7 lists of 8-9 ids: 4·C(9,2) + 3·C(8,2) = 228 pairs, all a.id < b.id
+    val rows = pairs.collect()
+    assert(rows.length == 228)
+    assert(rows.forall(r =>
+      r.getStruct(0).getLong(0) < r.getStruct(1).getLong(0)))
+    // the executed (final, under AQE) plan; the helper walks query stages
+    object Plans extends AdaptiveSparkPlanHelper
+    val plan = pairs.queryExecution.executedPlan
+    // the nodes one codegen stage fuses: its subtree down to the
+    // InputAdapters that feed it
+    def stage(p: SparkPlan): Seq[SparkPlan] = p +: p.children.flatMap {
+      case _: InputAdapter => Nil
+      case c => stage(c)
+    }
+    val stages =
+      Plans.collect(plan) { case w: WholeStageCodegenExec => stage(w.child) }
+    val generating = stages.filter(_.exists(_.isInstanceOf[GenerateExec]))
+    assert(Plans.collect(plan) { case g: GenerateExec => g }.size == 2, plan)
+    assert(generating.flatten.count(_.isInstanceOf[GenerateExec]) == 2, plan)
+    assert(!generating.flatten.exists(_.expressions.exists(
+      _.find(_.isInstanceOf[CodegenFallback]).isDefined)), plan)
+  }
+
   test("q48: orders aggregate to month counts BELOW the spine join") {
     // VERDICT r5 #8: the month-spine left join must consume the ~80-row
     // per-month aggregate, never the raw fact relation keyed by a
