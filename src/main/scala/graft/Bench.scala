@@ -32,34 +32,6 @@ object Bench {
       .asScala.map(_.getCollectionTime).filter(_ >= 0).sum
   }
 
-  /** Release EVERY persisted block between samples: `clearCache` covers
-    * DataFrames registered with the CacheManager, but `localCheckpoint`
-    * RDDs (connected-components output lineage) are persisted directly
-    * on the SparkContext and survive clearCache — across a 60-query ×
-    * 3-repeat run those blocks accumulate in the storage pool and
-    * pressure GC for whatever runs late in catalog order (the round-4
-    * q46/q47/q48 cold regressions). Runs OUTSIDE the timed window.
-    */
-  private def freeAllBlocks(spark: SparkSession): Unit = {
-    spark.sharedState.cacheManager.clearCache()
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = false))
-    // Force reference processing so ContextCleaner actually CLEANS:
-    // shuffle files, broadcast blocks, and BlockManager metadata are
-    // released via weak references, which fire only when the driver GC
-    // collects the dead ShuffleDependency/Broadcast objects. With an
-    // 8 GB heap and sub-second queries the old gen never fills, no
-    // major GC runs, and an 84-query × 3-repeat catalog accumulates
-    // every shuffle of the run in the shared local[*] JVM — measured
-    // here as queries late in catalog order degrading 3-20× (q67+ in
-    // run order, warm twins worst) with near-zero reported GC time.
-    // One System.gc() per sample (~100 ms, OUTSIDE the timed window)
-    // keeps executor-side state flat for the whole run; the session
-    // also shortens spark.cleaner.periodicGC.interval as a safety net
-    // (its 30 min default never fires inside a bench).
-    System.gc()
-  }
-
   /** Between WARM repeats: release per-run garbage while keeping the
     * memoized relations hot. Warm twins deliberately skip freeAllBlocks
     * (the warm memo IS the measurement), but connected-components output
@@ -99,7 +71,7 @@ object Bench {
     val sec = (System.nanoTime() - t0) / 1e9
     val gcSec = (gcMillis() - gc0) / 1e3
     debugSample(spark, name, sec)
-    freeAllBlocks(spark)
+    Session.freeAllBlocks(spark)
     if (ok) Some((sec, gcSec)) else None
   }
 
@@ -119,39 +91,13 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val repeats = sys.env.getOrElse("SPARK_GRAFT_REPEATS", "3").toInt
     // comma-separated substrings, any-match ("q51,q70" runs both) —
     // forensics runs need the whole pipeline family, not one query
     val nameFilter: Option[Seq[String]] =
       args.headOption.map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty))
     def keep(name: String): Boolean = nameFilter.forall(_.exists(name.contains))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // Post-shuffle coalescing floor: parallelismFirst targets
-      // max(totalSize/cores, minPartitionSize), and the default 1 MB min
-      // re-serializes the CPU-dense pair-expansion and window stages
-      // whose exchanges are a few MB at sf0.1. 128 KB keeps those stages
-      // on all cores; at scale totalSize/cores is far above either
-      // value, so the setting is inert. (Scan-side floors —
-      // files.minPartitionNum / a lower openCostInBytes — were measured
-      // and REJECTED: every fixture is a single parquet row group, so
-      // extra splits are EMPTY tasks, pure launch overhead; the scan
-      // spread that actually works is Tables.loadSpread's explicit
-      // repartition on the kernel-heavy query paths.)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "128k")
-      // (measured, then rejected: spark.sql.join.preferSortMergeJoin=false
-      // — the guide §3.1 candidate — regressed the exact-verification
-      // joins q27/q63 by ~1 s each at sf0.1: their shuffled-hash build
-      // sides are the wide exploded shingle relations, where sort-merge
-      // streams them. Kept at the default.)
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Tables.quietBenignWarns()
     // Untimed warmup: JIT + codegen + parquet reader init, so the first
@@ -234,7 +180,7 @@ object Bench {
           else Some(s"${name}_warm" -> median(times))
         }
       }
-    freeAllBlocks(spark)
+    Session.freeAllBlocks(spark)
 
     // Lakehouse-path metrics mirroring BASELINE.md's headline numbers:
     // bulk ingest throughput and the pruned single-symbol filter query.
@@ -403,9 +349,11 @@ object Bench {
     // BASELINE.md bench-protocol bullet 3: parquet+snappy ≤ 1/6 of CSV.
     def dirBytes(p: String, suffix: String): Long = {
       import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(java.nio.file.Paths.get(p)).iterator().asScala
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(p))
+      try walk.iterator().asScala
         .filter(f => f.toString.endsWith(suffix))
         .map(java.nio.file.Files.size).sum
+      finally walk.close()
     }
     val storageMetric = if (measureStorage) {
       val csvRoot = java.nio.file.Files.createTempDirectory("benchcsv").toString
@@ -479,8 +427,10 @@ object Bench {
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get(p)
     if (java.nio.file.Files.exists(root)) {
-      java.nio.file.Files.walk(root).iterator().asScala.toSeq.reverse
+      val walk = java.nio.file.Files.walk(root)
+      try walk.iterator().asScala.toSeq.reverse
         .foreach(java.nio.file.Files.deleteIfExists(_))
+      finally walk.close()
     }
   }
 }

@@ -1,14 +1,10 @@
 package graft
 import java.sql.Timestamp
-import org.apache.spark.sql.SparkSession
 import graft.sources.DataLakehouse
 import graft.streaming.Streaming
 object LakeDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Session.builder(4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val root = java.nio.file.Files.createTempDirectory("lakedemo").toString
     val lake = new DataLakehouse(spark, root, batchSize = 5)

@@ -3,7 +3,6 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Optimization-round evidence capture (guide §1.1/§7.2): for each named
   * catalog query, write `.explain("formatted")` plus measured execution
@@ -44,18 +43,7 @@ object PlanDump {
       .getOrElse(Seq.empty)
     val sfDir = args.lift(2).orElse(sys.env.get("SPARK_GRAFT_SF_DIR"))
       .getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // mirror Bench's coalesce parallelism floor so dumped plans and
-      // counters reflect the benched execution (see Bench.scala)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "128k")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Tables.quietBenignWarns()
     val outDir = Paths.get(sys.env.getOrElse("SPARK_GRAFT_PLANS_DIR",
@@ -65,10 +53,7 @@ object PlanDump {
       .filter(n => wanted.isEmpty || wanted.exists(n.contains))
     for (name <- names) {
       val fn = SparkEntry.queries(name)
-      // cold state per query: drop every cached/persisted block first
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      Session.freeAllBlocks(spark) // cold state per query
       val counters = new Counters
       spark.sparkContext.addSparkListener(counters)
       val t0 = System.nanoTime()
@@ -83,20 +68,22 @@ object PlanDump {
         org.apache.spark.sql.execution.FormattedMode)
       df.write.format("noop").mode("overwrite").save()
       val sec = (System.nanoTime() - t0) / 1e9
-      // listener events are async; poll until the counters are stable
-      // across two samples (bounded at 10 s) instead of one fixed sleep —
-      // on a loaded box late stage-completed events arrived after 1.5 s
-      // and under-reported shuffle bytes for exactly the slowest queries
-      // (ADVICE r17; private API waitUntilEmpty is inaccessible here)
-      var snap = (counters.jobs, counters.stages,
+      // listener events are async; poll until two consecutive 500 ms
+      // samples leave the counters unchanged (bounded at 10 s) instead of
+      // one fixed sleep — on a loaded box late stage-completed events
+      // arrived after 1.5 s and under-reported shuffle bytes for exactly
+      // the slowest queries, and a single quiet window can still fall in
+      // a gap between two of them (private API waitUntilEmpty is
+      // inaccessible here)
+      def sample() = (counters.jobs, counters.stages,
         counters.shuffleRead, counters.shuffleWrite)
-      var stable = false
+      var snap = sample()
+      var quiet = 0
       val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (!stable && System.nanoTime() < deadline) {
+      while (quiet < 2 && System.nanoTime() < deadline) {
         Thread.sleep(500)
-        val now = (counters.jobs, counters.stages,
-          counters.shuffleRead, counters.shuffleWrite)
-        stable = now == snap
+        val now = sample()
+        quiet = if (now == snap) quiet + 1 else 0
         snap = now
       }
       spark.sparkContext.removeSparkListener(counters)

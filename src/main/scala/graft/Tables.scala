@@ -49,32 +49,18 @@ object Tables {
     LogManager.getLogger(getClass) // force-touch so the config applies
   }
 
-  // Loaded-table memo per (session, dir, name): `spark.read.parquet`
-  // resolves the footer EAGERLY on every call, and the 100-query catalog
-  // calls load() several hundred times per bench/verify run against
-  // directories that never change within a session (driver testdata is
-  // static; spec fixture dirs are createTempDirectory-unique and
-  // write-once). Memoizing the resolved DataFrame (a plan object — no
-  // persisted blocks, so nothing to unpersist) removes that repeated
-  // metadata IO from every query's fixed cost. Entries die with their
-  // session via the listener (the DedupQueries memo pattern).
-  private val memo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), DataFrame]
-  private val evictionHooked =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[SparkSession]()
+  // Loaded-table memo: `spark.read.parquet` resolves the footer EAGERLY
+  // on every call, and the 100-query catalog calls load() several hundred
+  // times per bench/verify run against directories that never change
+  // within a session (the sf testdata is static; spec fixture dirs are
+  // createTempDirectory-unique and write-once). Memoizing the resolved
+  // DataFrame (a plan object — no persisted blocks, so nothing to
+  // release) removes that repeated metadata IO from every query's fixed
+  // cost.
+  private val memo = new SessionMemo
 
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    if (evictionHooked.add(spark))
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onApplicationEnd(
-              e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-            memo.filterInPlace { case ((sess, _, _), _) => sess != spark }
-            evictionHooked.remove(spark)
-          }
-        })
-    memo.getOrElseUpdate((spark, sfDir, name), doLoad(spark, sfDir, name))
-  }
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    memo(spark, sfDir, name)((doLoad(spark, sfDir, name), () => ()))
 
   private def doLoad(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     if (name == "events") {

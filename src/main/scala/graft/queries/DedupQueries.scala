@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{SessionMemo, Tables}
 import graft.functions.{TextOps, VectorOps}
 import graft.operators.{Dedup, SimilaritySearch}
 
@@ -41,40 +41,21 @@ object DedupQueries {
   // cost and double-persisting identical shingle relations). The result
   // is tiny (pairs over threshold), so the cache cost is negligible; if
   // an external clearCache drops the blocks the plan just recomputes.
-  private val pairSetMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), DataFrame]
-  private val evictionHooked =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[SparkSession]()
+  // Built indexes (LSH / IVF+PQ) share the memo, so repeated invocations
+  // REUSE one set of persisted relations instead of accumulating a new
+  // set each call. The memo bounds both to one dir per session; the
+  // pipeline family q24/q43/q56 → q46/q54/q55/q57 always shares a dir.
+  // The jaccard build runs its materializing job inside the memo's lock
+  // (the pair set is eager since Dedup.jaccardPairs releases its
+  // intermediates) — racing that job is exactly what the lock prevents.
+  private val memo = new SessionMemo
 
   private def memoizedPairs(key: String, s: SparkSession, dir: String)(
-      build: => DataFrame): DataFrame = pairSetMemo.synchronized {
-    // synchronized: a concurrent getOrElseUpdate would race two builds of
-    // the same expensive plan and leak the loser's persisted DF. The
-    // jaccard build runs its materializing job inside the lock (the pair
-    // set is eager since Dedup.jaccardPairs releases its intermediates);
-    // acceptable — racing that job is exactly what the lock must prevent.
-    if (evictionHooked.add(s))
-      // entries die with their session — long-lived multi-session
-      // processes (test suites, notebook servers) must not accumulate
-      // plans/persisted frames of stopped sessions
-      s.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onApplicationEnd(
-            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-          pairSetMemo.filterInPlace { case ((sess, _, _), _) => sess != s }
-          evictionHooked.remove(s)
-        }
-      })
-    // Lifecycle bound: the memo is scoped to ONE dir per session (the
-    // pipeline family q24/q43/q56 → q46/q54/q55/q57 always shares a
-    // dir). Touching a NEW dir unpersists and drops every other-dir
-    // entry, so a multi-dir catalog sweep holds at most one dir's pair
-    // sets in executor storage instead of accumulating all of them.
-    pairSetMemo.keys
-      .filter { case (sess, d, _) => sess == s && d != dir }
-      .foreach { k =>
-        pairSetMemo.remove(k).foreach(_.unpersist(blocking = false))
-      }
-    val df = pairSetMemo.getOrElseUpdate((s, dir, key), build)
+      build: => DataFrame): DataFrame = {
+    val df = memo(s, dir, key) {
+      val df = build
+      (df, () => { df.unpersist(blocking = false); () })
+    }
     // re-persist if an external clearCache (Bench does this between
     // repeats) dropped the registration — persist() on an already-cached
     // DF is a no-op, so this keeps the memo warm without double-caching
@@ -82,35 +63,6 @@ object DedupQueries {
       df.persist()
     df
   }
-
-  // Built indexes (LSH / IVF+PQ) get the same lifecycle treatment as the
-  // pair sets: memoized per (session, dir, kind) so repeated invocations
-  // REUSE one set of persisted relations instead of accumulating a new
-  // set each call, evicted (released) when a new dir is touched or the
-  // session ends. The release thunk unpersists the index's relations.
-  private val indexMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), (Any, () => Unit)]
-
-  private def memoizedIndex[T](key: String, s: SparkSession, dir: String)(
-      build: => (T, () => Unit)): T = indexMemo.synchronized {
-    if (indexEvictionHooked.add(s))
-      s.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onApplicationEnd(
-            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-          indexMemo.filterInPlace { case ((sess, _, _), _) => sess != s }
-          indexEvictionHooked.remove(s)
-        }
-      })
-    indexMemo.keys
-      .filter { case (sess, d, _) => sess == s && d != dir }
-      .foreach { k => indexMemo.remove(k).foreach(_._2()) }
-    indexMemo.getOrElseUpdate((s, dir, key), {
-      val (v, release) = build
-      (v, release)
-    })._1.asInstanceOf[T]
-  }
-  private val indexEvictionHooked =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[SparkSession]()
 
   // Memoize the UNORDERED pair set — the very frame Dedup.jaccardPairs
   // returns already materialized-and-cached, so memo eviction's unpersist
@@ -466,7 +418,7 @@ object DedupQueries {
   private def q63(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val all = Tables.loadSpread(s, dir, "documents")
-    val idx = memoizedIndex[Dedup.MinhashIndex]("minhash", s, dir) {
+    val idx = memo(s, dir, "minhash") {
       val i = Dedup.minhashIndex(
         all.filter($"doc_id" % 8 =!= 7), "doc_id", "text")
       (i, () => i.unpersist())
@@ -487,7 +439,7 @@ object DedupQueries {
   private def q64(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val emb = Tables.loadSpread(s, dir, "embeddings")
-    val idx = memoizedIndex[SimilaritySearch.LshIndex]("lsh", s, dir) {
+    val idx = memo(s, dir, "lsh") {
       // default numPlanes = adaptive sizing law: gate corpora keep the
       // pinned 4-plane geometry, larger corpora bound bucket population
       val i = SimilaritySearch.lshIndex(
@@ -526,8 +478,7 @@ object DedupQueries {
     // codebook fit + corpus encode memoized per (session, dir) like
     // q66's IVF+PQ index — the steady state is probe-only; ensureCached
     // self-heals if something unpersisted the codes mid-session
-    val (books, encoded) = memoizedIndex[
-        (Array[Array[Array[Double]]], DataFrame)]("pq", s, dir) {
+    val (books, encoded) = memo(s, dir, "pq") {
       val b = SimilaritySearch.fitPqCodebooks(emb, "vec_id", "embedding",
         m = 8, codebookSize = 64)
       val e = SimilaritySearch.pqEncode(emb, "vec_id", "embedding", b).persist()
@@ -552,7 +503,7 @@ object DedupQueries {
     val qv = emb.filter($"vec_id" === 0)
       .select(VectorOps.toDoubles($"embedding"))
       .head().getSeq[Double](0).toArray
-    val idx = memoizedIndex[SimilaritySearch.IvfPqIndex]("ivfpq", s, dir) {
+    val idx = memo(s, dir, "ivfpq") {
       val i = SimilaritySearch.fitIvfPq(emb, "vec_id", "embedding",
         numCells = 8, m = 8, codebookSize = 64)
       (i, () => i.unpersist())

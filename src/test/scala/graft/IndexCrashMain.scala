@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 import graft.operators.{Dedup, DurableIndex, SimilaritySearch}
@@ -16,13 +15,7 @@ import graft.operators.{Dedup, DurableIndex, SimilaritySearch}
 object IndexCrashMain {
   def main(args: Array[String]): Unit = {
     val Array(kind, indexPath, sfDir, seamName, appendId) = args
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-index-crash")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.builder(2).appName("graft-index-crash").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     DurableIndex.crashSeam = s =>
       if (s == seamName) Runtime.getRuntime.halt(9)

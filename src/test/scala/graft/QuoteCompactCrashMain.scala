@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.streaming.Streaming
 
 /** Forked child for the hard-kill quote-state compaction proof
@@ -16,13 +14,7 @@ import graft.streaming.Streaming
 object QuoteCompactCrashMain {
   def main(args: Array[String]): Unit = {
     val Array(stateDir, seamName) = args
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-compact-crash")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.builder(2).appName("graft-compact-crash").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Streaming.compactSeam = s =>
       if (s == seamName) Runtime.getRuntime.halt(9)

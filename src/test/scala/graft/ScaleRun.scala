@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-evidence harness (test scope, run by hand):
@@ -11,22 +10,21 @@ import org.apache.spark.sql.functions._
   * id-shifted copies — every doc gains mult−1 identical clones, which is
   * the bucket-stress WORST case for both LSH families (identical docs
   * share every band/chunk bucket) — then times the near-dup pipeline on
-  * local[32]. Results are recorded in NOTES.md "Scale evidence".
+  * the engine session (`Session.builder`: local[32] unless
+  * SPARK_GRAFT_CPUS says otherwise). Results are recorded in NOTES.md
+  * "Scale evidence".
   */
 object ScaleRun {
   def main(args: Array[String]): Unit = {
     val which = args.headOption.getOrElse("simhash")
     val mult = args.lift(1).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder().master("local[32]")
-      // 32 matches Bench; rungs whose shuffles carry billions of rows
-      // (e.g. the past-headroom minhash degrade) override it the way a
-      // real cluster would — partitions sized so a partition's sort/agg
-      // state fits task memory
+    val spark = Session.builder()
+      // rungs whose shuffles carry billions of rows (e.g. the
+      // past-headroom minhash degrade) override the one-per-core shuffle
+      // partitions the way a real cluster would — partitions sized so a
+      // partition's sort/agg state fits task memory
       .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
+        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", Session.cores.toString))
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._

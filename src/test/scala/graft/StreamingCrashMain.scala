@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.sources.{DataLakehouse, TxnLog}
 import graft.streaming.Streaming
 
@@ -20,13 +18,7 @@ import graft.streaming.Streaming
 object StreamingCrashMain {
   def main(args: Array[String]): Unit = {
     val Array(root, srcDir, ckptDir) = args
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-streaming-crash")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.builder(2).appName("graft-streaming-crash").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val lake = new DataLakehouse(spark, root)
     TxnLog.crashSeam = s =>

@@ -14,12 +14,7 @@ import graft.streaming.{Streaming, SymbolTick, TsTick}
   */
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
-
-  private case class Tick(ts: Timestamp, symbol: String, price: Double, volume: Long)
-  private case class Quote(qsymbol: String, qts: Timestamp, qid: Long,
-      bid: Double, ask: Double)
-  private case class Trade(trade_id: Long, symbol: String, ts: Timestamp,
-      price: Double)
+  import StreamingSpec._
 
   private def tick(sec: Int, sym: String, p: Double, v: Long) =
     Tick(new Timestamp(1718445600000L + sec * 1000L), sym, p, v)
@@ -1221,4 +1216,15 @@ class StreamingSpec extends SparkSpec {
       server.close()
     }
   }
+}
+
+// Row classes live in the companion object: an encoder for a case class nested in the spec
+// class needs the spec instance as an outer pointer, which the generated
+// Java cannot supply, so Spark would fall back to interpreted evaluation.
+object StreamingSpec {
+  case class Tick(ts: Timestamp, symbol: String, price: Double, volume: Long)
+  case class Quote(qsymbol: String, qts: Timestamp, qid: Long,
+      bid: Double, ask: Double)
+  case class Trade(trade_id: Long, symbol: String, ts: Timestamp,
+      price: Double)
 }
