@@ -34,9 +34,6 @@ object TextOps {
         i => array_join(slice(toks, i + lit(1), lit(n)), " "))
     ).otherwise(array().cast("array<string>"))
 
-  /** Token count. */
-  def tokenCount(text: Column): Column = size(tokens(text))
-
   /** Type-token ratio (distinct/total) — a quality-scoring signal. */
   def typeTokenRatio(toks: Column): Column =
     size(array_distinct(toks)).cast("double") / size(toks)

@@ -23,11 +23,4 @@ object VectorOps {
 
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (l2Norm(a) * l2Norm(b))
-
-  def cosineF(a: Column, b: Column): Column =
-    cosine(toDoubles(a), toDoubles(b))
-
-  def l2Distance(a: Column, b: Column): Column =
-    sqrt(aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
-      lit(0.0), (acc, x) => acc + x))
 }

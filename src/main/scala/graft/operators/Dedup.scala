@@ -32,14 +32,6 @@ object Dedup {
       .filter(col("__rn") === 1).drop("__rn")
   }
 
-  /** MinHash signature of a shingle array: sig[i] = min over shingles of
-    * xxhash64(i, shingle). Null when the shingle array is empty.
-    */
-  def minhashSignature(shingles: Column, numHashes: Int): Column =
-    when(size(shingles) > 0,
-      transform(sequence(lit(0), lit(numHashes - 1)),
-        i => array_min(transform(shingles, sh => xxhash64(i, sh)))))
-
   /** LSH banding: (bandIndex, bandHash) rows per document. Documents sharing
     * any band bucket are candidate near-duplicates. numHashes must equal
     * bands * rowsPerBand.
@@ -120,7 +112,7 @@ object Dedup {
     // Bands carry only (id, n, band, bucket) — candidate generation
     // shuffles ints, never shingle sets (which at corpus scale dwarf the
     // ids). Candidates come from ONE groupBy(band, bucket) posting list
-    // (the jaccardPairsUncapped shape): the bucket cap and the ≥2 prune
+    // (the jaccardPairs shape): the bucket cap and the ≥2 prune
     // are filters on the grouped row (the previous cap aggregate +
     // join-back and the bucket self-join disappear), pairs expand
     // map-side through codegen'd Generates, and the cross-band dedup
@@ -165,132 +157,78 @@ object Dedup {
   }
 
   /** EXACT n-gram-Jaccard near-dup pairs via a shingle inverted index —
-    * the oracle-pinnable formulation (no hashing in the result): shuffle
-    * on shingle, pairs only within posting lists, so cost is
-    * Σ df(s)²/2 over shingles, not |docs|²/2.
+    * the oracle-pinnable formulation (no hashing in the result): pairs
+    * arise only within posting lists, so cost is Σ df(s)²/2 over
+    * shingles, not |docs|²/2. Two exchanges (optimization guide §2.4
+    * "remove shuffles outright"):
     *
-    * @param maxPostingList drop shingles whose document frequency exceeds
-    *        this from CANDIDATE GENERATION only (0 = off, fully exact).
-    *        One boilerplate shingle shared by m docs otherwise emits m²/2
-    *        join rows — the same skew bomb the LSH bucket caps defuse.
-    *        Verification always recounts intersections over the FULL
-    *        shingle relation, so surviving pairs carry the exact jaccard;
-    *        the cap can only lose pairs whose EVERY shared shingle is
-    *        ultra-common (boilerplate/templates in practice).
+    *  1. Per-document distinct-shingle count `n` is computed MAP-SIDE
+    *     from the shingle array itself (`size(array_distinct(...))`)
+    *     and carried through the explode, so there is no separate
+    *     groupBy(doc_id) size aggregate and no size join-back (n is
+    *     functionally dependent on the id, so carrying it through the
+    *     pair aggregate's keys is free).
+    *  2. Candidates come from ONE groupBy(shingle) that collects the
+    *     posting list and expands its ordered pairs map-side
+    *     ([[postingPairs]]), instead of a self-join that shuffles the
+    *     whole exploded relation twice; df==1 shingles die in place as
+    *     `size(ps) > 1` on the grouped row.
+    *
+    * Exactness: only df>1 shingles can be shared, every shared shingle
+    * of a pair produces exactly one expanded row, so the pair count IS
+    * |A∩B| over distinct shingles, and the denominator uses the full
+    * per-doc distinct counts. Measured at sf0.1: 19 jobs → 6 against the
+    * self-join form, 4.4 s → ~2 s cold.
+    *
+    * Scale note: a hot shingle's posting list (m docs) lands in ONE
+    * aggregation buffer, and the form is O(m²) per hot shingle — it is
+    * the oracle pin, not the 100 TB path. Dirty corpora use
+    * [[jaccardPairsPrefix]] (q70), which bounds prefix-join fan-out with
+    * exactness intact.
+    *
     * @return (a_id, b_id, jaccard) with a_id < b_id — EAGERLY materialized
-    *         and cached: the exploded shingle relations this plan persists
-    *         internally are released before returning (a long-lived
-    *         session must not accumulate them call over call), which
-    *         requires the result to be computed first. The caller owns
-    *         releasing the (pairs-over-threshold-sized) result via
-    *         `unpersist()` when done; a dropped cache recomputes from
-    *         lineage (correct, just uncached-intermediate slow).
+    *         and cached, the contract every pair finder here shares:
+    *         internal caches are released before returning, so a
+    *         long-lived session does not accumulate them call over call.
+    *         The caller owns releasing the (pairs-over-threshold-sized)
+    *         result via `unpersist()` when done; a dropped cache
+    *         recomputes from lineage (correct, just slower).
     */
   def jaccardPairs(
       df: DataFrame,
       idCol: String,
       textCol: String,
       shingleLen: Int = 3,
-      threshold: Double = 0.5,
-      maxPostingList: Int = 0): DataFrame = {
-    if (maxPostingList <= 0)
-      return jaccardPairsUncapped(df, idCol, textCol, shingleLen, threshold)
+      threshold: Double = 0.5): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    // tokens materialized in their own projection (see TextOps.shingles
-    // PERF note), then persisted: the self-join and the size join both
-    // read it
+    // explode(array(...)) is a GENERATE BARRIER: the distinct-shingle
+    // array must become a real (Generate-output) column before size()
+    // and explode() read it twice — an intermediate Project would be
+    // CollapseProject-merged into the tokens projection, inlining
+    // tokens(text) into the shingles lambda and re-tokenizing per
+    // element (the TextOps.shingles trap; measured 18× on this base)
     val sh = df
       .select(col(idCol).as("doc_id"), TextOps.tokens(col(textCol)).as("toks"))
       .select($"doc_id",
-        explode(array_distinct(TextOps.shingles($"toks", shingleLen))).as("sh"))
-      .persist()
-    val sizes = sh.groupBy($"doc_id").agg(count(lit(1)).as("n"))
-    // Shingles appearing in a single document cannot produce a pair —
-    // dropping them first shrinks the quadratic posting-list expansion
-    // (provably result-preserving; doc sizes were computed above). The
-    // optional df cap bounds the expansion at the price of recall.
-    val dfAgg = sh.groupBy($"sh").agg(count(lit(1)).as("df"))
-    val hot = (if (maxPostingList > 0) dfAgg.filter($"df" <= maxPostingList)
-               else dfAgg).filter($"df" > 1).select($"sh")
-    val sh2 = sh.join(hot, "sh").persist()
-    var shShared: DataFrame = null
-    var plausibleP: DataFrame = null
-    // ONE list for both release paths (failure guard + happy-path
-    // materializeAndRelease) so a future intermediate can't be added to
-    // one and silently stranded on the other
-    def allCaches: Seq[DataFrame] =
-      Seq(sh, sh2) ++ Option(shShared) ++ Option(plausibleP)
-    val candInter = sh2.as("a")
-      .join(sh2.as("b"), $"a.sh" === $"b.sh" && $"a.doc_id" < $"b.doc_id")
-      .groupBy($"a.doc_id".as("a_id"), $"b.doc_id".as("b_id"))
+        explode(array(
+          array_distinct(TextOps.shingles($"toks", shingleLen)))).as("arr"))
+      .select($"doc_id", size($"arr").cast("long").as("n"),
+        explode($"arr").as("sh"))
+    val pairs = postingPairs(sh.groupBy($"sh")
+        .agg(collect_list(struct($"doc_id", $"n")).as("ps")), "ps",
+        key = "doc_id")
+      .groupBy($"a.doc_id".as("a_id"), $"b.doc_id".as("b_id"),
+        $"a.n".as("na"), $"b.n".as("nb"))
       .agg(count(lit(1)).as("inter"))
-    // Uncapped, candidate intersections ARE the exact intersections (only
-    // df==1 shingles were dropped, and those intersect nothing); capped,
-    // recount over the full relation so values stay exact.
-    releasingOnFailure(allCaches) {
-      val inter =
-        if (maxPostingList <= 0) candInter
-        else {
-          // The recount pass dominates the capped path on boilerplate-
-          // heavy corpora (ScaleRun skewbomb): candidate generation is
-          // cheap, but recounting every candidate against the full
-          // shingle relation pays |candidates| × |doc shingles|. Two
-          // result-preserving cuts:
-          //
-          // 1. UPPER-BOUND PRUNE before the recount. The candidate's
-          //    cold-intersection count is exact over df <= cap shingles;
-          //    the hot remainder is bounded by min(hotA, hotB), each
-          //    doc's count of df > cap shingles. j is monotone in inter,
-          //    so imax := coldInter + min(hotA, hotB) bounds the true
-          //    jaccard from above — a pair with
-          //    imax/(na+nb-imax) < t provably cannot reach the
-          //    threshold. On a template corpus this eliminates the
-          //    boiler-only candidate mass (their cold overlap is tiny
-          //    and min(hot) ~ template size), leaving the recount only
-          //    genuinely-plausible pairs.
-          // 2. Recount over df > 1 shingles ONLY — a df == 1 shingle
-          //    exists in exactly one document, so it can never survive
-          //    the (b_id, sh) equi-join (the argument that drops df == 1
-          //    from candidate generation). On natural text the majority
-          //    of shingles are df == 1.
-          val hotCount = sh.join(
-              dfAgg.filter($"df" > maxPostingList).select($"sh"), "sh")
-            .groupBy($"doc_id").agg(count(lit(1)).as("hc"))
-          val plausible = candInter
-            .join(sizes.select($"doc_id".as("a_id"), $"n".as("na")), "a_id")
-            .join(sizes.select($"doc_id".as("b_id"), $"n".as("nb")), "b_id")
-            .join(hotCount.select($"doc_id".as("a_id"), $"hc".as("ha")),
-              Seq("a_id"), "left")
-            .join(hotCount.select($"doc_id".as("b_id"), $"hc".as("hb")),
-              Seq("b_id"), "left")
-            .withColumn("imax", $"inter" +
-              least(coalesce($"ha", lit(0L)), coalesce($"hb", lit(0L))))
-            .filter($"imax".cast("double") /
-              ($"na" + $"nb" - $"imax") >= threshold)
-            .select($"a_id", $"b_id")
-          shShared = sh.join(
-            dfAgg.filter($"df" > 1).select($"sh"), "sh").persist()
-          plausibleP = plausible.persist()
-          gatedPairs(plausibleP)
-            .join(shShared.select($"doc_id".as("a_id"), $"sh"), "a_id")
-            // equi-join on BOTH (b_id, sh): each surviving row IS one
-            // shared shingle — joining on b_id alone would cross a's
-            // shingles with b's (|a|·|b| intermediate rows per pair)
-            // before filtering
-            .join(shShared.select($"doc_id".as("b_id"), $"sh"),
-              Seq("b_id", "sh"))
-            .groupBy($"a_id", $"b_id").agg(count(lit(1)).as("inter"))
-        }
-      val pairs = inter
-        .join(sizes.select($"doc_id".as("a_id"), $"n".as("na")), "a_id")
-        .join(sizes.select($"doc_id".as("b_id"), $"n".as("nb")), "b_id")
-        .withColumn("jaccard",
-          $"inter".cast("double") / ($"na" + $"nb" - $"inter"))
-        .filter($"jaccard" >= threshold)
-        .select($"a_id", $"b_id", round($"jaccard", 4).as("jaccard"))
-      materializeAndRelease(pairs, allCaches)
-    }
+      .withColumn("jaccard",
+        $"inter".cast("double") / ($"na" + $"nb" - $"inter"))
+      .filter($"jaccard" >= threshold)
+      .select($"a_id", $"b_id", round($"jaccard", 4).as("jaccard"))
+    // eagerly materialized and cached, caller owns the result's
+    // unpersist; no internal caches to release here — nothing upstream
+    // is read twice
+    materializeAndRelease(pairs, Nil)
   }
 
   /** Every unordered pair of a grouped posting list, canonicalized —
@@ -322,76 +260,6 @@ object Dedup {
       .select(x, explode(slice(ps, col("i") + lit(2), size(ps))).as("y"))
       .select(when(xFirst, x).otherwise(y).as("a"),
         when(xFirst, y).otherwise(x).as("b"))
-  }
-
-  /** The UNCAPPED exact path of [[jaccardPairs]] as a posting-list
-    * pipeline — same result set and values, two exchanges instead of
-    * five-plus (optimization guide §2.4 "remove shuffles outright"):
-    *
-    *  1. Per-document distinct-shingle count `n` is computed MAP-SIDE
-    *     from the shingle array itself (`size(array_distinct(...))`)
-    *     and carried through the explode, so the separate
-    *     groupBy(doc_id) size aggregate and the two size join-backs of
-    *     the join formulation disappear (n is functionally dependent on
-    *     the id, so carrying it through the pair aggregate's keys is
-    *     free).
-    *  2. Candidates come from ONE groupBy(shingle) that collects the
-    *     posting list and expands its ordered pairs map-side
-    *     ([[postingPairs]]), instead of a self-join that shuffles the
-    *     whole exploded relation twice and needs a df>1 pre-filter
-    *     relation to prune singleton shingles (here: `size(ps) > 1`
-    *     on the grouped row — df==1 shingles die in place).
-    *
-    * Exactness argument unchanged from the join form: only df>1
-    * shingles can be shared, every shared shingle of a pair produces
-    * exactly one expanded row, so the pair count IS |A∩B| over distinct
-    * shingles, and the denominator uses the full per-doc distinct
-    * counts. Measured at sf0.1: 19 jobs → 6, 4.4 s → ~2 s cold.
-    *
-    * Scale note: a hot shingle's posting list (m docs) lands in ONE
-    * aggregation buffer here, where the join form spread its m²/2
-    * candidate rows across tasks — the uncapped exact form is O(m²) in
-    * EITHER shape and is the oracle pin, not the 100 TB path; dirty
-    * corpora use `maxPostingList` (the capped branch keeps the join
-    * form, whose recount machinery needs the exploded relations) or
-    * [[jaccardPairsPrefix]], which bounds prefix-join fan-out with
-    * exactness intact.
-    */
-  private def jaccardPairsUncapped(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      shingleLen: Int,
-      threshold: Double): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    // explode(array(...)) is a GENERATE BARRIER: the distinct-shingle
-    // array must become a real (Generate-output) column before size()
-    // and explode() read it twice — an intermediate Project would be
-    // CollapseProject-merged into the tokens projection, inlining
-    // tokens(text) into the shingles lambda and re-tokenizing per
-    // element (the TextOps.shingles trap; measured 18× on this base)
-    val sh = df
-      .select(col(idCol).as("doc_id"), TextOps.tokens(col(textCol)).as("toks"))
-      .select($"doc_id",
-        explode(array(
-          array_distinct(TextOps.shingles($"toks", shingleLen)))).as("arr"))
-      .select($"doc_id", size($"arr").cast("long").as("n"),
-        explode($"arr").as("sh"))
-    val pairs = postingPairs(sh.groupBy($"sh")
-        .agg(collect_list(struct($"doc_id", $"n")).as("ps")), "ps",
-        key = "doc_id")
-      .groupBy($"a.doc_id".as("a_id"), $"b.doc_id".as("b_id"),
-        $"a.n".as("na"), $"b.n".as("nb"))
-      .agg(count(lit(1)).as("inter"))
-      .withColumn("jaccard",
-        $"inter".cast("double") / ($"na" + $"nb" - $"inter"))
-      .filter($"jaccard" >= threshold)
-      .select($"a_id", $"b_id", round($"jaccard", 4).as("jaccard"))
-    // the jaccardPairs contract: eagerly materialized and cached, caller
-    // owns the result's unpersist; no internal caches to release here —
-    // nothing upstream is read twice
-    materializeAndRelease(pairs, Nil)
   }
 
   /** Candidate-pair broadcast gate for the exact-verification tails: the
@@ -476,7 +344,7 @@ object Dedup {
     * the distributed formulation follows Vernica et al., "Efficient
     * parallel set-similarity joins using MapReduce", SIGMOD 2010).
     *
-    * Same result set as uncapped [[jaccardPairs]] (provably — no recall
+    * Same result set as [[jaccardPairs]] (provably — no recall
     * knob), but candidate generation joins only each document's PREFIX
     * under a global rarest-first token order instead of its full posting
     * lists. Two documents x, y with J(x,y) ≥ t share ≥ ⌈t·|x|⌉ tokens, so
@@ -484,10 +352,10 @@ object Dedup {
     * the threshold (prefix-filter lemma, Chaudhuri et al. ICDE 2006).
     * Ordering by ascending document frequency puts boilerplate shingles in
     * the suffixes — which are never joined on — so the m²-per-hot-shingle
-    * posting-list bomb that [[jaccardPairs]] needs `maxPostingList` for
-    * simply cannot arise here, WITHOUT giving up exactness. Candidates
-    * also pass the length filter t·max(|x|,|y|) ≤ min(|x|,|y|) before
-    * exact verification over the full shingle relation.
+    * posting-list bomb of [[jaccardPairs]] simply cannot arise here,
+    * WITHOUT giving up exactness. Candidates also pass the length filter
+    * t·max(|x|,|y|) ≤ min(|x|,|y|) before exact verification over the
+    * full shingle relation.
     *
     * Scale shape: one shuffle on doc_id for the per-doc prefix window
     * (each window is one document's shingles — bounded by doc length,
@@ -501,14 +369,13 @@ object Dedup {
     * rank structure is ever built or broadcast.
     *
     * When to use which (measured at sf0.1, round 6): on a CLEAN corpus
-    * the uncapped [[jaccardPairs]] wins slightly (5.3 s vs 5.9 s here) —
-    * its posting-list join computes intersections in the candidate pass,
-    * while this form pays df-ranking plus a separate verification tail.
-    * On a boilerplate-heavy corpus the ordering inverts hard:
-    * [[jaccardPairs]]'s hot posting lists expand quadratically (and its
-    * `maxPostingList` escape hatch costs recall), whereas prefixes here
-    * exclude hot shingles BY ORDER with exactness intact. Reach for this
-    * form exactly when you would otherwise need `maxPostingList`.
+    * [[jaccardPairs]] wins slightly (5.3 s vs 5.9 s here) — its
+    * posting lists compute intersections in the candidate pass, while
+    * this form pays df-ranking plus a separate verification tail. On a
+    * boilerplate-heavy corpus the ordering inverts hard:
+    * [[jaccardPairs]]'s hot posting lists expand quadratically, whereas
+    * prefixes here exclude hot shingles BY ORDER with exactness intact.
+    * This is the form for dirty corpora.
     *
     * @return (a_id, b_id, jaccard) with a_id < b_id — EAGERLY
     *         materialized and cached under the [[jaccardPairs]] contract
@@ -593,7 +460,7 @@ object Dedup {
         ($"pos" <= $"n" -
           ceil($"n" * (2 * threshold / (1 + threshold)) - 1e-9) + 1).as("idx"))
     // Candidate generation from ONE groupBy(prefix shingle) posting list,
-    // pairs expanded with codegen'd Generates (the jaccardPairsUncapped
+    // pairs expanded with codegen'd Generates (the jaccardPairs
     // shape — the self-join's two exchanges become one). The LENGTH
     // filter (J ≤ min/max ⇒ t·max ≤ min necessary) and the POSITIONAL
     // filter (PPJoin proper, Xiao et al. 2008 §3.2: tokens shared
@@ -668,10 +535,16 @@ object Dedup {
     * shingles after it passes. Within-batch duplicates are a separate
     * [[jaccardPairs]] over the (small) batch alone.
     *
-    * Jaccard is exact over both documents' FULL distinct-shingle sets.
-    * `maxPostingList` caps candidate generation by the COMBINED document
-    * frequency (the skew defuse of [[jaccardPairs]]; verification still
-    * recounts over full relations, so surviving pairs stay exact).
+    * Posting-list pipeline (the [[jaccardPairs]] treatment on the
+    * incremental shape): per-side distinct-shingle counts are computed
+    * MAP-SIDE and carried through the explode (no size aggregates, no
+    * size join-backs), and the batch×corpus candidate join becomes ONE
+    * groupBy(shingle) that collects the two sides' posting lists and
+    * cross-expands them map-side. Shingles present on one side only die
+    * in place (`size(bs) > 0 && size(cs) > 0`). Jaccard is exact over
+    * both documents' FULL distinct-shingle sets: each shared shingle
+    * contributes exactly one expanded (batch, corpus) row, so the pair
+    * count is the exact cross-side intersection.
     *
     * @return (batch_id, corpus_id, jaccard), jaccard >= threshold —
     *         eagerly materialized with intermediates released, same
@@ -684,115 +557,10 @@ object Dedup {
       idCol: String,
       textCol: String,
       shingleLen: Int = 3,
-      threshold: Double = 0.5,
-      maxPostingList: Int = 0): DataFrame = {
-    if (maxPostingList <= 0)
-      return jaccardPairsAgainstUncapped(batch, corpus, idCol, textCol,
-        shingleLen, threshold)
+      threshold: Double = 0.5): DataFrame = {
     val spark = batch.sparkSession
     import spark.implicits._
-    def sh(df: DataFrame, idAs: String) = df
-      .select(col(idCol).as(idAs), TextOps.tokens(col(textCol)).as("toks"))
-      .select(col(idAs),
-        explode(array_distinct(TextOps.shingles($"toks", shingleLen))).as("sh"))
-    // both sides persisted: each feeds candidate generation, its size
-    // aggregate, and (capped) the verification recount
-    val bSh = sh(batch, "batch_id").persist()
-    val cSh = sh(corpus, "corpus_id").persist()
-    val bSizes = bSh.groupBy($"batch_id").agg(count(lit(1)).as("nb"))
-    val cSizes = cSh.groupBy($"corpus_id").agg(count(lit(1)).as("nc"))
-    // candidate pairs: one shared shingle suffices; the df cap bounds the
-    // per-shingle expansion (df measured across BOTH sides — a shingle
-    // hot in the corpus alone still fans out per batch occurrence).
-    // Only the capped branch forces (and therefore persists) df2.
-    var df2Persisted = false
-    var plausibleP: DataFrame = null
-    lazy val df2 = {
-      df2Persisted = true
-      bSh.select($"sh").union(cSh.select($"sh"))
-        .groupBy($"sh").agg(count(lit(1)).as("df")).persist()
-    }
-    // ONE list for both release paths (failure guard + happy-path
-    // materializeAndRelease); guards on df2Persisted so building the
-    // list never forces the lazy cache
-    def allCaches: Seq[DataFrame] = Seq(bSh, cSh) ++
-      (if (df2Persisted) Seq(df2) else Nil) ++ Option(plausibleP)
-    val (bCand, cCand) =
-      if (maxPostingList > 0) {
-        val ok = df2.filter($"df" <= maxPostingList).select($"sh")
-        (bSh.join(ok, "sh"), cSh.join(ok, "sh"))
-      } else (bSh, cSh)
-    val candInter = bCand
-      .join(cCand, "sh")
-      .groupBy($"batch_id", $"corpus_id")
-      .agg(count(lit(1)).as("inter"))
-    // capped: recount intersections over the full relations so values
-    // stay exact (uncapped, candidate intersections ARE exact — no
-    // shingle was dropped), with jaccardPairs' two result-preserving
-    // cuts: the upper-bound prune (coldInter + min(hotB, hotC) bounds
-    // the true intersection, so below-threshold candidates never enter
-    // the recount — kills the boilerplate candidate mass) and the
-    // df > 1 recount restriction (a combined-df 1 shingle exists on one
-    // side only and cannot intersect).
-    releasingOnFailure(allCaches) {
-      val inter =
-        if (maxPostingList <= 0) candInter
-        else {
-          val hot = df2.filter($"df" > maxPostingList).select($"sh")
-          val bHot = bSh.join(hot, "sh")
-            .groupBy($"batch_id").agg(count(lit(1)).as("ha"))
-          val cHot = cSh.join(hot, "sh")
-            .groupBy($"corpus_id").agg(count(lit(1)).as("hb"))
-          val plausible = candInter
-            .join(bSizes, "batch_id").join(cSizes, "corpus_id")
-            .join(bHot, Seq("batch_id"), "left")
-            .join(cHot, Seq("corpus_id"), "left")
-            .withColumn("imax", $"inter" +
-              least(coalesce($"ha", lit(0L)), coalesce($"hb", lit(0L))))
-            .filter($"imax".cast("double") /
-              ($"nb" + $"nc" - $"imax") >= threshold)
-            .select($"batch_id", $"corpus_id")
-          val shared = df2.filter($"df" > 1).select($"sh")
-          plausibleP = plausible.persist()
-          gatedPairs(plausibleP)
-            .join(bSh.join(shared, "sh"), "batch_id")
-            .join(cSh.join(shared, "sh"), Seq("corpus_id", "sh"))
-            .groupBy($"batch_id", $"corpus_id").agg(count(lit(1)).as("inter"))
-        }
-      val pairs = inter
-        .join(bSizes, "batch_id")
-        .join(cSizes, "corpus_id")
-        .withColumn("jaccard",
-          $"inter".cast("double") / ($"nb" + $"nc" - $"inter"))
-        .filter($"jaccard" >= threshold)
-        .select($"batch_id", $"corpus_id", round($"jaccard", 4).as("jaccard"))
-      materializeAndRelease(pairs, allCaches)
-    }
-  }
-
-  /** The UNCAPPED exact path of [[jaccardPairsAgainst]] as a posting-list
-    * pipeline (the [[jaccardPairsUncapped]] treatment on the incremental
-    * shape): per-side distinct-shingle counts are computed MAP-SIDE and
-    * carried through the explode (no size aggregates, no size
-    * join-backs), and the batch×corpus candidate join becomes ONE
-    * groupBy(shingle) that collects the two sides' posting lists and
-    * cross-expands them map-side. Shingles present on one side only die
-    * in place (`size(bs) > 0 && size(cs) > 0`) — the same pruning the
-    * join achieved, without shuffling each side into a separate join
-    * exchange. Result set and jaccard values are identical: each shared
-    * shingle contributes exactly one expanded (batch, corpus) row, so
-    * the pair count is the exact cross-side intersection.
-    */
-  private def jaccardPairsAgainstUncapped(
-      batch: DataFrame,
-      corpus: DataFrame,
-      idCol: String,
-      textCol: String,
-      shingleLen: Int,
-      threshold: Double): DataFrame = {
-    val spark = batch.sparkSession
-    import spark.implicits._
-    // generate-barrier explode(array(...)) as in [[jaccardPairsUncapped]]
+    // generate-barrier explode(array(...)) as in jaccardPairs
     def sh(df: DataFrame, isBatch: Boolean) = df
       .select(col(idCol).as("id"), TextOps.tokens(col(textCol)).as("toks"))
       .select($"id",
@@ -806,7 +574,7 @@ object Dedup {
     // collect_list skips nulls, so each side's list holds only its own
     // (id, n) structs
     // cross expansion through two codegen'd Generates (explode × explode),
-    // not HOFs — the jaccardPairsUncapped CodegenFallback lesson
+    // not HOFs — the jaccardPairs CodegenFallback lesson
     val crossed = tagged.groupBy($"sh")
       .agg(collect_list(when($"isB", $"e")).as("bs"),
         collect_list(when(!$"isB", $"e")).as("cs"))
@@ -823,37 +591,6 @@ object Dedup {
       .select($"batch_id", $"corpus_id", round($"jaccard", 4).as("jaccard"))
     materializeAndRelease(pairs, Nil)
   }
-
-  /** Incremental MinHash-LSH: near-dup pairs between a new batch and the
-    * corpus via band buckets — [[jaccardPairsAgainst]]'s scale twin, the
-    * q24↔q27 pattern applied to the incremental shape. Candidates arise
-    * only where a batch band bucket meets a corpus band bucket (the
-    * banded corpus signature table is the persistent index in
-    * production; signatures are per-doc, so the increment never changes
-    * corpus signatures), then exact-Jaccard verification over the two
-    * exploded shingle relations — identical hash family to
-    * [[minhashPairs]], so a doc's signature is the same whether computed
-    * incrementally or in a full run.
-    *
-    * @return (batch_id, corpus_id, jaccard), verified >= threshold
-    */
-  def minhashPairsAgainst(
-      batch: DataFrame,
-      corpus: DataFrame,
-      idCol: String,
-      textCol: String,
-      shingleLen: Int = 3,
-      bands: Int = 8,
-      rowsPerBand: Int = 2,
-      threshold: Double = 0.5,
-      maxBucketSize: Int = 0): DataFrame =
-    // persist = false: this one-shot convenience has no release point for
-    // a cached index (the result is lazy); callers probing repeatedly
-    // build a [[minhashIndex]] themselves and release it when done
-    minhashPairsAgainstIndex(batch,
-      minhashIndex(corpus, idCol, textCol, shingleLen, bands, rowsPerBand,
-        persist = false),
-      idCol, textCol, threshold, maxBucketSize)
 
   /** The standing MinHash index over a corpus: the persisted exploded
     * shingle-hash relation (exact verification reads it) and the banded
@@ -901,13 +638,9 @@ object Dedup {
         posexplode(lshBands($"sig", bands, rowsPerBand)).as(Seq("band", "bucket")))
   }
 
-  /** Build the standing [[MinhashIndex]] for a corpus. With
-    * `persist = true` (default) the relations are cached for reuse across
-    * probes — the caller owns the release ([[MinhashIndex.unpersist]]).
-    * `persist = false` is the ONE-SHOT form: nothing is cached (no
-    * release obligation), at the price of the corpus shingle relation
-    * being recomputed by each of its consumers inside a single probe
-    * plan.
+  /** Build the standing [[MinhashIndex]] for a corpus. The relations are
+    * cached for reuse across probes — the caller owns the release
+    * ([[MinhashIndex.unpersist]]).
     */
   def minhashIndex(
       corpus: DataFrame,
@@ -915,17 +648,16 @@ object Dedup {
       textCol: String,
       shingleLen: Int = 3,
       bands: Int = 8,
-      rowsPerBand: Int = 2,
-      persist: Boolean = true): MinhashIndex = {
+      rowsPerBand: Int = 2): MinhashIndex = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    def cached(df: DataFrame): DataFrame = if (persist) df.persist() else df
-    val cEx = cached(shingleHashRelation(corpus, idCol, "corpus_id", textCol,
-      shingleLen))
-    val cBand = cached(bandRelation(cEx, "corpus_id", bands, rowsPerBand))
-    val cSizes = cached(cEx.groupBy($"corpus_id").agg(count(lit(1)).as("nc")))
-    val cBuckets = cached(cBand.groupBy($"band", $"bucket")
-      .agg(count(lit(1)).as("population")))
+    val cEx = shingleHashRelation(corpus, idCol, "corpus_id", textCol,
+      shingleLen).persist()
+    val cBand = bandRelation(cEx, "corpus_id", bands, rowsPerBand).persist()
+    val cSizes = cEx.groupBy($"corpus_id").agg(count(lit(1)).as("nc"))
+      .persist()
+    val cBuckets = cBand.groupBy($"band", $"bucket")
+      .agg(count(lit(1)).as("population")).persist()
     MinhashIndex(cEx, cBand, cSizes, cBuckets, bands, rowsPerBand, shingleLen)
   }
 
@@ -1060,10 +792,15 @@ object Dedup {
     DurableIndex.load(spark, path, pairStore, excludeAppends, pinId)._2.head
 
   /** Probe a standing [[MinhashIndex]] with a new batch — the steady-state
-    * increment cost: shingle + sign + band the BATCH, bucket-join its
-    * bands against the index, exact-verify candidates. Nothing here is
-    * proportional to corpus size except the (pre-built, co-located-in-
-    * production) index joins themselves.
+    * increment cost and [[jaccardPairsAgainst]]'s scale twin: shingle +
+    * sign + band the BATCH, bucket-join its bands against the index,
+    * exact-verify candidates. Nothing here is proportional to corpus size
+    * except the (pre-built, co-located-in-production) index joins
+    * themselves. The hash family is [[minhashPairs]]'s, so a doc's
+    * signature is the same whether computed incrementally or in a full
+    * run.
+    *
+    * @return (batch_id, corpus_id, jaccard), verified >= threshold
     */
   def minhashPairsAgainstIndex(
       batch: DataFrame,
@@ -1079,7 +816,7 @@ object Dedup {
     // bounded recompute beats a cached relation with no release path,
     // which would leak one persisted DataFrame per micro-batch in the
     // streaming caller. The batch's distinct-shingle count `nb` is
-    // computed MAP-SIDE (generate-barrier, the jaccardPairsUncapped
+    // computed MAP-SIDE (generate-barrier, the jaccardPairs
     // shape) and carried through banding and candidates — no separate
     // size aggregate, no size join-back.
     val bEx = batch
@@ -1564,7 +1301,7 @@ object Dedup {
       maxDf: Int = 64): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    // Posting-list form (the jaccardPairsUncapped shape): ONE
+    // Posting-list form (the jaccardPairs shape): ONE
     // groupBy(fp) replaces the previous distinct + df aggregate +
     // df join-back + self-join chain. collect_set dedups a doc's
     // repeated window minima (what the old .distinct() exchange did),
@@ -1599,7 +1336,7 @@ object Dedup {
       maxBucketSize: Int = 0): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    // Posting-list candidates (the jaccardPairsUncapped shape): ONE
+    // Posting-list candidates (the jaccardPairs shape): ONE
     // groupBy(chunk, chunkval) replaces the cap aggregate + join-back
     // and the two-sided chunk self-join; the signature relation now has
     // a single consumer, so its persist is gone too. Sigs ride the

@@ -669,7 +669,7 @@ object SimilaritySearch {
             val p = new org.apache.hadoop.fs.Path(d)
             p.getFileSystem(spark.sparkContext.hadoopConfiguration)
               .delete(p, true)
-          } catch { case _: Throwable => () }
+          } catch { case scala.util.control.NonFatal(_) => () }
         }
         throw t
     }

@@ -90,8 +90,8 @@ object DedupQueries {
 
   private def q24(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    // uncapped (maxPostingList = 0): the fully-exact oracle pin; dirty
-    // corpora should pass a cap (see Dedup.jaccardPairs scaladoc). Goes
+    // the fully-exact oracle pin; dirty corpora use q70's
+    // Dedup.jaccardPairsPrefix (see Dedup.jaccardPairs scaladoc). Goes
     // through the memo: the pair set is shared with q46/q54.
     neardupPairs(s, dir).orderBy($"a_id", $"b_id")
   }
@@ -160,8 +160,9 @@ object DedupQueries {
   // q70 — the SAME exact pair set as q24, via prefix filtering (All-Pairs
   // / PPJoin candidate generation): no hashing, no recall knob, so it
   // shares q24's oracle verbatim. This is the exact-dedup form that
-  // survives boilerplate-heavy corpora without q24's maxPostingList
-  // escape hatch — hot shingles sort to the suffixes and never join.
+  // survives boilerplate-heavy corpora, where q24's hot posting lists
+  // expand quadratically — hot shingles sort to the suffixes and never
+  // join.
   private def q70(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     Dedup.jaccardPairsPrefix(Tables.loadSpread(s, dir, "documents"), "doc_id",

@@ -4,6 +4,8 @@ import java.net.{InetAddress, ServerSocket, Socket}
 import java.nio.charset.StandardCharsets
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 
+import scala.util.control.NonFatal
+
 import graft.OhlcvBar
 
 /** In-process market-data feed for [[Streaming.ingestSocketStream]] /
@@ -103,7 +105,7 @@ final class FeedReplayServer(lines: Seq[String], intervalMs: Long = 0L,
         }
         out.flush()
       }
-    } catch { case _: Throwable => () } // closed mid-replay: session over
+    } catch { case NonFatal(_) => () } // closed mid-replay: session over
     finally drained.countDown()
   }, "feed-replay-server")
   thread.setDaemon(true)
@@ -114,8 +116,8 @@ final class FeedReplayServer(lines: Seq[String], intervalMs: Long = 0L,
     drained.await(timeoutMs, TimeUnit.MILLISECONDS)
 
   def close(): Unit = {
-    try if (client != null) client.close() catch { case _: Throwable => () }
-    try server.close() catch { case _: Throwable => () }
+    try if (client != null) client.close() catch { case NonFatal(_) => () }
+    try server.close() catch { case NonFatal(_) => () }
   }
 }
 

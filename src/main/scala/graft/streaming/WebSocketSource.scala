@@ -3,6 +3,7 @@ package graft.streaming
 import java.nio.charset.StandardCharsets
 
 import scala.collection.mutable.ArrayBuffer
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -245,7 +246,7 @@ private[streaming] class WebSocketMicroBatchStream(host: String, port: Int,
     } catch {
       case _: java.io.EOFException | _: java.net.SocketException => ()
       // disconnect mid-frame or after stop(): normal stream end
-      case e: Throwable =>
+      case NonFatal(e) =>
         // a REFUSED handshake (non-101, digest mismatch) or a protocol
         // violation must be observable, not a silent empty stream
         if (!stopped) System.err.println(
@@ -308,6 +309,6 @@ private[streaming] class WebSocketMicroBatchStream(host: String, port: Int,
 
   override def stop(): Unit = {
     stopped = true
-    try socket.close() catch { case _: Throwable => () }
+    try socket.close() catch { case NonFatal(_) => () }
   }
 }

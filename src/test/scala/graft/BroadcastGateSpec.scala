@@ -257,7 +257,6 @@ class BroadcastGateSpec extends SparkSpec {
     // long-lived session strands another corpus-sized cache set.
     // getPersistentRDDs is the external observable: its registrations
     // must be exactly what they were before the failed calls.
-    import org.apache.spark.sql.functions.col
     val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
     spark.conf.set(BroadcastGate.confKey, "not-a-number")
     try {
@@ -266,15 +265,6 @@ class BroadcastGateSpec extends SparkSpec {
       }
       intercept[IllegalArgumentException] {
         Dedup.minhashPairs(docs, "doc_id", "text", threshold = 0.5)
-      }
-      intercept[IllegalArgumentException] {
-        Dedup.jaccardPairs(docs, "doc_id", "text", threshold = 0.5,
-          maxPostingList = 64)
-      }
-      intercept[IllegalArgumentException] {
-        Dedup.jaccardPairsAgainst(docs.filter(col("doc_id") % 5 === 0),
-          docs.filter(col("doc_id") % 5 =!= 0), "doc_id", "text",
-          threshold = 0.5, maxPostingList = 64)
       }
       // the vector twin: lshPairs registers its normed-vector cache and
       // runs the geometry count before the routing block reads the conf
@@ -317,31 +307,6 @@ class BroadcastGateSpec extends SparkSpec {
     val degraded = withGate(0L) {
       pairSet(Dedup.jaccardPairsPrefix(docs, "doc_id", "text",
         threshold = 0.5))
-    }
-    assert(degraded == hinted && hinted.nonEmpty)
-  }
-
-  test("capped-jaccard recount tail: shuffle degrade == broadcast form") {
-    // maxPostingList > 0 is the branch whose plausible-pair recount
-    // carried the forced broadcast
-    val hinted = pairSet(Dedup.jaccardPairs(docs, "doc_id", "text",
-      threshold = 0.5, maxPostingList = 64))
-    val degraded = withGate(0L) {
-      pairSet(Dedup.jaccardPairs(docs, "doc_id", "text",
-        threshold = 0.5, maxPostingList = 64))
-    }
-    assert(degraded == hinted && hinted.nonEmpty)
-  }
-
-  test("incremental jaccard-vs-corpus recount tail: shuffle degrade == broadcast form") {
-    import org.apache.spark.sql.functions._
-    val batch = docs.filter(col("doc_id") % 5 === 0)
-    val corpus = docs.filter(col("doc_id") % 5 =!= 0)
-    val hinted = pairSet(Dedup.jaccardPairsAgainst(batch, corpus,
-      "doc_id", "text", threshold = 0.5, maxPostingList = 64))
-    val degraded = withGate(0L) {
-      pairSet(Dedup.jaccardPairsAgainst(batch, corpus,
-        "doc_id", "text", threshold = 0.5, maxPostingList = 64))
     }
     assert(degraded == hinted && hinted.nonEmpty)
   }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.functions.{TextOps, VectorOps}
-import graft.operators.{AsOfJoin, Dedup, SimilaritySearch, Skew}
+import graft.operators.{AsOfJoin, Dedup, SimilaritySearch}
 
 /** Unit specs for the custom operators (SURVEY.md §2.3 J5, §2.10). */
 class OperatorsSpec extends SparkSpec {
@@ -527,40 +527,6 @@ class OperatorsSpec extends SparkSpec {
     assert(pref == exact)
   }
 
-  test("jaccardPairs: posting-list cap preserves the pair set on clean data") {
-    val docs = Tables.load(spark, "/root/testdata/sf0.01", "documents")
-    val uncapped = Dedup.jaccardPairs(docs, "doc_id", "text")
-      .as[(Long, Long, Double)].collect().toSet
-    val capped = Dedup.jaccardPairs(docs, "doc_id", "text", maxPostingList = 64)
-      .as[(Long, Long, Double)].collect().toSet
-    // values exact in both (capped recounts over the full relation);
-    // at df-cap 64 this corpus loses nothing
-    assert(capped == uncapped)
-    assert(uncapped.nonEmpty)
-  }
-
-  test("jaccardPairs: cap drops only pairs whose every shared shingle is hot") {
-    // two docs that share ONLY a boilerplate phrase repeated in 10 docs:
-    // the cap (< 10) removes their candidate path; a genuine near-dup
-    // pair (unique overlap) survives with its exact jaccard
-    val boiler = "this content is provided as is without any warranty of fitness"
-    val a = (1 to 30).map(i => s"w$i").mkString(" ")
-    val b = (1 to 28).map(i => s"w$i").mkString(" ") + " x y"
-    val rows = Seq((1L, a), (2L, b)) ++
-      (10L to 19L).map(i => (i, s"unique$i stuff number$i " + boiler))
-    val df = rows.toDF("doc_id", "text")
-    val uncapped = Dedup.jaccardPairs(df, "doc_id", "text", threshold = 0.1)
-      .select($"a_id", $"b_id").as[(Long, Long)].collect().toSet
-    // boilerplate makes every template pair a (low-jaccard) pair
-    assert(uncapped.contains((1L, 2L)) && uncapped.size > 1)
-    val capped = Dedup.jaccardPairs(df, "doc_id", "text", threshold = 0.1,
-        maxPostingList = 5)
-      .as[(Long, Long, Double)].collect()
-    assert(capped.map(r => (r._1, r._2)).toSet == Set((1L, 2L)))
-    // the surviving pair's jaccard is EXACT: 28 shingles each, 26 shared
-    assert(math.abs(capped.head._3 - math.rint(26.0 / 30.0 * 10000) / 10000) < 1e-9)
-  }
-
   test("lsh ANN returns query's bucket neighbors, topped by true nearest") {
     val vecs = (0 until 50).map { i =>
       val angle = i * 0.02
@@ -593,29 +559,6 @@ class OperatorsSpec extends SparkSpec {
       .agg(min($"c"), max($"c")).head()
     assert(math.abs(viaSql.getDouble(0) - 1.0) < 1e-12)
     assert(math.abs(viaSql.getDouble(1) - 1.0) < 1e-12)
-  }
-
-  test("salted aggregation == plain aggregation") {
-    val df = (0 until 1000).map(i => (if (i < 900) "hot" else s"k$i", i.toDouble))
-      .toDF("key", "v") // 90% of rows on one key: the skew shape
-    val plain = df.groupBy($"key")
-      .agg(sum($"v").as("sum_v"), count(lit(1)).as("cnt"))
-      .orderBy($"key").collect().toSeq
-    val salted = Skew.saltedSumCount(df, Seq("key"), "v", salts = 8)
-      .orderBy($"key").collect().toSeq
-    assert(salted.map(r => (r.getString(0), r.getDouble(1), r.getLong(2))) ==
-      plain.map(r => (r.getString(0), r.getDouble(1), r.getLong(2))))
-  }
-
-  test("salted join == plain join") {
-    val big = (0 until 500).map(i => (if (i % 2 == 0) 1L else i.toLong, i))
-      .toDF("k", "payload")
-    val dim = Seq((1L, "one"), (3L, "three"), (5L, "five")).toDF("dk", "name")
-    val plain = big.join(dim, $"k" === $"dk")
-      .select($"payload", $"name").as[(Int, String)].collect().toSet
-    val salted = Skew.saltedJoin(big, dim, "k", "dk", salts = 4)
-      .select($"payload", $"name").as[(Int, String)].collect().toSet
-    assert(salted == plain)
   }
 
   test("fingerprint: stable under small edits, disjoint for unrelated docs") {
@@ -907,9 +850,12 @@ class OperatorsSpec extends SparkSpec {
     val docs = Tables.load(spark, "/root/testdata/sf0.01", "documents")
     val batch = docs.filter($"doc_id" % 8 === 7)
     val corpus = docs.filter($"doc_id" % 8 =!= 7)
-    val lsh = Dedup.minhashPairsAgainst(batch, corpus, "doc_id", "text")
-      .as[(Long, Long, Double)].collect()
-      .map { case (b, c, j) => (b, c) -> j }.toMap
+    val idx = Dedup.minhashIndex(corpus, "doc_id", "text")
+    val lsh =
+      try Dedup.minhashPairsAgainstIndex(batch, idx, "doc_id", "text")
+        .as[(Long, Long, Double)].collect()
+        .map { case (b, c, j) => (b, c) -> j }.toMap
+      finally idx.unpersist()
     val exact = Dedup.jaccardPairsAgainst(batch, corpus, "doc_id", "text")
       .as[(Long, Long, Double)].collect()
       .map { case (b, c, j) => (b, c) -> j }.toMap
@@ -1129,20 +1075,6 @@ class OperatorsSpec extends SparkSpec {
     idx.unpersist()
     assert(inc == full)
     assert(inc.nonEmpty)
-  }
-
-  test("incremental jaccard cap: conservative, exact values, no-op above max df") {
-    val docs = Tables.load(spark, "/root/testdata/sf0.01", "documents")
-    val batch = docs.filter($"doc_id" % 8 === 7)
-    val corpus = docs.filter($"doc_id" % 8 =!= 7)
-    def run(cap: Int) =
-      Dedup.jaccardPairsAgainst(batch, corpus, "doc_id", "text",
-          maxPostingList = cap)
-        .as[(Long, Long, Double)].collect().toSet
-    val uncapped = run(0)
-    val capped = run(16)
-    assert(capped.subsetOf(uncapped)) // full tuples: values stay exact
-    assert(run(100000) == uncapped)   // cap above corpus max df drops nothing
   }
 
   test("winnowing: common substring >= w+n-1 chars shares a fingerprint") {

@@ -184,11 +184,11 @@ object ScaleRun {
 
     // Skewed-join rung (VERDICT r16 #7): a q05-shaped fact⋈dim join at
     // mult× sf0.1 lineitem where ONE key owns ~30% of the fact rows.
-    // Compares plain shuffle join (AQE skew mitigation OFF), plain with
-    // AQE skew mitigation ON, and Skew.saltedJoin — wall plus the
-    // max/median task-time spread (the straggler signature). Broadcast
-    // is disabled: the salted join's documented regime is "small side
-    // too big to broadcast, big side skewed".
+    // Compares plain shuffle join (AQE skew mitigation OFF) with plain
+    // AQE skew mitigation ON — wall plus the max/median task-time spread
+    // (the straggler signature). Broadcast is disabled: the regime is
+    // "small side too big to broadcast, big side skewed", where AQE's
+    // runtime skew split is what the engine relies on.
     if (which == "skewjoin") {
       val sqlf = org.apache.spark.sql.functions
       val li = spark.read.parquet("/root/testdata/sf0.1/lineitem.parquet")
@@ -197,7 +197,7 @@ object ScaleRun {
         li.withColumn("l_orderkey", $"l_orderkey" + lit(i * 1000000000L)))
         .reduce(_ unionAll _)
       // bounded key domain (the dim side must be SMALL relative to the
-      // fact — the salted regime — just not broadcastable here), with
+      // fact, just not broadcastable here), with
       // ~30% of fact rows collapsed onto one hot key
       val keyDomain = 100000L
       val big = big0.withColumn("l_orderkey",
@@ -242,8 +242,6 @@ object ScaleRun {
       }
       spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
       run("plain-noAqeSkew")(big.join(dim, $"l_orderkey" === $"o_orderkey"))
-      run("salted")(operators.Skew.saltedJoin(big, dim,
-        "l_orderkey", "o_orderkey", salts = 32))
       spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
       run("plain-aqeSkew")(big.join(dim, $"l_orderkey" === $"o_orderkey"))
       spark.stop(); return
@@ -757,9 +755,10 @@ object ScaleRun {
     // Skew-bomb for the dedup family: a BOILERPLATE-HEAVY corpus — 80%
     // of long-enough docs share one 22-word template prefix, so the
     // template's ~20 shingles have df ≈ half the corpus (the shared-
-    // header/footer shape real crawls have). The caps' specs run on
-    // clean corpora; this proves the capped paths stay feasible ON the
-    // bomb while recall floors hold: 100 exact-clone pairs per copy are
+    // header/footer shape real crawls have). The specs run on clean
+    // corpora; this proves the dirty-corpus paths (the exact prefix join
+    // and the bucket-capped minhash forms) stay feasible ON the bomb
+    // while recall floors hold: 100 exact-clone pairs per copy are
     // PLANTED (j = 1.0, sharing plenty of cold shingles), and every
     // method must find every planted pair. The template is sized so
     // boiler-only overlap stays BELOW threshold (20 shared shingles vs
@@ -800,28 +799,27 @@ object ScaleRun {
         assert(hit == planted.size,
           s"$name missed ${planted.size - hit} planted clone pairs")
       }
-      timed("jaccardCapped")(operators.Dedup.jaccardPairs(corpus,
-        "doc_id", "text", shingleLen = 3, threshold = 0.5,
-        maxPostingList = 64))
       timed("ppjoin")(operators.Dedup.jaccardPairsPrefix(corpus,
         "doc_id", "text", shingleLen = 3, threshold = 0.5))
       timed("minhashCapped")(operators.Dedup.minhashPairs(corpus,
         "doc_id", "text", threshold = 0.5, maxBucketSize = 500))
       // the INCREMENTAL capped path on the same bomb: the planted
       // clones ARE the increment (ids >= +500000 within each copy),
-      // probed against the standing bombed corpus — every planted pair
-      // crosses sides, so recall must still be 1.0 and the
-      // jaccardPairsAgainst upper-bound-prune/df>1 cuts are exercised
-      // at scale
+      // probed against a standing minhash index of the bombed corpus
+      // with its bucket-population cap — every planted pair crosses
+      // sides, so recall must still be 1.0
       locally {
         val t = System.nanoTime()
-        val res = operators.Dedup.jaccardPairsAgainst(
-            corpus.filter(pmod($"doc_id", lit(1000000L)) >= 500000L),
-            corpus.filter(pmod($"doc_id", lit(1000000L)) < 500000L),
-            "doc_id", "text", shingleLen = 3, threshold = 0.5,
-            maxPostingList = 64)
-          .select($"batch_id", $"corpus_id").as[(Long, Long)]
-          .collect().map { case (b, c) => (c, b) }.toSet
+        val idx = operators.Dedup.minhashIndex(
+          corpus.filter(pmod($"doc_id", lit(1000000L)) < 500000L),
+          "doc_id", "text", shingleLen = 3)
+        val res =
+          try operators.Dedup.minhashPairsAgainstIndex(
+              corpus.filter(pmod($"doc_id", lit(1000000L)) >= 500000L),
+              idx, "doc_id", "text", threshold = 0.5, maxBucketSize = 500)
+            .select($"batch_id", $"corpus_id").as[(Long, Long)]
+            .collect().map { case (b, c) => (c, b) }.toSet
+          finally idx.unpersist()
         val secs = (System.nanoTime() - t) / 1e9
         val hit = planted.count(res.contains)
         println(f"[scale] skewbomb incrementalCapped ${mult}x " +
