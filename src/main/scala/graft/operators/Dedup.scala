@@ -75,7 +75,6 @@ object Dedup {
       persist: Boolean = true): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val numHashes = bands * rowsPerBand
     // With persist = true (default, corpus-scale runs): the expensive
     // narrow relations are cached because each is referenced by several
     // consumers (signature agg, size agg, both verification join sides) —
@@ -90,24 +89,9 @@ object Dedup {
     def cached(d: DataFrame): DataFrame =
       if (persist) { val p = d.persist(); caches += p; p } else d
 
-    // Exploded (id, shingle-hash) relation: each shingle STRING is hashed
-    // exactly once; the numHashes minhash "permutations" re-hash the
-    // fixed-width long (xxhash64(i, h)) inside vectorized min() aggregates.
-    // One shuffle on id; everything upstream is narrow and codegen'd.
-    val shex = cached(df
-      .select(col(idCol).as("id"), TextOps.tokens(col(textCol)).as("toks"))
-      .select($"id",
-        explode(array_distinct(TextOps.shingles($"toks", shingleLen))).as("sh"))
-      .select($"id", xxhash64($"sh").as("h")))
-
-    // per-doc distinct-shingle count rides the signature aggregate (same
-    // exchange — no separate size aggregate, no size join-backs later)
-    val sigCols = (0 until numHashes).map(i =>
-      min(xxhash64(lit(i), $"h")).as(s"mh$i")) :+ count(lit(1)).as("n")
-    val sigs = shex.groupBy($"id")
-      .agg(sigCols.head, sigCols.tail: _*)
-      .select($"id", $"n",
-        array((0 until numHashes).map(i => col(s"mh$i")): _*).as("sig"))
+    // Exploded (id, shingle-hash) relation. One shuffle on id; everything
+    // upstream is narrow and codegen'd.
+    val shex = cached(shingleHashRelation(df, idCol, "id", textCol, shingleLen))
 
     // Bands carry only (id, n, band, bucket) — candidate generation
     // shuffles ints, never shingle sets (which at corpus scale dwarf the
@@ -116,9 +100,11 @@ object Dedup {
     // are filters on the grouped row (the previous cap aggregate +
     // join-back and the bucket self-join disappear), pairs expand
     // map-side through codegen'd Generates, and the cross-band dedup
-    // stays one hash aggregate.
-    val banded = sigs.select($"id", $"n",
-      posexplode(lshBands($"sig", bands, rowsPerBand)).as(Seq("band", "bucket")))
+    // stays one hash aggregate. The per-doc distinct-shingle count rides
+    // the signature aggregate (same exchange — no separate size
+    // aggregate, no size join-backs later).
+    val banded = bandRelation(shex, Seq("id"), bands, rowsPerBand,
+      extra = Seq("n" -> count(lit(1))))
     val cand = postingPairs(banded.groupBy($"band", $"bucket")
         .agg(collect_list(struct($"id", $"n")).as("ps")),
         "ps", maxBucketSize, key = "id")
@@ -137,16 +123,13 @@ object Dedup {
     // cache registration per micro-batch would cost more than it guards.
     releasingOnFailure(caches.toSeq) {
       val candGated = if (persist) gatedPairs(cached(cand)) else broadcast(cand)
-      val pairs = candGated
+      val pairs = jaccardScored(candGated
         .join(shex.select($"id".as("a_id"), $"h"), "a_id")
         .join(shex.select($"id".as("b_id"), $"h".as("h_b")), Seq("b_id"))
         .filter($"h" === $"h_b")
         .groupBy($"a_id", $"b_id", $"na", $"nb")
-        .agg(count(lit(1)).as("inter"))
-        .withColumn("jaccard",
-          $"inter".cast("double") / ($"na" + $"nb" - $"inter"))
-        .filter($"jaccard" >= threshold)
-        .select($"a_id", $"b_id", round($"jaccard", 4).as("jaccard"))
+        .agg(count(lit(1)).as("inter")), ("a_id", "b_id"), ("na", "nb"),
+        threshold)
       // the gate's measuring job already made the corpus path eager at
       // call time — finish the jaccardPairs contract: materialize the
       // (pair-sized) result, release the internal caches, caller owns the
@@ -202,33 +185,49 @@ object Dedup {
       threshold: Double = 0.5): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    // explode(array(...)) is a GENERATE BARRIER: the distinct-shingle
-    // array must become a real (Generate-output) column before size()
-    // and explode() read it twice — an intermediate Project would be
-    // CollapseProject-merged into the tokens projection, inlining
-    // tokens(text) into the shingles lambda and re-tokenizing per
-    // element (the TextOps.shingles trap; measured 18× on this base)
-    val sh = df
-      .select(col(idCol).as("doc_id"), TextOps.tokens(col(textCol)).as("toks"))
-      .select($"doc_id",
-        explode(array(
-          array_distinct(TextOps.shingles($"toks", shingleLen)))).as("arr"))
+    val sh = shingleArrays(df, idCol, "doc_id", textCol, shingleLen)
       .select($"doc_id", size($"arr").cast("long").as("n"),
         explode($"arr").as("sh"))
-    val pairs = postingPairs(sh.groupBy($"sh")
+    val pairs = jaccardScored(postingPairs(sh.groupBy($"sh")
         .agg(collect_list(struct($"doc_id", $"n")).as("ps")), "ps",
         key = "doc_id")
       .groupBy($"a.doc_id".as("a_id"), $"b.doc_id".as("b_id"),
         $"a.n".as("na"), $"b.n".as("nb"))
-      .agg(count(lit(1)).as("inter"))
-      .withColumn("jaccard",
-        $"inter".cast("double") / ($"na" + $"nb" - $"inter"))
-      .filter($"jaccard" >= threshold)
-      .select($"a_id", $"b_id", round($"jaccard", 4).as("jaccard"))
+      .agg(count(lit(1)).as("inter")), ("a_id", "b_id"), ("na", "nb"),
+      threshold)
     // eagerly materialized and cached, caller owns the result's
     // unpersist; no internal caches to release here — nothing upstream
     // is read twice
     materializeAndRelease(pairs, Nil)
+  }
+
+  /** (idAs, arr): each document's distinct shingles as one array column.
+    * explode(array(...)) is a GENERATE BARRIER: the array must become a
+    * real (Generate-output) column before callers read it twice (size()
+    * and explode()) — an intermediate Project would be
+    * CollapseProject-merged into the tokens projection, inlining
+    * tokens(text) into the shingles lambda and re-tokenizing per element
+    * (the TextOps.shingles trap; measured 18× on this base).
+    */
+  private def shingleArrays(df: DataFrame, idCol: String, idAs: String,
+      textCol: String, shingleLen: Int): DataFrame =
+    df.select(col(idCol).as(idAs), TextOps.tokens(col(textCol)).as("toks"))
+      .select(col(idAs), explode(array(
+        array_distinct(TextOps.shingles(col("toks"), shingleLen)))).as("arr"))
+
+  /** The exact-Jaccard tail of the text pair finders: from a relation
+    * carrying the pair's `inter` = |A∩B| and the two distinct-shingle
+    * counts `sizes`, keep the pairs with |A∩B| / (|A| + |B| − |A∩B|) ≥
+    * `threshold` as (ids, jaccard rounded to 4 places).
+    */
+  private def jaccardScored(counted: DataFrame, ids: (String, String),
+      sizes: (String, String), threshold: Double): DataFrame = {
+    val inter = col("inter")
+    counted
+      .withColumn("jaccard",
+        inter.cast("double") / (col(sizes._1) + col(sizes._2) - inter))
+      .filter(col("jaccard") >= threshold)
+      .select(col(ids._1), col(ids._2), round(col("jaccard"), 4).as("jaccard"))
   }
 
   /** Every unordered pair of a grouped posting list, canonicalized —
@@ -506,15 +505,12 @@ object Dedup {
     // join share its blocks.
     val candP = cand.persist()
     releasingOnFailure(Seq(docSets, candP)) {
-      val pairs = gatedPairs(candP)
+      val pairs = jaccardScored(gatedPairs(candP)
         .join(docSets.select($"doc_id".as("a_id"), $"set".as("a_set")), "a_id")
         .join(docSets.select($"doc_id".as("b_id"), $"set".as("b_set")), "b_id")
         .withColumn("inter", graft.functions.SetOps.sortedIntersectCount(
-          spark, $"a_set", $"b_set"))
-        .withColumn("jaccard",
-          $"inter".cast("double") / ($"na" + $"nb" - $"inter"))
-        .filter($"jaccard" >= threshold)
-        .select($"a_id", $"b_id", round($"jaccard", 4).as("jaccard"))
+          spark, $"a_set", $"b_set")), ("a_id", "b_id"), ("na", "nb"),
+        threshold)
       materializeAndRelease(pairs, Seq(docSets, candP))
     }
   }
@@ -560,15 +556,11 @@ object Dedup {
       threshold: Double = 0.5): DataFrame = {
     val spark = batch.sparkSession
     import spark.implicits._
-    // generate-barrier explode(array(...)) as in jaccardPairs
-    def sh(df: DataFrame, isBatch: Boolean) = df
-      .select(col(idCol).as("id"), TextOps.tokens(col(textCol)).as("toks"))
-      .select($"id",
-        explode(array(
-          array_distinct(TextOps.shingles($"toks", shingleLen)))).as("arr"))
-      .select(struct($"id", size($"arr").cast("long").as("n")).as("e"),
-        explode($"arr").as("sh"))
-      .select($"sh", $"e", lit(isBatch).as("isB"))
+    def sh(df: DataFrame, isBatch: Boolean) =
+      shingleArrays(df, idCol, "id", textCol, shingleLen)
+        .select(struct($"id", size($"arr").cast("long").as("n")).as("e"),
+          explode($"arr").as("sh"))
+        .select($"sh", $"e", lit(isBatch).as("isB"))
     val tagged = sh(batch, isBatch = true)
       .unionAll(sh(corpus, isBatch = false))
     // collect_list skips nulls, so each side's list holds only its own
@@ -581,14 +573,11 @@ object Dedup {
       .filter(size($"bs") > 0 && size($"cs") > 0)
       .select($"cs", explode($"bs").as("b"))
       .select($"b", explode($"cs").as("c"))
-    val pairs = crossed
+    val pairs = jaccardScored(crossed
       .groupBy($"b.id".as("batch_id"), $"c.id".as("corpus_id"),
         $"b.n".as("nb"), $"c.n".as("nc"))
-      .agg(count(lit(1)).as("inter"))
-      .withColumn("jaccard",
-        $"inter".cast("double") / ($"nb" + $"nc" - $"inter"))
-      .filter($"jaccard" >= threshold)
-      .select($"batch_id", $"corpus_id", round($"jaccard", 4).as("jaccard"))
+      .agg(count(lit(1)).as("inter")), ("batch_id", "corpus_id"),
+      ("nb", "nc"), threshold)
     materializeAndRelease(pairs, Nil)
   }
 
@@ -613,29 +602,41 @@ object Dedup {
       Seq(shingleHashes, bands, sizes, bucketCounts)
   }
 
-  private def shingleHashRelation(
+  /** (idAs, sh): one row per distinct shingle of each document. */
+  private[graft] def shingleRows(
       df: DataFrame, idCol: String, idAs: String, textCol: String,
-      shingleLen: Int): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
+      shingleLen: Int): DataFrame =
     df.select(col(idCol).as(idAs), TextOps.tokens(col(textCol)).as("toks"))
       .select(col(idAs),
-        explode(array_distinct(TextOps.shingles($"toks", shingleLen))).as("sh"))
-      .select(col(idAs), xxhash64($"sh").as("h"))
-  }
+        explode(array_distinct(TextOps.shingles(col("toks"), shingleLen))).as("sh"))
 
-  private def bandRelation(
-      ex: DataFrame, idAs: String, bands: Int, rowsPerBand: Int): DataFrame = {
-    val spark = ex.sparkSession
-    import spark.implicits._
+  /** (idAs, h): [[shingleRows]] with each shingle string hashed once —
+    * the minhash "permutations" re-hash the fixed-width long
+    * (xxhash64(i, h)) inside vectorized min() aggregates.
+    */
+  private def shingleHashRelation(
+      df: DataFrame, idCol: String, idAs: String, textCol: String,
+      shingleLen: Int): DataFrame =
+    shingleRows(df, idCol, idAs, textCol, shingleLen)
+      .select(col(idAs), xxhash64(col("sh")).as("h"))
+
+  /** MinHash signature + LSH banding of an (id, h) relation: one
+    * aggregate over `keys` computes the bands × rowsPerBand minima (plus
+    * any `extra` aggregates, kept after the keys), and each signature
+    * posexplodes to (keys, extras, band, bucket) rows.
+    */
+  private def bandRelation(ex: DataFrame, keys: Seq[String], bands: Int,
+      rowsPerBand: Int, extra: Seq[(String, Column)] = Nil): DataFrame = {
     val numHashes = bands * rowsPerBand
-    val sigCols = (0 until numHashes).map(i =>
-      min(xxhash64(lit(i), $"h")).as(s"mh$i"))
-    ex.groupBy(col(idAs)).agg(sigCols.head, sigCols.tail: _*)
-      .select(col(idAs),
-        array((0 until numHashes).map(i => col(s"mh$i")): _*).as("sig"))
-      .select(col(idAs),
-        posexplode(lshBands($"sig", bands, rowsPerBand)).as(Seq("band", "bucket")))
+    val aggs = (0 until numHashes).map(i =>
+      min(xxhash64(lit(i), col("h"))).as(s"mh$i")) ++
+      extra.map { case (name, agg) => agg.as(name) }
+    val carried = (keys ++ extra.map(_._1)).map(col)
+    ex.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
+      .select(carried :+
+        array((0 until numHashes).map(i => col(s"mh$i")): _*).as("sig"): _*)
+      .select(carried :+ posexplode(lshBands(col("sig"), bands, rowsPerBand))
+        .as(Seq("band", "bucket")): _*)
   }
 
   /** Build the standing [[MinhashIndex]] for a corpus. The relations are
@@ -653,7 +654,8 @@ object Dedup {
     import spark.implicits._
     val cEx = shingleHashRelation(corpus, idCol, "corpus_id", textCol,
       shingleLen).persist()
-    val cBand = bandRelation(cEx, "corpus_id", bands, rowsPerBand).persist()
+    val cBand = bandRelation(cEx, Seq("corpus_id"), bands, rowsPerBand)
+      .persist()
     val cSizes = cEx.groupBy($"corpus_id").agg(count(lit(1)).as("nc"))
       .persist()
     val cBuckets = cBand.groupBy($"band", $"bucket")
@@ -726,7 +728,7 @@ object Dedup {
     DurableIndex.append(path, minhashStore, appendId, txn) { m =>
       val bEx = shingleHashRelation(batch, idCol, "corpus_id", textCol,
         m("shingleLen").toInt).persist()
-      val bBand = bandRelation(bEx, "corpus_id", m("numBands").toInt,
+      val bBand = bandRelation(bEx, Seq("corpus_id"), m("numBands").toInt,
         m("rowsPerBand").toInt).persist()
       (Seq(bEx, bBand,
         bEx.groupBy(col("corpus_id")).agg(count(lit(1)).as("nc")),
@@ -819,24 +821,12 @@ object Dedup {
     // computed MAP-SIDE (generate-barrier, the jaccardPairs
     // shape) and carried through banding and candidates — no separate
     // size aggregate, no size join-back.
-    val bEx = batch
-      .select(col(idCol).as("batch_id"), TextOps.tokens(col(textCol)).as("toks"))
-      .select($"batch_id",
-        explode(array(
-          array_distinct(TextOps.shingles($"toks", index.shingleLen)))).as("arr"))
+    val bEx = shingleArrays(batch, idCol, "batch_id", textCol, index.shingleLen)
       .select($"batch_id", size($"arr").cast("long").as("nb"),
         explode($"arr").as("sh"))
       .select($"batch_id", $"nb", xxhash64($"sh").as("h"))
-    val numHashes = index.numBands * index.rowsPerBand
-    val sigCols = (0 until numHashes).map(i =>
-      min(xxhash64(lit(i), $"h")).as(s"mh$i"))
-    val bBand = bEx.groupBy($"batch_id", $"nb")
-      .agg(sigCols.head, sigCols.tail: _*)
-      .select($"batch_id", $"nb",
-        array((0 until numHashes).map(i => col(s"mh$i")): _*).as("sig"))
-      .select($"batch_id", $"nb",
-        posexplode(lshBands($"sig", index.numBands, index.rowsPerBand))
-          .as(Seq("band", "bucket")))
+    val bBand = bandRelation(bEx, Seq("batch_id", "nb"), index.numBands,
+      index.rowsPerBand)
     val cBand = index.bands
     val cEx = index.shingleHashes
     // cap by CORPUS bucket population — precomputed in the index and
@@ -875,12 +865,8 @@ object Dedup {
       .join(cExCand, Seq("corpus_id", "h"))
       .groupBy($"batch_id", $"corpus_id", $"nb")
       .agg(count(lit(1)).as("inter"))
-    inter
-      .join(index.sizes, "corpus_id")
-      .withColumn("jaccard",
-        $"inter".cast("double") / ($"nb" + $"nc" - $"inter"))
-      .filter($"jaccard" >= threshold)
-      .select($"batch_id", $"corpus_id", round($"jaccard", 4).as("jaccard"))
+    jaccardScored(inter.join(index.sizes, "corpus_id"),
+      ("batch_id", "corpus_id"), ("nb", "nc"), threshold)
   }
 
   /** 64-bit SimHash of a token array: bit b is set when the sum over tokens
@@ -960,17 +946,18 @@ object Dedup {
     * documented driver-state budget (PQ codebook sample); pass 0 to
     * force pure distributed iteration (specs pinning round counts do).
     *
-    * @param pairs (srcCol, dstCol) undirected edges
+    * @param pairs (a_id, b_id) undirected edges
     * @return (id, component) — component = min node id reachable
     */
   def connectedComponents(
       pairs: DataFrame,
-      srcCol: String = "a_id",
-      dstCol: String = "b_id",
-      maxIter: Int = 50,
-      driverFinishEdges: Long = 2000000L): DataFrame =
-    connectedComponentsStarWithRounds(
-      pairs, srcCol, dstCol, maxIter, driverFinishEdges)._1
+      driverFinishEdges: Long = DriverFinishEdges): DataFrame =
+    connectedComponentsStarWithRounds(pairs, driverFinishEdges)._1
+
+  private val DriverFinishEdges = 2000000L
+
+  /** Star rounds before [[connectedComponents]] gives up as unconverged. */
+  private val CcRoundLimit = 50
 
   /** Large-star/small-star CC with the round count exposed (spec hook:
     * the chain-graph case must converge in ~half the label-prop rounds).
@@ -995,12 +982,8 @@ object Dedup {
     */
   private[graft] def connectedComponentsStarWithRounds(
       pairs: DataFrame,
-      srcCol: String = "a_id",
-      dstCol: String = "b_id",
-      maxIter: Int = 50,
-      driverFinishEdges: Long = 2000000L): (DataFrame, Int) =
-    ccStarImpl(pairs, srcCol, dstCol, maxIter, driverFinishEdges,
-      joinNodes = true)
+      driverFinishEdges: Long = DriverFinishEdges): (DataFrame, Int) =
+    ccStarImpl(pairs, driverFinishEdges, joinNodes = true)
 
   /** MAPPING-ONLY star CC: the (id, component) rows for non-root nodes
     * of real (a ≠ b) edges, WITHOUT the join against the full node
@@ -1011,25 +994,16 @@ object Dedup {
     * full evaluation of the pairs plan inside the RESULT plan, the
     * expensive self-join for inline pair builders — never runs.
     */
-  private[graft] def connectedComponentsMapping(
-      pairs: DataFrame,
-      srcCol: String = "a_id",
-      dstCol: String = "b_id",
-      maxIter: Int = 50,
-      driverFinishEdges: Long = 2000000L): DataFrame =
-    ccStarImpl(pairs, srcCol, dstCol, maxIter, driverFinishEdges,
-      joinNodes = false)._1
+  private[graft] def connectedComponentsMapping(pairs: DataFrame): DataFrame =
+    ccStarImpl(pairs, DriverFinishEdges, joinNodes = false)._1
 
   private def ccStarImpl(
       pairs: DataFrame,
-      srcCol: String,
-      dstCol: String,
-      maxIter: Int,
       driverFinishEdges: Long,
       joinNodes: Boolean): (DataFrame, Int) = {
     val spark = pairs.sparkSession
     import spark.implicits._
-    val raw = pairs.select(col(srcCol).as("a"), col(dstCol).as("b"))
+    val raw = pairs.select(col("a_id").as("a"), col("b_id").as("b"))
     // every node that appears at all (self-pairs included) gets a label
     // (evaluated only on the joinNodes path — Spark plans lazily, so the
     // mapping-only path never runs this extra pass over the pairs plan)
@@ -1116,11 +1090,6 @@ object Dedup {
       unionFindLabels(e.select($"a".cast("long"), $"b".cast("long"))
         .as[(Long, Long)].collect())
 
-    // opt-in per-round profile (System.property graft.cc.profile=1):
-    // rounds are the whole cost of cluster queries, so regressions need
-    // per-phase visibility without a debugger
-    val profile = sys.props.get("graft.cc.profile").contains("1")
-
     // DIRECT driver finish: when ids are integral, probe the canonical
     // edge list with a BOUNDED collect (limit driverFinishEdges + 1 —
     // driver memory stays capped by construction) BEFORE starting the
@@ -1149,8 +1118,6 @@ object Dedup {
         }
       if (head.length <= driverFinishEdges) {
         canonP.unpersist(blocking = false)
-        if (profile) System.err.println(
-          s"[cc] direct driver-finish edges=${head.length}")
         return (finish(unionFindLabels(head)), 0)
       }
     }
@@ -1162,13 +1129,11 @@ object Dedup {
     var converged = false
     var iter = 0
     var hybridLabels: Option[DataFrame] = None
-    while (hybridLabels.isEmpty && !converged && iter < maxIter) {
+    while (hybridLabels.isEmpty && !converged && iter < CcRoundLimit) {
       if (integralIds && driverFinishEdges > 0 && prev._1 <= driverFinishEdges) {
         val mapping = driverUnionFind(canon)
         freeLocalCheckpoint(canon)
         hybridLabels = Some(finish(mapping))
-        if (profile) System.err.println(
-          s"[cc] driver-finish at round $iter edges=${prev._1}")
       } else {
       // checkpoint the large-star intermediate: smallStar references it
       // twice (min agg + join) — unmaterialized it would evaluate the
@@ -1178,12 +1143,9 @@ object Dedup {
       // that materialization — a truncated-lineage checkpoint cannot be
       // recomputed, so unpersisting it while `next` is still un-built
       // would lose the round.
-      val t0 = System.nanoTime()
       val ls = largeStar(canon).localCheckpoint()
-      val t1 = System.nanoTime()
       val next = smallStar(ls).localCheckpoint(false)
       val sum = checksum(next)
-      val t2 = System.nanoTime()
       freeLocalCheckpoint(ls)
       if (sum == prev &&
           next.except(canon).isEmpty && canon.except(next).isEmpty)
@@ -1192,16 +1154,13 @@ object Dedup {
       freeLocalCheckpoint(canon)
       canon = next
       iter += 1
-      if (profile) System.err.println(
-        f"[cc] round $iter ls=${(t1 - t0) / 1e9}%.3fs ss+sum=${(t2 - t1) / 1e9}%.3fs" +
-          f" edges=${sum._1} converged=$converged")
       }
     }
     hybridLabels match {
       case Some(labels) => (labels, iter)
       case None =>
         if (!converged) sys.error(
-          s"connectedComponents (star) did not converge in $maxIter rounds")
+          s"connectedComponents (star) did not converge in $CcRoundLimit rounds")
         // depth-1 forest: non-roots carry (id -> componentMin); roots (and
         // self-pair-only nodes) label themselves
         val mapping = canon.groupBy($"a".as("id")).agg(min($"b").as("__c"))

@@ -119,7 +119,6 @@ object SimilaritySearch {
       k: Int,
       numPlanes: Int = 4,
       excludeId: Option[Long] = None,
-      multiProbe: Boolean = true,
       numTables: Int = 1,
       seed: Long = 42L): DataFrame = {
     val spark = df.sparkSession
@@ -130,8 +129,7 @@ object SimilaritySearch {
         if (p.zip(queryVec).map { case (a, b) => a * b }.sum >= 0) 1L << i else 0L
       }.sum
       val probed: Set[Long] =
-        if (multiProbe) (0 until numPlanes).map(i => qBucket ^ (1L << i)).toSet + qBucket
-        else Set(qBucket)
+        (0 until numPlanes).map(i => qBucket ^ (1L << i)).toSet + qBucket
       lshBucket(spark, v, planes).isInCollection(probed)
     }.reduce(_ || _)
     bruteForceTopK(df.filter(inProbed), idCol, vecCol, queryVec, k, excludeId)
@@ -373,9 +371,7 @@ object SimilaritySearch {
       cand
         .join(e.select($"id".as("a_id"), $"v".as("a_v"), $"nrm".as("a_n")), "a_id")
         .join(e.select($"id".as("b_id"), $"v".as("b_v"), $"nrm".as("b_n")), "b_id")
-        .withColumn("cosine",
-          graft.functions.CosineSimilarity.dotFast(spark, $"a_v", $"b_v") /
-            ($"a_n" * $"b_n"))
+        .withColumn("cosine", normedCosine(spark, "a_v", "b_v", "a_n", "b_n"))
         .filter($"cosine" >= threshold)
         .select($"a_id", $"b_id", round($"cosine", 4).as("cosine"))
     } else {
@@ -432,9 +428,7 @@ object SimilaritySearch {
           n * vecBytes), $"pid0" === $"pid")
         .join(gated(e.select($"id".as("cid"), $"v".as("c_v"), $"nrm".as("c_n")),
           n * vecBytes), $"cid0" === $"cid")
-        .withColumn("cos",
-          graft.functions.CosineSimilarity.dotFast(spark, $"p_v", $"c_v") /
-            ($"p_n" * $"c_n"))
+        .withColumn("cos", normedCosine(spark, "p_v", "c_v", "p_n", "c_n"))
         .filter($"cos" >= threshold)
         .select(least($"pid0", $"cid0").as("a_id"),
           greatest($"pid0", $"cid0").as("b_id"), $"cos")
@@ -867,7 +861,7 @@ object SimilaritySearch {
     * because the probe side must not collide with corpus columns in the
     * verification join.
     */
-  private def normedVectors(
+  private[graft] def normedVectors(
       df: DataFrame, idCol: String, vecCol: String,
       idAs: String, vAs: String, nrmAs: String): DataFrame = {
     val spark = df.sparkSession
@@ -875,6 +869,15 @@ object SimilaritySearch {
       .withColumn(nrmAs,
         sqrt(graft.functions.CosineSimilarity.dotFast(spark, col(vAs), col(vAs))))
   }
+
+  /** Exact cosine of two [[normedVectors]] rows: the fused dot over the
+    * precomputed norms' product — float-identical to the fused cosine
+    * (same op order on the same doubles), with no per-pair norm work.
+    */
+  private[graft] def normedCosine(spark: org.apache.spark.sql.SparkSession,
+      a: String, b: String, na: String, nb: String): Column =
+    graft.functions.CosineSimilarity.dotFast(spark, col(a), col(b)) /
+      (col(na) * col(nb))
 
   /** One (idAs, tbl, bucket) row per hash table under the (seed + table)-
     * derived hyperplanes. Index build, durable append, and probe ALL go
@@ -1135,9 +1138,7 @@ object SimilaritySearch {
       .select($"batch_id", $"corpus_id")
       .join(gated(index.vectors, n * vecBytes), "corpus_id")
       .join(broadcast(b), "batch_id")
-      .withColumn("cos",
-        graft.functions.CosineSimilarity.dotFast(spark, $"bv", $"v") /
-          ($"bnrm" * $"nrm"))
+      .withColumn("cos", normedCosine(spark, "bv", "v", "bnrm", "nrm"))
       .filter($"cos" >= threshold)
       .groupBy($"batch_id", $"corpus_id").agg(first($"cos").as("c0"))
       .select($"batch_id", $"corpus_id", round($"c0", 4).as("cosine"))
@@ -1165,8 +1166,7 @@ object SimilaritySearch {
       m: Int = 8,
       codebookSize: Int = 256,
       iters: Int = 5,
-      seed: Long = 42L,
-      fitSampleCap: Int = 20000): Array[Array[Array[Double]]] = {
+      seed: Long = 42L): Array[Array[Array[Double]]] = {
     // ONE distributed job (a seeded bounded-sample collect); Lloyd's then
     // runs driver-side over the sample. The codebooks are tiny by
     // construction (m × codebookSize × subDim doubles) and each subspace
@@ -1175,13 +1175,7 @@ object SimilaritySearch {
     // codebookSize-way argmin expression) for work smaller than one
     // task's overhead: 27.8 s at sf0.1 vs <1 s local, identical output
     // quality. The full-corpus ENCODE pass stays distributed.
-    val spark = df.sparkSession
-    import spark.implicits._
-    val sample: Array[Array[Double]] = df
-      .select(col(idCol).as("id"), VectorOps.toDoubles(col(vecCol)).as("v"))
-      .orderBy(xxhash64($"id", lit(seed)))
-      .limit(fitSampleCap)
-      .select($"v").as[Seq[Double]].collect().map(_.toArray)
+    val sample = fitSample(df, idCol, vecCol, seed)
     require(sample.nonEmpty, "cannot fit PQ codebooks on an empty corpus")
     val dim = sample.head.length
     require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
@@ -1189,18 +1183,35 @@ object SimilaritySearch {
     (0 until m).map { s =>
       val pts = sample.map(v => java.util.Arrays.copyOfRange(v, s * subDim,
         (s + 1) * subDim))
-      lloydLocal(pts, codebookSize, iters, seed + s)
+      lloyd(pts, kMeansPlusPlus(pts, codebookSize, seed + s), iters)
     }.toArray
   }
 
-  /** Driver-side Lloyd's over an in-memory sample — deterministic: init
-    * is k-means++ D²-weighted seeding driven by a seeded PRNG (a naive
-    * take-first-k init correlates across PQ subspaces — every subspace
-    * would seed from the same sample rows — and measurably costs recall);
-    * empty clusters keep their previous centroid.
+  /** The driver-side fit sample both k-means fits run on: at most
+    * [[fitSampleRows]] vectors, the head of the corpus ordered by
+    * xxhash64(id, seed) — ONE distributed job, deterministic.
     */
-  private def lloydLocal(
-      points: Array[Array[Double]], k: Int, iters: Int,
+  private def fitSample(df: DataFrame, idCol: String, vecCol: String,
+      seed: Long): Array[Array[Double]] = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    df.select(col(idCol).as("id"), VectorOps.toDoubles(col(vecCol)).as("v"))
+      .orderBy(xxhash64($"id", lit(seed)))
+      .limit(fitSampleRows)
+      .select($"v").as[Seq[Double]].collect().map(_.toArray)
+  }
+
+  /** Driver memory bound of a k-means fit: cap × dim doubles (~123 MB at
+    * dim 768).
+    */
+  private val fitSampleRows = 20000
+
+  /** Deterministic k-means++ init for the codebook fits: D²-weighted
+    * seeding driven by a seeded PRNG (a naive take-first-k init
+    * correlates across PQ subspaces — every subspace would seed from the
+    * same sample rows — and measurably costs recall).
+    */
+  private def kMeansPlusPlus(points: Array[Array[Double]], k: Int,
       seed: Long): Array[Array[Double]] = {
     val dim = points.head.length
     val kk = math.min(k, points.length)
@@ -1232,13 +1243,24 @@ object SimilaritySearch {
       }
       c0 += 1
     }
+    init
+  }
+
+  /** Driver-side Lloyd's iterations from `init` over an in-memory sample.
+    * Assignment argmin ties keep the lowest centroid index (the
+    * [[ivfCell]] array_position rule); empty clusters keep their previous
+    * centroid.
+    */
+  private def lloyd(points: Array[Array[Double]], init: Array[Array[Double]],
+      iters: Int): Array[Array[Double]] = {
+    val dim = points.head.length
     var cents = init
     for (_ <- 0 until iters) {
-      val sums = Array.fill(kk)(new Array[Double](dim))
-      val counts = new Array[Long](kk)
+      val sums = Array.fill(cents.length)(new Array[Double](dim))
+      val counts = new Array[Long](cents.length)
       points.foreach { p =>
         var best = 0; var bestD = Double.MaxValue; var c = 0
-        while (c < kk) {
+        while (c < cents.length) {
           var d = 0.0; var i = 0
           while (i < dim) { val t = p(i) - cents(c)(i); d += t * t; i += 1 }
           if (d < bestD) { bestD = d; best = c }
@@ -1248,8 +1270,9 @@ object SimilaritySearch {
         while (i < dim) { sums(best)(i) += p(i); i += 1 }
         counts(best) += 1
       }
-      cents = Array.tabulate(kk) { c =>
-        if (counts(c) > 0) sums(c).map(_ / counts(c)) else cents(c)
+      val prev = cents
+      cents = Array.tabulate(prev.length) { c =>
+        if (counts(c) > 0) sums(c).map(_ / counts(c)) else prev(c)
       }
     }
     cents
@@ -1339,13 +1362,21 @@ object SimilaritySearch {
       excludeId: Option[Long] = None): DataFrame = {
     val spark = encoded.sparkSession
     import spark.implicits._
-    val candIds = pqTopK(encoded, codebooks, queryVec, k * overfetch,
-      excludeId).select($"id")
+    rerankExact(vectors, idCol, vecCol, pqTopK(encoded, codebooks, queryVec,
+      k * overfetch, excludeId).select($"id"), queryVec, k, excludeId)
+  }
+
+  /** Exact cosine top-k over the candidates `candIds` (one `id` column)
+    * of an approximate first stage: only the candidates' raw vectors
+    * are read, through a broadcast join on the (small) id set.
+    */
+  private def rerankExact(vectors: DataFrame, idCol: String, vecCol: String,
+      candIds: DataFrame, queryVec: Array[Double], k: Int,
+      excludeId: Option[Long]): DataFrame =
     bruteForceTopK(
       vectors.join(broadcast(candIds), vectors(idCol) === candIds("id"))
         .drop(candIds("id")),
       idCol, vecCol, queryVec, k, excludeId)
-  }
 
   /** IVF+PQ (Jégou et al. TPAMI'11 §IV): the coarse k-means quantizer
     * partitions the corpus into cells; each vector stores its cell id
@@ -1368,13 +1399,12 @@ object SimilaritySearch {
     * is a one-off narrow pass, unlike the scan-time scoring which stays
     * codegen'd.
     *
-    * Sampling: `fitSampleFraction` thins the fit relation distributed-
-    * side; `fitSampleCap` additionally bounds the DRIVER-side sample the
-    * local Lloyd's runs on (hash-ordered head, so deterministic). Both
-    * fits — centroids and codebooks — see at most `fitSampleCap` vectors
-    * even at fraction 1.0; corpora above the cap get centroids fit on
-    * the sample head (the SemDeDup §3 recipe), which changes the
-    * (declared-approximate) ANN outputs relative to a full fit.
+    * Sampling: both fits — centroids and codebooks — run the local
+    * Lloyd's on the same bounded DRIVER-side sample ([[fitSample]]:
+    * hash-ordered head, so deterministic); corpora above its cap get
+    * centroids fit on the sample head (the SemDeDup §3 recipe), which
+    * changes the (declared-approximate) ANN outputs relative to a full
+    * fit.
     */
   def fitIvfPq(
       df: DataFrame,
@@ -1384,15 +1414,10 @@ object SimilaritySearch {
       m: Int = 8,
       codebookSize: Int = 256,
       iters: Int = 5,
-      seed: Long = 42L,
-      fitSampleFraction: Double = 1.0,
-      fitSampleCap: Int = 20000): IvfPqIndex = {
+      seed: Long = 42L): IvfPqIndex = {
     val spark = df.sparkSession
     import spark.implicits._
-    val fitDf =
-      if (fitSampleFraction < 1.0) df.sample(fitSampleFraction, seed) else df
-    val centroids = fitCentroids(fitDf, idCol, vecCol, numCells, iters, seed,
-      fitSampleCap)
+    val centroids = fitCentroids(df, idCol, vecCol, numCells, iters, seed)
     val centLit = array(centroids.map(planeLit): _*)
     val v = VectorOps.toDoubles(col(vecCol))
     // Persisted TRANSIENTLY: the residual relation (full-corpus centroid
@@ -1412,7 +1437,7 @@ object SimilaritySearch {
     var encoded: DataFrame = null
     BroadcastGate.releasingOnFailure(Seq(residuals) ++ Option(encoded)) {
       val books = fitPqCodebooks(residuals, "id", "res", m, codebookSize,
-        iters, seed + 1000, fitSampleCap)
+        iters, seed + 1000)
       encoded = pqEncode(residuals, "id", "res", books,
         carryCols = Seq("cell")).persist()
       encoded.count() // materialize the (m bytes/row) codes ...
@@ -1438,9 +1463,7 @@ object SimilaritySearch {
     import spark.implicits._
     val m = index.codebooks.length
     val subDim = index.codebooks.head.head.length
-    val qDists = index.centroids.map(c =>
-      c.zip(queryVec).map { case (a, b) => (a - b) * (a - b) }.sum)
-    val probed = qDists.zipWithIndex.sortBy(_._1).take(nprobe).map(_._2)
+    val probed = nearestCells(index.centroids, queryVec, nprobe)
     val fetch = if (rerank.isDefined) k * overfetch else k
     val base = excludeId.fold(index.encoded)(id =>
       index.encoded.filter($"id" =!= id))
@@ -1476,10 +1499,8 @@ object SimilaritySearch {
       .orderBy($"dist2".asc, $"id").limit(fetch)
     rerank match {
       case Some((vectors, idCol, vecCol)) =>
-        bruteForceTopK(
-          vectors.join(broadcast(scored.select($"id")),
-            vectors(idCol) === scored("id")).drop(scored("id")),
-          idCol, vecCol, queryVec, k, excludeId)
+        rerankExact(vectors, idCol, vecCol, scored.select($"id"), queryVec,
+          k, excludeId)
       case None =>
         scored.select($"id", round($"dist2", 4).as("dist2_adc"))
     }
@@ -1502,6 +1523,14 @@ object SimilaritySearch {
         lit(-2.0) + lit(c2)
     }: _*)
 
+  /** The `nprobe` cells whose centroids lie nearest `queryVec` (squared
+    * L2, computed driver-side), nearest first.
+    */
+  private def nearestCells(centroids: Array[Array[Double]],
+      queryVec: Array[Double], nprobe: Int): Array[Int] =
+    centroids.map(c => c.zip(queryVec).map { case (a, b) => (a - b) * (a - b) }.sum)
+      .zipWithIndex.sortBy(_._1).take(nprobe).map(_._2)
+
   /** Nearest-centroid cell id in [0, k). */
   def ivfCell(
       spark: org.apache.spark.sql.SparkSession,
@@ -1515,9 +1544,7 @@ object SimilaritySearch {
     * iterations driver-side over the sample. Init is deterministic and
     * IDENTICAL to the previous distributed form: the k vectors with the
     * smallest xxhash64(id, seed) (they are exactly the head of the
-    * hash-ordered sample). Assignment argmin ties keep the lowest
-    * centroid index (the [[ivfCell]] array_position rule); empty cells
-    * keep their previous centroid.
+    * hash-ordered sample), then [[lloyd]].
     *
     * Why local (optimization guide §1.2 "per-task work" after the
     * distributed shape is right): the previous form paid `iters`
@@ -1528,12 +1555,10 @@ object SimilaritySearch {
     * (q50/q66/q99: 13-26 jobs each); the local form is one job + local
     * math, the exact trade [[fitPqCodebooks]] already made (its comment:
     * 27.8 s distributed vs <1 s local, identical output quality). The
-    * quantizer needs cluster SHAPE, not every point — `fitSampleCap`
-    * bounds driver memory by construction (cap × dim doubles; the
-    * 20k default at dim 768 is ~123 MB); corpora past the cap fit on
-    * the deterministic hash-ordered sample head, the published recipe
-    * (SemDeDup §3: centroids from a sample) and this file's own
-    * `fitSampleFraction` contract.
+    * quantizer needs cluster SHAPE, not every point — the
+    * [[fitSampleRows]] cap bounds driver memory by construction; corpora
+    * past the cap fit on the deterministic hash-ordered sample head, the
+    * published recipe (SemDeDup §3: centroids from a sample).
     */
   def fitCentroids(
       df: DataFrame,
@@ -1541,48 +1566,18 @@ object SimilaritySearch {
       vecCol: String,
       k: Int,
       iters: Int = 5,
-      seed: Long = 42L,
-      fitSampleCap: Int = 20000): Array[Array[Double]] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val sample: Array[Array[Double]] = df
-      .select(col(idCol).as("id"), VectorOps.toDoubles(col(vecCol)).as("v"))
-      .orderBy(xxhash64($"id", lit(seed)))
-      .limit(fitSampleCap)
-      .select($"v").as[Seq[Double]].collect().map(_.toArray)
+      seed: Long = 42L): Array[Array[Double]] = {
+    val sample = fitSample(df, idCol, vecCol, seed)
     if (sample.isEmpty) return Array.empty
-    val dim = sample.head.length
     // loud, not silent: k above the sample size returns FEWER than k
     // centroids (ADVICE r17) — legitimate on tiny fixtures, surprising
     // on a production corpus whose cap truncated the fit sample
     if (k > sample.length)
-      System.err.println(s"[fitCentroids] k=$k exceeds fit sample size " +
-        s"${sample.length} (fitSampleCap=$fitSampleCap): returning " +
-        s"${sample.length} centroids")
-    val kk = math.min(k, sample.length)
-    var centroids: Array[Array[Double]] =
-      sample.take(kk).map(_.clone) // == k smallest xxhash64(id, seed)
-    for (_ <- 0 until iters) {
-      val sums = Array.fill(centroids.length)(new Array[Double](dim))
-      val counts = new Array[Long](centroids.length)
-      sample.foreach { p =>
-        var best = 0; var bestD = Double.MaxValue; var c = 0
-        while (c < centroids.length) {
-          var d = 0.0; var i = 0
-          while (i < dim) { val t = p(i) - centroids(c)(i); d += t * t; i += 1 }
-          if (d < bestD) { bestD = d; best = c }
-          c += 1
-        }
-        var i = 0
-        while (i < dim) { sums(best)(i) += p(i); i += 1 }
-        counts(best) += 1
-      }
-      val prev = centroids
-      centroids = Array.tabulate(prev.length) { c =>
-        if (counts(c) > 0) sums(c).map(_ / counts(c)) else prev(c)
-      }
-    }
-    centroids
+      org.apache.logging.log4j.LogManager.getLogger(getClass).warn(
+        s"fitCentroids k=$k exceeds fit sample size ${sample.length} " +
+          s"(cap $fitSampleRows): returning ${sample.length} centroids")
+    // init == the k smallest xxhash64(id, seed)
+    lloyd(sample, sample.take(k).map(_.clone), iters)
   }
 
   /** IVF (inverted-file) ANN: the k-means cells partition the corpus; a
@@ -1602,8 +1597,7 @@ object SimilaritySearch {
       nprobe: Int = 4,
       iters: Int = 5,
       excludeId: Option[Long] = None,
-      fitSampleFraction: Double = 1.0,
-      fitSampleCap: Int = 20000): DataFrame = {
+      fitSampleFraction: Double = 1.0): DataFrame = {
     // The quantizer needs the corpus's cluster SHAPE, not every point:
     // at 100 TB fit on a seeded sample (k-means centroids converge on a
     // fraction), then the full-corpus pass is assignment only — a narrow
@@ -1611,11 +1605,8 @@ object SimilaritySearch {
     val fitDf =
       if (fitSampleFraction < 1.0) df.sample(fitSampleFraction, seed = 42L)
       else df
-    val centroids = fitCentroids(fitDf, idCol, vecCol, numCells, iters,
-      fitSampleCap = fitSampleCap)
-    val qDists = centroids.map(c =>
-      c.zip(queryVec).map { case (a, b) => (a - b) * (a - b) }.sum)
-    val probed = qDists.zipWithIndex.sortBy(_._1).take(nprobe).map(_._2).toSet
+    val centroids = fitCentroids(fitDf, idCol, vecCol, numCells, iters)
+    val probed = nearestCells(centroids, queryVec, nprobe).toSet
     val celled = df.withColumn("__cell",
       ivfCell(df.sparkSession, VectorOps.toDoubles(col(vecCol)), centroids))
     bruteForceTopK(
@@ -1629,8 +1620,8 @@ object SimilaritySearch {
     * sets, and the cell-bucketed sibling of the LSH-bucketed
     * [[lshPairs]] path.
     *
-    * Pipeline: fit coarse centroids (on a sample at scale —
-    * `fitSampleFraction`), assign every vector its nearest cell (narrow
+    * Pipeline: fit coarse centroids (on the bounded [[fitSample]] at
+    * scale), assign every vector its nearest cell (narrow
     * codegen'd map), generate candidate pairs ONLY within a cell,
     * verify with exact cosine ≥ `threshold`, connect pairs into
     * duplicate groups, and within each group KEEP the member with the
@@ -1659,9 +1650,7 @@ object SimilaritySearch {
       threshold: Double,
       numCells: Int = 16,
       iters: Int = 5,
-      fitSampleFraction: Double = 1.0,
-      seed: Long = 42L,
-      fitSampleCap: Int = 20000): DataFrame = {
+      seed: Long = 42L): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     require(threshold > 0.0 && threshold <= 1.0, s"threshold: $threshold")
@@ -1680,11 +1669,7 @@ object SimilaritySearch {
         s"ids numerically); '$idCol' is " +
         s"${df.schema(idCol).dataType.simpleString} — derive a long id " +
         "(e.g. monotonically_increasing_id or a 64-bit hash) first")
-    val fitDf =
-      if (fitSampleFraction < 1.0) df.sample(fitSampleFraction, seed)
-      else df
-    val centroids = fitCentroids(fitDf, idCol, vecCol, numCells, iters, seed,
-      fitSampleCap)
+    val centroids = fitCentroids(df, idCol, vecCol, numCells, iters, seed)
     val centArr = array(centroids.map(planeLit): _*)
     val celled = df.select(
         col(idCol).cast("long").as("id"),
@@ -1705,8 +1690,7 @@ object SimilaritySearch {
     val b = normed.select($"cell", $"id".as("b_id"), $"v".as("b_v"), $"nrm".as("b_n"))
     val pairs = a.join(b, Seq("cell"))
       .where($"a_id" < $"b_id")
-      .where(graft.functions.CosineSimilarity.dotFast(spark, $"a_v", $"b_v") /
-        ($"a_n" * $"b_n") >= lit(threshold))
+      .where(normedCosine(spark, "a_v", "b_v", "a_n", "b_n") >= lit(threshold))
       .select($"a_id", $"b_id")
     // MAPPING-ONLY labels: the left-join + coalesce below supplies
     // isolated nodes' own-id labels, so the node-universe relation — a

@@ -227,17 +227,14 @@ object DedupQueries {
   private def q43(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     // Per-vector norms are computed ONCE (n rows), so the O(n²/2) pair
-    // loop does only the fused dot product; dot/(norm_a·norm_b) is
-    // float-identical to the fused cosine (same op order on same doubles).
-    val e = Tables.loadSpread(s, dir, "embeddings")
-      .select($"vec_id", VectorOps.toDoubles($"embedding").as("v"))
-      .withColumn("nrm", sqrt(graft.functions.CosineSimilarity.dotFast(s, $"v", $"v")))
+    // loop does only the fused dot product.
+    val e = SimilaritySearch.normedVectors(Tables.loadSpread(s, dir, "embeddings"),
+      "vec_id", "embedding", "vec_id", "v", "nrm")
     val a = e.select($"vec_id".as("a_id"), $"v".as("a_v"), $"nrm".as("a_n"))
     val b = e.select($"vec_id".as("b_id"), $"v".as("b_v"), $"nrm".as("b_n"))
     a.join(b, $"a_id" < $"b_id")
       .withColumn("cosine",
-        graft.functions.CosineSimilarity.dotFast(s, $"a_v", $"b_v") /
-          ($"a_n" * $"b_n"))
+        SimilaritySearch.normedCosine(s, "a_v", "b_v", "a_n", "b_n"))
       .filter($"cosine" >= 0.35)
       .select($"a_id", $"b_id", round($"cosine", 4).as("cosine"))
       .orderBy($"a_id", $"b_id")

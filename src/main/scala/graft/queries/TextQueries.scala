@@ -193,10 +193,8 @@ object TextQueries {
   // semi-join + partial count — no corpus shuffle on the shingle key.
   private def q59(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    def sh(df: DataFrame, idAs: String) = df
-      .select(col("doc_id").as(idAs), TextOps.tokens($"text").as("toks"))
-      .select(col(idAs),
-        explode(array_distinct(TextOps.shingles($"toks", 3))).as("sh"))
+    def sh(df: DataFrame, idAs: String) =
+      graft.operators.Dedup.shingleRows(df, "doc_id", idAs, "text", 3)
     val all = docsSpread(s, dir)
     val bench = sh(all.filter($"doc_id" < 20), "bench_id")
       .select($"sh").distinct()
@@ -231,10 +229,8 @@ object TextQueries {
   // (the audit columns a decontam report needs).
   private def q100(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    def sh(df: DataFrame, idAs: String) = df
-      .select(col("doc_id").as(idAs), TextOps.tokens($"text").as("toks"))
-      .select(col(idAs),
-        explode(array_distinct(TextOps.shingles($"toks", 13))).as("sh"))
+    def sh(df: DataFrame, idAs: String) =
+      graft.operators.Dedup.shingleRows(df, "doc_id", idAs, "text", 13)
     val all = docsSpread(s, dir)
     val bench = sh(all.filter($"doc_id" < 20), "bench_id")
     sh(all.filter($"doc_id" >= 20), "doc_id")

@@ -476,6 +476,12 @@ class OperatorsSpec extends SparkSpec {
       .as[(Long, Long, Double)].collect().toSet
     assert(lsh == exact)
     assert(exact.nonEmpty)
+    // the lazy, uncached form the streaming within-batch pass runs
+    val lazyLsh = Dedup.minhashPairs(docs, "doc_id", "text",
+        shingleLen = 3, bands = 8, rowsPerBand = 2, threshold = 0.5,
+        persist = false)
+      .as[(Long, Long, Double)].collect().toSet
+    assert(lazyLsh == exact)
   }
 
   test("jaccardPairsPrefix == jaccardPairs on sf0.01 (exact, values included)") {

@@ -157,6 +157,30 @@ class PlanSpec extends SparkSpec {
     // proportional — so a shuffle there does not scale with the corpus)
   }
 
+  test("index probe: the batch shingle array is a generate barrier; no lambda re-tokenizes") {
+    // the batch's distinct-shingle array is read twice (size, explode):
+    // explode(array(...)) makes it a Generate output, so the tokenizer
+    // runs once per document — without that barrier CollapseProject
+    // inlines tokens(text) into the shingles lambda, which then splits
+    // the text again for every shingle
+    import org.apache.spark.sql.catalyst.expressions.{LambdaFunction, StringSplit}
+    import org.apache.spark.sql.functions.col
+    val docs = Tables.load(spark, dir, "documents")
+    val idx = graft.operators.Dedup.minhashIndex(
+      docs.filter(col("doc_id") % 8 =!= 7), "doc_id", "text")
+    val probe = graft.operators.Dedup.minhashPairsAgainstIndex(
+      docs.filter(col("doc_id") % 8 === 7), idx, "doc_id", "text")
+    val plan = probe.queryExecution.optimizedPlan
+    idx.unpersist()
+    val exprs = plan.flatMap(_.expressions)
+    def splits(e: org.apache.spark.sql.catalyst.expressions.Expression) =
+      e.find(_.isInstanceOf[StringSplit]).isDefined
+    val lambdas = exprs.flatMap(_.collect { case l: LambdaFunction => l })
+    // the batch side is in the plan: its tokenizer and shingles lambda
+    assert(exprs.exists(splits) && lambdas.nonEmpty, plan)
+    assert(!lambdas.exists(l => splits(l.function)), plan)
+  }
+
   test("q17: as-of join plans as one shuffle + window, no join node") {
     val p = plan("q17_asof_join")
     // union-tagged formulation: no join operator of any kind, and exactly

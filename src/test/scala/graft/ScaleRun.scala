@@ -1365,7 +1365,7 @@ object ScaleRun {
         operators.Dedup.connectedComponents(pairs).count()
       case "ccprofile" =>
         // q55's exact shape: star-CC over the sf0.1 cosine pair set,
-        // with -Dgraft.cc.profile=1 round timings on stderr
+        // timed as a whole
         val p = queries.DedupQueries.cosinePairs(spark, "/root/testdata/sf0.1")
         p.count() // pair build outside the timer: rounds are the target
         val t = System.nanoTime()
