@@ -6,12 +6,19 @@ import java.util.UUID
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.{Path => HadoopPath}
+import org.apache.hadoop.fs.{FileStatus, Path => HadoopPath}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.Resolver
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Cast, Expression, Literal, Predicate}
+import org.apache.spark.sql.execution.datasources.{FileFormat, FileIndex, HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType, TimestampType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, MapType, StringType, StructField, StructType, TimestampType}
 
 import graft.{AssetClass, IngestionStats, OhlcvBar, QueryResult, model}
 
@@ -23,9 +30,14 @@ import graft.{AssetClass, IngestionStats, OhlcvBar, QueryResult, model}
   *
   * Write protocol (S3/S8/S11): data lands in a staging dir, files move into
   * `date=YYYY-MM-DD/` partition dirs, then ONE txn-log commit publishes
-  * them. Readers resolve file lists from the log, never from dir listing —
-  * so concurrent snapshot reads see either all or none of a commit
-  * (SURVEY §7.4-5), and time travel is a log replay (S13).
+  * them with each file's row count, bounds, size and mtime. Readers
+  * resolve file lists from the log and never list a directory: the scan's
+  * file index is the log's snapshot (see `readRels`) — so concurrent
+  * snapshot reads see either all or none of a commit (SURVEY §7.4-5),
+  * planning cost does not grow with a stat per logged file, and time
+  * travel is a log replay (S13). A file without a logged length (a log
+  * written before lengths were recorded, or `addFiles`' pre-commit
+  * constraint check over files not yet in the log) costs one stat.
   *
   * Scale design: writes repartition by the partition key so each task owns
   * whole partitions (no small-file explosion per task); files are clustered
@@ -78,21 +90,14 @@ final class DataLakehouse(
   // row-group statistics for INT96, so every timestamp-range predicate
   // would read every row group — the entire point of clustering event
   // time (linear or z-order) is those stats. Scoped around each write
-  // (set + restore), NOT set globally in the constructor: constructing a
-  // lakehouse must not silently change parquet timestamp encoding for
-  // every other writer sharing the session. (The session conf is still
-  // session-wide for the duration of the write — the narrowest scope
-  // Spark offers for a SQLConf-read-at-write-time setting.)
-  private def withMicrosTimestamps[T](body: => T): T = {
-    val key = "spark.sql.parquet.outputTimestampType"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "TIMESTAMP_MICROS")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+  // (see DataLakehouse.withMicrosTimestamps), NOT set globally in the
+  // constructor: constructing a lakehouse must not silently change
+  // parquet timestamp encoding for every other writer sharing the
+  // session.
+  private def withMicrosTimestamps[T](body: => T): T =
+    DataLakehouse.withMicrosTimestamps(spark)(body)
+
+  import DataLakehouse.AddedMeta
 
   val txnLog = new TxnLog(root)
   private val buffer = ArrayBuffer.empty[OhlcvBar]
@@ -228,10 +233,10 @@ final class DataLakehouse(
     val expected = txnLog.constraintsAt()
     enforceConstraints(withDate, "append", expected)
     val added = stageClusteredWrite(withDate)
-    val (counts, stats, blooms) = commitMeta(added)
+    val meta = commitMeta(added)
     try commitMergedWrite(withDate, "append", expected, added,
-      removed = Nil, requireLive = Nil, batchId = batchId,
-      counts = counts, stats = stats, blooms = blooms, txn = txn)
+      removed = Nil, requireLive = Nil, batchId = batchId, meta = meta,
+      txn = txn)
     catch {
       case _: TxnLog.DuplicateTxnException =>
         // the loser's staged files were already published into live
@@ -260,9 +265,7 @@ final class DataLakehouse(
     */
   private def commitMergedWrite(validated: DataFrame, opName: String,
       expected: Option[String], added: Seq[String], removed: Seq[String],
-      requireLive: Seq[String], batchId: Option[String],
-      counts: Map[String, Long], stats: Map[String, TxnLog.FileStat],
-      blooms: Map[String, Map[String, TxnLog.Bloom]],
+      requireLive: Seq[String], batchId: Option[String], meta: AddedMeta,
       txn: Option[(String, Long)] = None): Long = {
     var expSchema = txnLog.schemaAt()
     var committed = false
@@ -274,7 +277,8 @@ final class DataLakehouse(
           txnLog.commit(added = added, removed = removed, batchId = batchId,
             schemaJson = schemaOut,
             op = if (opName == "append") None else Some(opName),
-            rowCounts = counts, fileStats = stats, blooms = blooms,
+            rowCounts = meta.counts, fileStats = meta.stats,
+            blooms = meta.blooms, fileSizes = meta.sizes,
             requireLive = requireLive,
             expectedConstraints = Some(exp),
             expectedSchema = Some(expSchema),
@@ -309,10 +313,9 @@ final class DataLakehouse(
     enforceConstraints(withDate, "overwrite", expected)
     val removed = txnLog.snapshotFiles()
     val added = stageClusteredWrite(withDate)
-    val (counts, stats, blooms) = commitMeta(added)
     commitMergedWrite(withDate, "overwrite", expected, added,
       removed = removed, requireLive = removed, batchId = None,
-      counts = counts, stats = stats, blooms = blooms)
+      meta = commitMeta(added))
   }
 
   /** Cluster (per `clusterOnWrite`/`zorderCols`), write to a staging dir,
@@ -726,25 +729,25 @@ final class DataLakehouse(
     val expected = txnLog.constraintsAt()
     if (expected.exists(e => TxnLog.decodeConstraints(e).nonEmpty))
       enforceConstraints(readRels(rels, liveSchema), "addFiles", expected)
-    val (counts, stats, blooms) = commitMeta(rels)
-    txnLog.commit(added = rels, rowCounts = counts, fileStats = stats,
-      blooms = blooms, schemaJson = schemaOut,
+    val meta = commitMeta(rels)
+    txnLog.commit(added = rels, rowCounts = meta.counts,
+      fileStats = meta.stats, blooms = meta.blooms, fileSizes = meta.sizes,
+      schemaJson = schemaOut,
       expectedSchema = Some(prevSchema),
       expectedConstraints = Some(expected))
   }
 
-  /** Per-file metadata for freshly published files — row counts AND
-    * (symbol, timestamp) bounds — from ONE parallel footer pass at
-    * COMMIT time (files still page-cache-hot), recorded in the txn log:
-    * queries never re-open footers (scan accounting stays O(log replay)
-    * and file pruning is log-only, the Delta-style skipping of
-    * README.md:131). CSV files contribute a line count and no stats;
-    * footers lacking either column's stats contribute no stats (pruning
-    * treats absent as unskippable).
+  /** Per-file metadata for freshly published files — row counts,
+    * (symbol, timestamp) bounds, length and mtime — from ONE parallel
+    * footer pass at COMMIT time (files still page-cache-hot), recorded in
+    * the txn log: queries never re-open footers (scan accounting stays
+    * O(log replay) and file pruning is log-only, the Delta-style skipping
+    * of README.md:131), and never stat a file (the scan's file index is
+    * built from the logged lengths). CSV files contribute a line count
+    * and no stats; footers lacking either column's stats contribute no
+    * stats (pruning treats absent as unskippable).
     */
-  private def commitMeta(rels: Seq[String])
-      : (Map[String, Long], Map[String, TxnLog.FileStat],
-         Map[String, Map[String, TxnLog.Bloom]]) = {
+  private def commitMeta(rels: Seq[String]): AddedMeta = {
     import java.util.stream.Collectors
     val metas = rels.asJava.parallelStream()
       .collect(Collectors.toMap(
@@ -759,17 +762,25 @@ final class DataLakehouse(
       else BloomSkipping.build(spark, root,
         rels.filterNot(_.endsWith(".csv")), bloomCols, counts,
         bloomFpp, bloomMaxBits)
-    (counts,
+    AddedMeta(counts,
       metas.flatMap { case (k, v) => v._2.map(k -> _) }.toMap,
-      blooms)
+      blooms,
+      metas.map { case (k, v) => k -> v._3 }.toMap)
   }
 
-  private def fileMeta(rel: String): (Long, Option[TxnLog.FileStat]) =
-    if (rel.endsWith(".csv")) (footerRowCount(rel), None)
+  /** Row count, (symbol, ts) bounds when trustworthy, and length + mtime
+    * of one published file. One Hadoop stat gives the length and mtime
+    * (the same call `readRels` falls back to) and opens a parquet footer.
+    */
+  private def fileMeta(rel: String)
+      : (Long, Option[TxnLog.FileStat], TxnLog.FileSize) = {
+    val conf = spark.sessionState.newHadoopConf()
+    val path = new HadoopPath(s"$root/$rel")
+    val st = path.getFileSystem(conf).getFileStatus(path)
+    val size = TxnLog.FileSize(st.getLen, st.getModificationTime)
+    if (rel.endsWith(".csv")) (footerRowCount(rel), None, size)
     else {
-      val conf = spark.sessionState.newHadoopConf()
-      val in = HadoopInputFile.fromPath(new HadoopPath(s"$root/$rel"), conf)
-      val reader = ParquetFileReader.open(in)
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
       try {
         val blocks = reader.getFooter.getBlocks.asScala
         def bounds[T](col: String)(convert: Any => T)(implicit o: Ordering[T])
@@ -810,9 +821,10 @@ final class DataLakehouse(
               _.asInstanceOf[java.lang.Long].longValue())
           } yield TxnLog.FileStat(sMin, sMax, tMin, tMax)
           catch { case scala.util.control.NonFatal(_) => None }
-        (reader.getRecordCount, stat)
+        (reader.getRecordCount, stat, size)
       } finally reader.close()
     }
+  }
 
   /** In-file clustering keys: the Morton z-key over `zorderCols` when
     * configured (min/max ranks computed on `df` itself — one narrow agg
@@ -949,8 +961,13 @@ final class DataLakehouse(
     * set → residual timestamp/symbol filters (pushed to row groups) →
     * deterministic (timestamp, symbol) sort.
     *
+    * Planning is log-only: file list, partition values, lengths and row
+    * counts come from the txn log, so a read lists no directory, stats no
+    * file and starts no job before its own scan (a log written before
+    * lengths were recorded costs one stat per such file).
+    *
     * `totalRowsScanned` (A2) is the row count of the pruned file set, from
-    * parquet footers — metadata-only, no data IO, scales with file count.
+    * the log's commit-time counts — metadata-only, no data IO.
     */
   def query(
       symbol: Option[String] = None,
@@ -962,17 +979,7 @@ final class DataLakehouse(
       eq: Map[String, Any] = Map.empty): QueryResult = {
     val t0 = System.nanoTime()
     require(eq.values.forall(_ != null), "eq lookup values must be non-null")
-    val version = asOfVersion
-      .orElse(asOfTimestampMs.map { ms =>
-        val v = txnLog.versionAsOf(ms)
-        // -1 = before table history. restore() treats it as an error
-        // sentinel; silently resolving it here returned an empty
-        // snapshot, indistinguishable from a genuinely empty table
-        require(v >= 0, s"no committed snapshot at or before " +
-          s"timestamp $ms (table history starts later)")
-        v
-      })
-      .getOrElse(Long.MaxValue)
+    val version = resolveVersion(asOfVersion, asOfTimestampMs)
     val pruned = prunedFiles(symbol, start, end, version, eq)
 
     // Commit-time row counts from the log; footer IO only for files from
@@ -982,17 +989,12 @@ final class DataLakehouse(
 
     // Schema evolution (§1.2): read with the schema RECORDED at the target
     // version — a time-travel read across a later schema change must
-    // deserialize with its own epoch's schema, not today's.
-    val versionSchema = txnLog.schemaAt(version)
-      .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[StructType])
-      .getOrElse(schemaWithDate)
-
-    // Per-file format dispatch via the shared readRels (reference
+    // deserialize with its own epoch's schema, not today's. Per-file
+    // format dispatch via the shared readRels (reference
     // lakehouse.py:469-475 scans mixed parquet/CSV within one partition
-    // dir). A homogeneous table (the norm) takes exactly one branch — no
-    // extra plan nodes vs the single-format read.
-    val base = readRels(pruned, versionSchema, mergeSchema)
+    // dir).
+    val base = readRels(pruned, decodeSchema(txnLog.schemaAt(version)),
+      mergeSchema, version)
 
     val unsorted = (Seq(
       symbol.map(s => col("symbol") === s),
@@ -1016,6 +1018,24 @@ final class DataLakehouse(
 
     QueryResult(filtered, (System.nanoTime() - t0) / 1e6, rowsScanned)
   }
+
+  /** The snapshot a read targets: `asOfVersion`, else the newest version
+    * committed at or before `asOfTimestampMs`, else the head
+    * (`Long.MaxValue`).
+    */
+  private def resolveVersion(asOfVersion: Option[Long],
+      asOfTimestampMs: Option[Long]): Long =
+    asOfVersion
+      .orElse(asOfTimestampMs.map { ms =>
+        val v = txnLog.versionAsOf(ms)
+        // -1 = before table history. restore() treats it as an error
+        // sentinel; silently resolving it here returned an empty
+        // snapshot, indistinguishable from a genuinely empty table
+        require(v >= 0, s"no committed snapshot at or before " +
+          s"timestamp $ms (table history starts later)")
+        v
+      })
+      .getOrElse(Long.MaxValue)
 
   /** Two-stage file pruning for the lakehouse predicate shape, shared by
     * `query()` and `deleteRange()`:
@@ -1086,6 +1106,11 @@ final class DataLakehouse(
 
   /** Register a snapshot as a temp view and run SQL (S12, §3.3).
     *
+    * The view is the snapshot's files under the version's schema,
+    * UNSORTED: a statement without ORDER BY promises no row order, and
+    * `query()`'s global sort would put a range shuffle (or, under its
+    * small-read gate, a single-task coalesce) under every aggregate.
+    *
     * Time travel through SQL (S13): `FROM <table> FOR VERSION AS OF n`
     * pins the view to snapshot n; `FOR TIMESTAMP AS OF
     * 'yyyy-MM-dd HH:mm:ss[.SSS]'` resolves the version by commit time.
@@ -1139,12 +1164,10 @@ final class DataLakehouse(
     require(versions.size + stamps.size <= 1,
       s"at most one FOR VERSION/TIMESTAMP AS OF pin per statement, " +
         s"got versions=$versions timestamps=$stamps")
-    val snapshot =
-      if (versions.nonEmpty) query(asOfVersion = Some(versions.head)).df
-      else if (stamps.nonEmpty)
-        query(asOfTimestampMs =
-          Some(java.sql.Timestamp.valueOf(stamps.head).getTime)).df
-      else query().df
+    val version = resolveVersion(versions.headOption,
+      stamps.headOption.map(java.sql.Timestamp.valueOf(_).getTime))
+    val snapshot = readRels(txnLog.snapshotFiles(version),
+      decodeSchema(txnLog.schemaAt(version)), version = version)
     // strip ONLY the unquoted pin matches, splicing the bare table name
     // back in their place (matches are non-overlapping and disjoint
     // between the two regexes — VERSION vs TIMESTAMP keywords)
@@ -1188,20 +1211,6 @@ final class DataLakehouse(
       .asInstanceOf[StructType])
     .getOrElse(schemaWithDate)
 
-  /** Read a set of live files with per-suffix source dispatch (mixed
-    * parquet/CSV tables read correctly); `basePath` surfaces the Hive
-    * partition columns.
-    */
-  /** Per-file format dispatch (reference lakehouse.py:469-475 scans
-    * mixed parquet/CSV within one partition dir) — THE shared reader for
-    * every path that materializes a rel list (query, changes, merge,
-    * row-ops, addFiles constraint check): the set splits by suffix, each
-    * side reads with its own source, then unions; an empty set yields an
-    * empty frame WITH the schema. `mergeSchema = true` unions the
-    * parquet file schemas so later commits may add columns without
-    * rewrite (§1.2). One implementation — the former per-call-site
-    * copies had already drifted on empty-set and mergeSchema handling.
-    */
   /** Read a commit's ADDED files under the schema recorded at `version`
     * (falling back to the live schema) — the incremental-view delta
     * scan. Same per-file format dispatch as the query path, so CSV
@@ -1210,25 +1219,89 @@ final class DataLakehouse(
     */
   private[sources] def readAddedRels(rels: Seq[String],
       version: Long): DataFrame =
-    readRels(rels, decodeSchema(txnLog.schemaAt(version)))
+    readRels(rels, decodeSchema(txnLog.schemaAt(version)), version = version)
 
+  /** Files whose length the log did not record, stat'ed by a read (a log
+    * written before lengths were recorded; files outside the log) —
+    * instrumentation for the log-only planning specs.
+    */
+  private[graft] val statFallbacks = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** Per-file format dispatch (reference lakehouse.py:469-475 scans
+    * mixed parquet/CSV within one partition dir) — THE shared reader for
+    * every path that materializes a rel list (query, sql, changes, merge,
+    * row-ops, addFiles constraint check): the set splits by suffix and
+    * each side scans a [[LogFileIndex]] of its files under its own file
+    * format, then the sides union; an empty set yields an empty frame
+    * WITH the schema.
+    *
+    * The index is built from the log: lengths and mtimes as recorded at
+    * `version` (a file the log has no length for is stat'ed once),
+    * partition values parsed from the rel paths and typed by `schema`.
+    * Planning therefore lists no directory and stats no file (Spark's
+    * generic file source, given the paths, stats every one and past 32
+    * runs a listing job before the scan). `mergeSchema = true` infers
+    * the parquet side's data schema from its files' footers, so later
+    * commits may add columns without rewrite (§1.2).
+    */
   private def readRels(rels: Seq[String], schema: StructType,
-      mergeSchema: Boolean = false): DataFrame = {
-    val (csvRels, pqRels) = rels.partition(_.endsWith(".csv"))
-    val sides = Seq("parquet" -> pqRels, "csv" -> csvRels)
-      .filter(_._2.nonEmpty)
-      .map { case (fmt, rs) =>
-        val reader =
-          if (mergeSchema && fmt == "parquet")
-            spark.read.option("mergeSchema", "true").option("basePath", root)
-          else spark.read.schema(schema).option("basePath", root)
-        reader.format(fmt).option("header", fmt == "csv")
-          .load(rs.map(r => s"$root/$r"): _*)
-      }
-    if (sides.isEmpty)
-      spark.createDataFrame(
+      mergeSchema: Boolean = false,
+      version: Long = Long.MaxValue): DataFrame = {
+    if (rels.isEmpty)
+      return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else sides.reduce(_.unionByName(_, allowMissingColumns = mergeSchema))
+    val conf = spark.sessionState.newHadoopConf()
+    val rootPath = new HadoopPath(root)
+    val fs = rootPath.getFileSystem(conf)
+    val blockSize = fs.getDefaultBlockSize(rootPath)
+    val resolver = spark.sessionState.conf.resolver
+    val tz = spark.sessionState.conf.sessionLocalTimeZone
+    val logged = txnLog.fileSizesAt(version)
+    val partSchema = StructType(partitionCols.map(c =>
+      schema.find(f => resolver(f.name, c)).getOrElse(StructField(c, StringType))))
+    def partitionRow(rel: String): InternalRow = {
+      val pv = partitionValues(rel)
+      InternalRow.fromSeq(partSchema.fields.toSeq.map { f =>
+        pv.collectFirst { case (k, v) if resolver(k, f.name) => v } match {
+          case None | Some(ExternalCatalogUtils.DEFAULT_PARTITION_NAME) => null
+          case Some(v) => Cast(Literal(v), f.dataType, Some(tz)).eval()
+        }
+      })
+    }
+    def status(rel: String): FileStatus = {
+      val path = fs.makeQualified(new HadoopPath(s"$root/$rel"))
+      logged.get(rel) match {
+        case Some(sz) =>
+          new FileStatus(sz.bytes, false, 1, blockSize, sz.mtimeMs, path)
+        case None =>
+          statFallbacks.incrementAndGet()
+          fs.getFileStatus(path) // a vacuumed file fails loudly here
+      }
+    }
+    def dirOf(rel: String) = rel.take(math.max(0, rel.lastIndexOf('/')))
+    val (csvRels, pqRels) = rels.partition(_.endsWith(".csv"))
+    val sides = Seq[(FileFormat, Seq[String])](
+        new ParquetFileFormat -> pqRels, new CSVFileFormat -> csvRels)
+      .filter(_._2.nonEmpty)
+      .map { case (format, rs) =>
+        val byDir = rs.groupBy(dirOf)
+        val index = new LogFileIndex(fs.makeQualified(rootPath),
+          rs.map(dirOf).distinct.map { d =>
+            PartitionDirectory(partitionRow(byDir(d).head),
+              byDir(d).map(status).toArray)
+          }, partSchema, resolver)
+        val csv = format.isInstanceOf[CSVFileFormat]
+        val dataSchema =
+          if (mergeSchema && !csv)
+            format.inferSchema(spark, Map("mergeSchema" -> "true"),
+              index.allFiles).get
+          else StructType(schema.filterNot(f =>
+            partitionCols.exists(resolver(_, f.name))))
+        spark.baseRelationToDataFrame(HadoopFsRelation(index, partSchema,
+          DataLakehouse.asNullable(dataSchema), None, format,
+          if (csv) Map("header" -> "true") else Map.empty)(spark))
+      }
+    sides.reduce(_.unionByName(_, allowMissingColumns = mergeSchema))
   }
 
   /** Map `input_file_name()`'s URI back to a root-relative path. The URI
@@ -1277,10 +1350,10 @@ final class DataLakehouse(
     val kept = readRels(touched, schema)
       .filter(!coalesce(condition, lit(false)))
     val added = stageClusteredWrite(kept)
-    val (counts, stats, blooms) = commitMeta(added)
+    val meta = commitMeta(added)
     txnLog.commit(added = added, removed = touched,
-      rowCounts = counts, fileStats = stats, blooms = blooms,
-      requireLive = touched)
+      rowCounts = meta.counts, fileStats = meta.stats, blooms = meta.blooms,
+      fileSizes = meta.sizes, requireLive = touched)
     matches.map(_._2).sum
   }
 
@@ -1330,11 +1403,11 @@ final class DataLakehouse(
     val expected = txnLog.constraintsAt()
     enforceConstraints(rewritten, "update", expected)
     val added = stageClusteredWrite(rewritten)
-    val (counts, stats, blooms) = commitMeta(added)
+    val meta = commitMeta(added)
     commitValidated(rewritten, "update", expected) { exp =>
       txnLog.commit(added = added, removed = touched,
-        rowCounts = counts, fileStats = stats, blooms = blooms,
-        requireLive = touched,
+        rowCounts = meta.counts, fileStats = meta.stats, blooms = meta.blooms,
+        fileSizes = meta.sizes, requireLive = touched,
         expectedConstraints = Some(exp))
     }
     matches.map(_._2).sum
@@ -1388,11 +1461,11 @@ final class DataLakehouse(
     val expected = txnLog.constraintsAt()
     enforceConstraints(sourceWithDate, "merge", expected) // the introduced rows
     val added = stageClusteredWrite(newData)
-    val (counts, stats, blooms) = commitMeta(added)
+    val meta = commitMeta(added)
     commitValidated(sourceWithDate, "merge", expected) { exp =>
       txnLog.commit(added = added, removed = touched,
-        rowCounts = counts, fileStats = stats, blooms = blooms,
-        requireLive = touched,
+        rowCounts = meta.counts, fileStats = meta.stats, blooms = meta.blooms,
+        fileSizes = meta.sizes, requireLive = touched,
         expectedConstraints = Some(exp))
     }
     (matches.map(_._2).sum, inserted)
@@ -1457,7 +1530,7 @@ final class DataLakehouse(
       adds ++= publishStaged(staging)
       removes ++= rels
     }
-    val (counts, stats, blooms) = commitMeta(adds.toSeq)
+    val meta = commitMeta(adds.toSeq)
     beforeCommit()
     // requireLive: a concurrent row op (DELETE/UPDATE/MERGE) may have
     // rewritten one of this compaction's INPUT files after the snapshot
@@ -1468,8 +1541,8 @@ final class DataLakehouse(
     // against the new snapshot. (Delta resolves the same race with
     // commit-time conflict detection on rewrites.)
     txnLog.commit(added = adds.toSeq, removed = removes.toSeq,
-      rowCounts = counts, fileStats = stats, blooms = blooms,
-      requireLive = removes.toSeq)
+      rowCounts = meta.counts, fileStats = meta.stats, blooms = meta.blooms,
+      fileSizes = meta.sizes, requireLive = removes.toSeq)
   }
 
   /** Physically delete files no longer referenced by the latest snapshot
@@ -1659,12 +1732,17 @@ final class DataLakehouse(
         .asInstanceOf[StructType])
       .getOrElse(schemaWithDate)
 
+    // lengths as logged where each side's files were live: added ones at
+    // `hi`, removed ones at `fromVersion`
     if (netRemoved.isEmpty)
-      readRels(netAdded, schema).withColumn("_change_type", lit("insert"))
+      readRels(netAdded, schema, version = hi)
+        .withColumn("_change_type", lit("insert"))
     else {
       val cols = schema.fieldNames.toSeq
-      val signed = readRels(netAdded, schema).withColumn("_w", lit(1L))
-        .unionByName(readRels(netRemoved, schema).withColumn("_w", lit(-1L)))
+      val signed = readRels(netAdded, schema, version = hi)
+        .withColumn("_w", lit(1L))
+        .unionByName(readRels(netRemoved, schema, version = fromVersion)
+          .withColumn("_w", lit(-1L)))
       signed.groupBy(cols.map(col): _*)
         .agg(sum(col("_w")).as("_delta"))
         .filter(col("_delta") =!= 0L)
@@ -1778,6 +1856,7 @@ final class DataLakehouse(
       rowCounts = txnLog.rowCountsAt(version).view.filterKeys(reAddSet).toMap,
       fileStats = txnLog.fileStatsAt(version).view.filterKeys(reAddSet).toMap,
       blooms = txnLog.bloomsAt(version).view.filterKeys(reAddSet).toMap,
+      fileSizes = txnLog.fileSizesAt(version).view.filterKeys(reAddSet).toMap,
       requireLive = drop,
       op = Some("restore"),
       // constraints rewind with the rest of the table state; the empty
@@ -1870,6 +1949,7 @@ final class DataLakehouse(
       rowCounts = txnLog.rowCountsAt(v).view.filterKeys(liveSet).toMap,
       fileStats = txnLog.fileStatsAt(v).view.filterKeys(liveSet).toMap,
       blooms = txnLog.bloomsAt(v).view.filterKeys(liveSet).toMap,
+      fileSizes = txnLog.fileSizesAt(v).view.filterKeys(liveSet).toMap,
       op = Some("clone"),
       constraintsJson = txnLog.constraintsAt(v)) // CHECK constraints ride too
     clone
@@ -1906,7 +1986,7 @@ final class DataLakehouse(
         catch { case scala.util.control.NonFatal(_) => None }
       meta match {
         case None => (rel, "unreadable", expected, None)
-        case Some((actualRows, recomputed)) =>
+        case Some((actualRows, recomputed, _)) =>
           if (expected.exists(_ != actualRows))
             (rel, "row_count_mismatch", expected, Some(actualRows))
           else if (stats.get(rel).exists(rec => !recomputed.contains(rec)))
@@ -2021,7 +2101,93 @@ final class DataLakehouse(
   }
 }
 
+/** One snapshot's files as Spark's file index, served from the txn log:
+  * `listFiles` returns the files grouped by partition dir (values parsed
+  * from the rel paths) and applies the scan's partition filters to
+  * those values; `inputFiles` and `sizeInBytes` come from the same
+  * logged records. A snapshot never changes, so `refresh` does nothing.
+  */
+private final class LogFileIndex(root: HadoopPath,
+    dirs: Seq[PartitionDirectory], override val partitionSchema: StructType,
+    resolver: Resolver) extends FileIndex {
+  private val files = dirs.flatMap(_.files)
+  def allFiles: Seq[FileStatus] = files.map(_.fileStatus)
+  override def rootPaths: Seq[HadoopPath] = Seq(root)
+  override def listFiles(partitionFilters: Seq[Expression],
+      dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+    partitionFilters.reduceOption(And) match {
+      case None => dirs
+      case Some(cond) =>
+        val bound = Predicate.createInterpreted(cond.transform {
+          case a: AttributeReference =>
+            val i = partitionSchema.indexWhere(f => resolver(f.name, a.name))
+            BoundReference(i, partitionSchema(i).dataType, nullable = true)
+        })
+        dirs.filter(d => bound.eval(d.values))
+    }
+  override def inputFiles: Array[String] =
+    files.map(_.getPath.toUri.toString).toArray
+  override def refresh(): Unit = ()
+  override def sizeInBytes: Long = files.map(_.getLen).sum
+}
+
 object DataLakehouse {
+  /** Per-file commit metadata of freshly published files, as the txn log
+    * records it.
+    */
+  private final case class AddedMeta(counts: Map[String, Long],
+      stats: Map[String, TxnLog.FileStat],
+      blooms: Map[String, Map[String, TxnLog.Bloom]],
+      sizes: Map[String, TxnLog.FileSize])
+
+  /** Every field (nested too) nullable, as Spark's file sources read a
+    * data schema: a recorded non-null column must still read a file that
+    * lacks it as NULL.
+    */
+  private def asNullable(dt: DataType): StructType = nullable(dt).asInstanceOf[StructType]
+  private def nullable(dt: DataType): DataType = dt match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType),
+      valueContainsNull = true)
+    case other => other
+  }
+
+  private val OutputTimestampType = "spark.sql.parquet.outputTimestampType"
+  // session -> (writers inside withMicrosTimestamps, value to restore)
+  private val microsWriters =
+    new java.util.IdentityHashMap[SparkSession, (Int, Option[String])]()
+
+  /** Run `body` with parquet timestamps written as INT64 micros on
+    * `spark`. The session conf is session-wide, so two writers on one
+    * session share one scope: the first in sets it and remembers the
+    * prior value, the last out restores it — a save/restore per writer
+    * lets interleaved writers plan under the INT96 default (files that
+    * can never be pruned) and leaves micros set for the session after
+    * both exited.
+    */
+  private def withMicrosTimestamps[T](spark: SparkSession)(body: => T): T = {
+    microsWriters.synchronized {
+      val (n, prev) = Option(microsWriters.get(spark))
+        .getOrElse((0, spark.conf.getOption(OutputTimestampType)))
+      if (n == 0) spark.conf.set(OutputTimestampType, "TIMESTAMP_MICROS")
+      microsWriters.put(spark, (n + 1, prev))
+    }
+    try body
+    finally microsWriters.synchronized {
+      val (n, prev) = microsWriters.get(spark)
+      if (n > 1) microsWriters.put(spark, (n - 1, prev))
+      else {
+        microsWriters.remove(spark)
+        prev match {
+          case Some(v) => spark.conf.set(OutputTimestampType, v)
+          case None => spark.conf.unset(OutputTimestampType)
+        }
+      }
+    }
+  }
+
   /** Delta's default `deletedFileRetentionDuration`: 7 days. Files
     * removed more recently than this survive [[DataLakehouse.vacuum]] so
     * in-flight readers of recent snapshots and in-window time travel

@@ -109,6 +109,13 @@ object TxnLog {
     */
   final case class Bloom(m: Int, k: Int, dt: String, bitsB64: String)
 
+  /** Length and modification time of an added file, recorded at commit
+    * time like Delta's AddFile `size`/`modificationTime`: a read builds
+    * its file index from the log alone, with no stat per file. Data
+    * files are immutable once published, so the record never goes stale.
+    */
+  final case class FileSize(bytes: Long, mtimeMs: Long)
+
   /** JSON codec for the constraint map (name -> SQL predicate), shared
     * by writers and readers of `constraintsJson` so the wire form has
     * exactly one definition.
@@ -204,7 +211,7 @@ final class TxnLog(root: String, checkpointInterval: Int = 10,
   private[graft] val commitReads =
     new java.util.concurrent.atomic.AtomicLong(0L)
 
-  import TxnLog.{Bloom, FileStat}
+  import TxnLog.{Bloom, FileSize, FileStat}
 
   final case class Commit(
       version: Long,
@@ -232,7 +239,8 @@ final class TxnLog(root: String, checkpointInterval: Int = 10,
       // merely ENDING in digits must never be inferred monotone — a
       // manual "day-20240616" backfill followed by "day-20240615" would
       // silently drop the second batch)
-      txn: Option[(String, Long)] = None)
+      txn: Option[(String, Long)] = None,
+      fileSizes: Map[String, FileSize] = Map.empty)
 
   private def versionPath(v: Long): Path = logDir.resolve(f"v$v%08d.json")
 
@@ -356,7 +364,8 @@ final class TxnLog(root: String, checkpointInterval: Int = 10,
       Option(node.get("constraintsJson")).filter(!_.isNull).map(_.asText()),
       Option(node.get("txnApp")).filter(!_.isNull).flatMap(a =>
         Option(node.get("txnSeq")).filter(!_.isNull)
-          .map(q => (a.asText(), q.asLong()))))
+          .map(q => (a.asText(), q.asLong()))),
+      readSizes(node))
   }
 
   private def readBlooms(node: JsonNode): Map[String, Map[String, Bloom]] =
@@ -403,6 +412,23 @@ final class TxnLog(root: String, checkpointInterval: Int = 10,
       }
     }
 
+  private def readSizes(node: JsonNode): Map[String, FileSize] =
+    Option(node.get("fileSizes")).map { fs =>
+      fs.fields().asScala.map { e =>
+        e.getKey -> FileSize(e.getValue.get("len").asLong(),
+          e.getValue.get("mtime").asLong())
+      }.toMap
+    }.getOrElse(Map.empty)
+
+  private def writeSizes(node: ObjectNode, sizes: Map[String, FileSize]): Unit =
+    if (sizes.nonEmpty) {
+      val fs: ObjectNode = node.putObject("fileSizes")
+      sizes.foreach { case (k, sz) =>
+        val o = fs.putObject(k)
+        o.put("len", sz.bytes); o.put("mtime", sz.mtimeMs)
+      }
+    }
+
   /** Append a commit; returns the committed version. Retries on version
     * collision (optimistic concurrency via exclusive file creation).
     *
@@ -425,6 +451,7 @@ final class TxnLog(root: String, checkpointInterval: Int = 10,
       rowCounts: Map[String, Long] = Map.empty,
       fileStats: Map[String, FileStat] = Map.empty,
       blooms: Map[String, Map[String, Bloom]] = Map.empty,
+      fileSizes: Map[String, FileSize] = Map.empty,
       requireLive: Seq[String] = Nil,
       op: Option[String] = None,
       constraintsJson: Option[String] = None,
@@ -506,6 +533,7 @@ final class TxnLog(root: String, checkpointInterval: Int = 10,
       }
       writeStats(node, fileStats)
       writeBlooms(node, blooms)
+      writeSizes(node, fileSizes)
       val tmp = Files.createTempFile(logDir, ".commit", ".tmp")
       Files.write(tmp, mapper.writerWithDefaultPrettyPrinter()
         .writeValueAsString(node).getBytes(StandardCharsets.UTF_8))
@@ -842,6 +870,7 @@ final class TxnLog(root: String, checkpointInterval: Int = 10,
       schemaJson: Option[String], rowCounts: Option[Map[String, Long]],
       fileStats: Map[String, FileStat],
       blooms: Map[String, Map[String, Bloom]],
+      fileSizes: Map[String, FileSize],
       constraintsJson: Option[String],
       // Per-app txn high-water (appId -> max DECLARED sequence) plus
       // the exact set of plain batch ids, as of `version` — the Delta
@@ -914,6 +943,7 @@ final class TxnLog(root: String, checkpointInterval: Int = 10,
       rowCountsAt(v).foreach { case (k, n) => if (live(k)) rc.put(k, n) }
       writeStats(node, fileStatsAt(v).view.filterKeys(live).toMap)
       writeBlooms(node, bloomsAt(v).view.filterKeys(live).toMap)
+      writeSizes(node, fileSizesAt(v).view.filterKeys(live).toMap)
       // idempotence state (Delta txn-action analog): the per-app
       // high-water of DECLARED txn=(app, seq) commits keeps the record
       // bounded by app count at any commit rate; plain batch ids are
@@ -1152,6 +1182,7 @@ final class TxnLog(root: String, checkpointInterval: Int = 10,
         counts,
         readStats(node),
         readBlooms(node),
+        readSizes(node),
         Option(node.get("constraintsJson")).filter(!_.isNull).map(_.asText()),
         Option(node.get("txnHighWater")).map { st =>
           st.fields().asScala.map(e => e.getKey -> e.getValue.asLong()).toMap
@@ -1542,17 +1573,8 @@ final class TxnLog(root: String, checkpointInterval: Int = 10,
     * were recorded are simply absent — pruning treats them as
     * unskippable, never wrong.
     */
-  def fileStatsAt(version: Long = Long.MaxValue): Map[String, FileStat] = {
-    val upTo = math.min(currentVersion(), version)
-    latestCheckpoint(upTo) match {
-      case Some(ck) =>
-        (ck.version + 1 to upTo).map(read)
-          .foldLeft(ck.fileStats)((m, c) => m ++ c.fileStats)
-      case None =>
-        (0L to upTo).map(read)
-          .foldLeft(Map.empty[String, FileStat])((m, c) => m ++ c.fileStats)
-    }
-  }
+  def fileStatsAt(version: Long = Long.MaxValue): Map[String, FileStat] =
+    perFileAt(version)(_.fileStats, _.fileStats)
 
   /** Per-file column Bloom filters for the live set at `version`,
     * checkpoint-seeded like [[fileStatsAt]]. Files committed without
@@ -1560,15 +1582,27 @@ final class TxnLog(root: String, checkpointInterval: Int = 10,
     * "might contain" (never prune on a missing filter).
     */
   def bloomsAt(version: Long = Long.MaxValue)
-      : Map[String, Map[String, Bloom]] = {
+      : Map[String, Map[String, Bloom]] =
+    perFileAt(version)(_.blooms, _.blooms)
+
+  /** Per-file length and mtime for the live set at `version`,
+    * checkpoint-seeded like [[fileStatsAt]]. Files committed before
+    * lengths were recorded are simply absent — a read stats each such
+    * file once (never lists a directory).
+    */
+  def fileSizesAt(version: Long = Long.MaxValue): Map[String, FileSize] =
+    perFileAt(version)(_.fileSizes, _.fileSizes)
+
+  /** One per-file record map as of `version`: the newest checkpoint's
+    * map overlaid by each tail commit's, or a full replay without a
+    * checkpoint.
+    */
+  private def perFileAt[V](version: Long)(ofCheckpoint: Checkpoint => Map[String, V],
+      ofCommit: Commit => Map[String, V]): Map[String, V] = {
     val upTo = math.min(currentVersion(), version)
-    latestCheckpoint(upTo) match {
-      case Some(ck) =>
-        (ck.version + 1 to upTo).map(read)
-          .foldLeft(ck.blooms)((m, c) => m ++ c.blooms)
-      case None =>
-        (0L to upTo).map(read)
-          .foldLeft(Map.empty[String, Map[String, Bloom]])((m, c) => m ++ c.blooms)
-    }
+    val (from, seed) = latestCheckpoint(upTo)
+      .map(ck => (ck.version + 1, ofCheckpoint(ck)))
+      .getOrElse((0L, Map.empty[String, V]))
+    (from to upTo).map(read).foldLeft(seed)((m, c) => m ++ ofCommit(c))
   }
 }

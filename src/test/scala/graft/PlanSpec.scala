@@ -300,4 +300,37 @@ class PlanSpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     assert(p.contains("PushedFilters: [IsNotNull(symbol), EqualTo(symbol,AAPL)]"), p)
   }
+
+  test("lake.sql VWAP: no Sort, range Exchange or Coalesce under the aggregate, either side of the sort gate") {
+    import org.apache.spark.sql.functions._
+    import graft.sources.DataLakehouse
+    // query()'s sort gate: at most 1M scanned rows sort in one coalesced
+    // task, more take a range-partitioned global sort. lake.sql's view
+    // must take neither — SQL without ORDER BY promises no order.
+    def lake(rows: Long): DataLakehouse = {
+      val l = new DataLakehouse(spark, tempDir("planvwap"))
+      l.appendDF(spark.range(rows).select(
+        concat(lit("S"), (col("id") % 50).cast("string")).as("symbol"),
+        timestamp_seconds(lit(1718409600L) + (col("id") / 50).cast("long")).as("timestamp"),
+        lit(10.0).as("open"), lit(12.0).as("high"), lit(9.0).as("low"),
+        (lit(10.0) + col("id") % 7).as("close"), (col("id") % 100 + 1).as("volume"),
+        lit(AssetClass.Equity).as("asset_class")))
+      l
+    }
+    val vwap = "SELECT symbol, SUM(close * volume) / SUM(volume) AS vwap " +
+      "FROM trades WHERE date = '2024-06-15' GROUP BY symbol"
+    for ((rows, gate) <- Seq(1000L -> "Coalesce", 1000200L -> "rangepartitioning")) {
+      val l = lake(rows)
+      val q = l.query()
+      assert(q.totalRowsScanned == rows)
+      // the gate side this lake sits on, as query() plans it
+      assert(q.df.queryExecution.executedPlan.toString.contains(gate))
+      val df = l.sql(vwap)
+      val p = df.queryExecution.executedPlan.toString
+      assert("\\bSort\\b".r.findFirstIn(p).isEmpty, p)
+      assert(!p.contains("rangepartitioning"), p)
+      assert(!p.contains("Coalesce"), p)
+      assert(df.count() == 50)
+    }
+  }
 }
