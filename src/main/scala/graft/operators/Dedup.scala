@@ -802,6 +802,26 @@ object Dedup {
     * signature is the same whether computed incrementally or in a full
     * run.
     *
+    * Small-increment contract: an increment is small by definition, so
+    * the batch side is shingled ONCE and each doc signs from its own
+    * shingle-hash array (no aggregate, no exchange), and the result ends
+    * in one partition (a caller's sort is then a local Sort, not a
+    * sampled range exchange). Two broadcasts carry the batch side — its
+    * band rows, each with the doc's shingle hashes, and the expected
+    * (batch_id, corpus_id, nb, h) rows of its candidate pairs — while the
+    * corpus relations stream in parallel; the corpus sizes join as the
+    * planner sees fit (a broadcast only while they are under the
+    * threshold). A warm probe of a small increment against a cached
+    * [[minhashIndex]] is five jobs. An increment past this contract fails
+    * LOUDLY, as a broadcast-build error (the band rows, about
+    * numBands × 8 B per batch shingle, or the expected rows over the
+    * broadcast limit), never as a silent spill: probe it in smaller
+    * slices, or run [[jaccardPairsAgainst]].
+    *
+    * Nothing is persisted: the increment and the probe are recomputed on
+    * every action, so the streaming caller leaks no cached relation per
+    * micro-batch.
+    *
     * @return (batch_id, corpus_id, jaccard), verified >= threshold
     */
   def minhashPairsAgainstIndex(
@@ -813,22 +833,26 @@ object Dedup {
       maxBucketSize: Int = 0): DataFrame = {
     val spark = batch.sparkSession
     import spark.implicits._
-    // NOT persisted: referenced twice in one plan (banding,
-    // verification), but an increment is small by definition — the
-    // bounded recompute beats a cached relation with no release path,
-    // which would leak one persisted DataFrame per micro-batch in the
-    // streaming caller. The batch's distinct-shingle count `nb` is
-    // computed MAP-SIDE (generate-barrier, the jaccardPairs
-    // shape) and carried through banding and candidates — no separate
-    // size aggregate, no size join-back.
-    val bEx = shingleArrays(batch, idCol, "batch_id", textCol, index.shingleLen)
+    // each batch doc's distinct-shingle count `nb` and shingle hashes `hs`
+    // are computed MAP-SIDE and ride the doc's band rows, so the candidate
+    // probe's output carries all the verification needs: no second pass
+    // over the batch, no size aggregate or join-back. `hs` sits behind its
+    // own generate barrier (see [[shingleArrays]]), so the signature and
+    // the explode below read the column instead of re-hashing the array.
+    // A doc with no shingle has no bands (as in the aggregate form), and a
+    // NULL id never pairs (the equi-joins this replaced dropped it).
+    val bDocs = shingleArrays(batch, idCol, "batch_id", textCol,
+        index.shingleLen)
+      .filter($"batch_id".isNotNull && size($"arr") > 0)
       .select($"batch_id", size($"arr").cast("long").as("nb"),
-        explode($"arr").as("sh"))
-      .select($"batch_id", $"nb", xxhash64($"sh").as("h"))
-    val bBand = bandRelation(bEx, Seq("batch_id", "nb"), index.numBands,
-      index.rowsPerBand)
-    val cBand = index.bands
-    val cEx = index.shingleHashes
+        explode(array(transform($"arr", xxhash64(_)))).as("hs"))
+    // the per-doc signature: hash i's minimum over the doc's shingle
+    // hashes, the same xxhash64(i, h) family [[bandRelation]] aggregates
+    val sig = array((0 until index.numBands * index.rowsPerBand).map(i =>
+      array_min(transform($"hs", h => xxhash64(lit(i), h)))): _*)
+    val bBand = bDocs.select($"batch_id", $"nb", $"hs", sig.as("sig"))
+      .select($"batch_id", $"nb", $"hs", posexplode(lshBands($"sig",
+        index.numBands, index.rowsPerBand)).as(Seq("band", "bucket")))
     // cap by CORPUS bucket population — precomputed in the index and
     // applied to the BATCH side: hot buckets are by construction few, so
     // the filter is a broadcast anti join over the (tiny) batch bands
@@ -838,35 +862,31 @@ object Dedup {
           .filter($"population" > maxBucketSize).select($"band", $"bucket")
         bBand.join(broadcast(hot), Seq("band", "bucket"), "left_anti")
       } else bBand
-    // the BATCH bands broadcast (an increment is small by definition):
-    // candidate generation is then a map-side hash probe streaming over
-    // the corpus band index — the standing corpus is never shuffled
-    val cand = cBand
+    // the BATCH bands broadcast: candidate generation is a map-side hash
+    // probe streaming over the corpus band index — the standing corpus is
+    // never shuffled. A pair colliding on k bands comes out k times; the
+    // distinct keys on corpus_id among others, and a cached band index is
+    // partitioned on corpus_id, so it plans with no exchange. Each
+    // candidate pair then expands to one expected row per batch shingle
+    // hash.
+    val expected = index.bands
       .join(broadcast(bCapped), Seq("band", "bucket"))
-      .groupBy($"batch_id", $"corpus_id", $"nb").agg(lit(1))
-      .select($"batch_id", $"corpus_id", $"nb")
-    // verification reads ONLY candidate corpus docs' shingles: the
-    // broadcast semi-join restricts the corpus relation before the big
-    // (corpus_id, h) equi-join, so a mostly-novel increment never
-    // shuffles the standing corpus's shingles (in production, with the
-    // index bucketed on corpus_id, this prunes the scan itself)
-    val cExCand = cEx.join(broadcast(cand.select($"corpus_id").distinct()),
-      "corpus_id")
-    // equi-join on BOTH (corpus_id, h): each surviving row IS one shared
-    // shingle hash — joining on corpus_id alone would cross the batch
-    // doc's shingles with the corpus doc's before filtering.
-    // Deliberately NOT [[gatedPairs]]-gated: cand is bounded by the
-    // increment (batch × matches), small by this function's contract —
-    // a persist+count per micro-batch would cost the streaming caller
-    // more than the gate guards, and the failure mode past the contract
-    // is the loud broadcast-build error, not a silent spill.
-    val inter = broadcast(cand)
-      .join(bEx.select($"batch_id", $"h"), "batch_id")
-      .join(cExCand, Seq("corpus_id", "h"))
+      .select($"batch_id", $"corpus_id", $"nb", $"hs").distinct()
+      .select($"batch_id", $"corpus_id", $"nb", explode($"hs").as("h"))
+    // verification restricts AND counts the corpus shingle hashes against
+    // one broadcast of the expected rows: equi-join on BOTH (corpus_id,
+    // h), so each surviving row IS one shared shingle hash, and only
+    // candidate docs' rows survive the map-side probe (the partial counts
+    // are the one shuffle). Deliberately NOT [[gatedPairs]]-gated: the
+    // expected rows are bounded by the increment (candidates × batch
+    // shingles) — a persist+count per micro-batch would cost the
+    // streaming caller more than the gate guards.
+    val inter = index.shingleHashes
+      .join(broadcast(expected), Seq("corpus_id", "h"))
       .groupBy($"batch_id", $"corpus_id", $"nb")
       .agg(count(lit(1)).as("inter"))
     jaccardScored(inter.join(index.sizes, "corpus_id"),
-      ("batch_id", "corpus_id"), ("nb", "nc"), threshold)
+      ("batch_id", "corpus_id"), ("nb", "nc"), threshold).coalesce(1)
   }
 
   /** 64-bit SimHash of a token array: bit b is set when the sum over tokens

@@ -97,7 +97,7 @@ final class DataLakehouse(
   private def withMicrosTimestamps[T](body: => T): T =
     DataLakehouse.withMicrosTimestamps(spark)(body)
 
-  import DataLakehouse.AddedMeta
+  import DataLakehouse.{AddedMeta, deleteRecursively, walkFiles}
 
   val txnLog = new TxnLog(root)
   private val buffer = ArrayBuffer.empty[OhlcvBar]
@@ -878,51 +878,6 @@ final class DataLakehouse(
       sb.toString
     }
 
-  /** Recursive file walk that tolerates entries VANISHING mid-traversal
-    * — and ONLY that: vacuum walks the whole table root while concurrent
-    * writers publish (and clean) `_staging` dirs, so `Files.walk`'s lazy
-    * stream — which throws UncheckedIOException(NoSuchFileException) on
-    * a vanished entry — crashed live-table maintenance (caught by the
-    * operations soak). A skipped-because-vanished entry is safe for
-    * every caller (it no longer exists to act on). Any OTHER IOException
-    * (permissions, transient device error) rethrows loudly: swallowing
-    * it would silently DROP a real file — publishStaged would publish a
-    * commit missing a staged data file (silent data loss), and vacuum's
-    * completed-pass invariant behind recordVacuumCutoff would record
-    * files as swept that were never seen.
-    */
-  private def walkFiles(p: Path): Seq[Path] = {
-    val out = scala.collection.mutable.ListBuffer.empty[Path]
-    def vanished(e: java.io.IOException): Boolean =
-      e.isInstanceOf[java.nio.file.NoSuchFileException] ||
-        e.isInstanceOf[java.io.FileNotFoundException]
-    Files.walkFileTree(p, new java.nio.file.SimpleFileVisitor[Path] {
-      // pre-order directory entries, matching Files.walk: the recursive
-      // staging delete reverses this list to get children-before-parent
-      override def preVisitDirectory(d: Path,
-          attrs: java.nio.file.attribute.BasicFileAttributes)
-          : java.nio.file.FileVisitResult = {
-        out += d
-        java.nio.file.FileVisitResult.CONTINUE
-      }
-      override def visitFile(f: Path,
-          attrs: java.nio.file.attribute.BasicFileAttributes)
-          : java.nio.file.FileVisitResult = {
-        out += f
-        java.nio.file.FileVisitResult.CONTINUE
-      }
-      override def visitFileFailed(f: Path, e: java.io.IOException)
-          : java.nio.file.FileVisitResult =
-        if (vanished(e)) java.nio.file.FileVisitResult.CONTINUE
-        else throw e // real IO error: a silent skip is silent data loss
-      override def postVisitDirectory(d: Path, e: java.io.IOException)
-          : java.nio.file.FileVisitResult =
-        if (e == null || vanished(e)) java.nio.file.FileVisitResult.CONTINUE
-        else throw e
-    })
-    out.toList
-  }
-
   /** Move staged data files (under their date= dirs) into the table root;
     * returns their relative paths.
     */
@@ -950,9 +905,6 @@ final class DataLakehouse(
     deleteRecursively(stagingPath)
     rels
   }
-
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) walkFiles(p).reverse.foreach(Files.deleteIfExists)
 
   // ----------------------------------------------------------------- query
 
@@ -2187,6 +2139,60 @@ object DataLakehouse {
       }
     }
   }
+
+  /** Recursive file walk that tolerates entries VANISHING mid-traversal
+    * — and ONLY that: vacuum walks the whole table root while concurrent
+    * writers publish (and clean) `_staging` dirs, so `Files.walk`'s lazy
+    * stream — which throws UncheckedIOException(NoSuchFileException) on
+    * a vanished entry — crashed live-table maintenance (caught by the
+    * operations soak). A skipped-because-vanished entry is safe for
+    * every caller (it no longer exists to act on). Any OTHER IOException
+    * (permissions, transient device error) rethrows loudly: swallowing
+    * it would silently DROP a real file — publishStaged would publish a
+    * commit missing a staged data file (silent data loss), and vacuum's
+    * completed-pass invariant behind recordVacuumCutoff would record
+    * files as swept that were never seen. The one recursive walk of
+    * the lake's own directories (vacuum, publish, the streams' per-batch
+    * DLQ/evicted dirs).
+    */
+  private[graft] def walkFiles(p: Path): Seq[Path] = {
+    val out = scala.collection.mutable.ListBuffer.empty[Path]
+    def vanished(e: java.io.IOException): Boolean =
+      e.isInstanceOf[java.nio.file.NoSuchFileException] ||
+        e.isInstanceOf[java.io.FileNotFoundException]
+    Files.walkFileTree(p, new java.nio.file.SimpleFileVisitor[Path] {
+      // pre-order directory entries, matching Files.walk: the recursive
+      // staging delete reverses this list to get children-before-parent
+      override def preVisitDirectory(d: Path,
+          attrs: java.nio.file.attribute.BasicFileAttributes)
+          : java.nio.file.FileVisitResult = {
+        out += d
+        java.nio.file.FileVisitResult.CONTINUE
+      }
+      override def visitFile(f: Path,
+          attrs: java.nio.file.attribute.BasicFileAttributes)
+          : java.nio.file.FileVisitResult = {
+        out += f
+        java.nio.file.FileVisitResult.CONTINUE
+      }
+      override def visitFileFailed(f: Path, e: java.io.IOException)
+          : java.nio.file.FileVisitResult =
+        if (vanished(e)) java.nio.file.FileVisitResult.CONTINUE
+        else throw e // real IO error: a silent skip is silent data loss
+      override def postVisitDirectory(d: Path, e: java.io.IOException)
+          : java.nio.file.FileVisitResult =
+        if (e == null || vanished(e)) java.nio.file.FileVisitResult.CONTINUE
+        else throw e
+    })
+    out.toList
+  }
+
+  /** Delete `p` and everything under it, children before parents;
+    * entries that vanish meanwhile (another attempt of the same batch
+    * clearing the same dir) are skipped, as [[walkFiles]] describes.
+    */
+  private[graft] def deleteRecursively(p: Path): Unit =
+    if (Files.exists(p)) walkFiles(p).reverse.foreach(Files.deleteIfExists)
 
   /** Delta's default `deletedFileRetentionDuration`: 7 days. Files
     * removed more recently than this survive [[DataLakehouse.vacuum]] so

@@ -349,42 +349,41 @@ object Streaming {
     require(maxEventsPerTrigger.forall(c => c > 0 && c <= Int.MaxValue),
       s"maxEventsPerTrigger out of (0, Int.MaxValue]: $maxEventsPerTrigger")
     val evictDir = s"${lake.root}/_evicted/batch=$streamId-$batchId"
-    val (admitted, ranked) = maxEventsPerTrigger match {
-      case Some(cap) if batch.count() > cap =>
-        // newest-wins ring semantics; xxhash64 over the full row breaks
-        // equal-timestamp ties deterministically, so a replayed batch
-        // admits the IDENTICAL row set (exactly-once composes). ONE
-        // row_number ranking pass splits keep/evict (the former
-        // sort+limit then exceptAll re-sorted the batch twice more);
-        // the no-partition window is bounded because file/byte admission
-        // caps the batch before the ring sees it.
-        val allCols = batch.columns.map(col)
-        val w = org.apache.spark.sql.expressions.Window.orderBy(
-          col("timestamp").desc, xxhash64(allCols.toIndexedSeq: _*))
-        val r = batch.withColumn("_rk", row_number().over(w)).persist()
-        // the eviction write runs before the admission try/finally owns
-        // `r` — release it here if that write fails (the batch retries)
-        graft.operators.BroadcastGate.releasingOnFailure(Seq(r)) {
+    // every relation persisted for the batch's lifetime, released in the
+    // one finally below
+    val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def cache(df: DataFrame): DataFrame = { cached += df.persist(); df }
+    try {
+      // the batch is read up to four times below (the ring's count, the
+      // invalid-emptiness probe, the DLQ write, appendDF) — unpersisted,
+      // each read re-runs the FULL upstream parse (FIX/CSV incl. the
+      // checksum kernel) per micro-batch; cached, the first read parses
+      // and the rest (the ranking pass too) read the cache
+      val parsed = cache(batch)
+      val admitted = maxEventsPerTrigger match {
+        case Some(cap) if parsed.count() > cap =>
+          // newest-wins ring semantics; xxhash64 over the full row
+          // breaks equal-timestamp ties deterministically, so a replayed
+          // batch admits the IDENTICAL row set (exactly-once composes).
+          // ONE row_number ranking pass splits keep/evict; the
+          // no-partition window is bounded because file/byte admission
+          // caps the batch before the ring sees it.
+          val allCols = parsed.columns.map(col)
+          val w = org.apache.spark.sql.expressions.Window.orderBy(
+            col("timestamp").desc, xxhash64(allCols.toIndexedSeq: _*))
+          val r = cache(parsed.withColumn("_rk", row_number().over(w)))
           r.filter(col("_rk") > cap).drop("_rk")
             .withColumn("_evicted_at", current_timestamp())
             .write.mode("overwrite").parquet(evictDir)
-        }
-        (r.filter(col("_rk") <= cap.toInt).drop("_rk"), Some(r))
-      case _ =>
-        // a REPLAYED batch that is no longer over the cap (cap raised,
-        // source shrank, cap removed) must clear the previous attempt's
-        // _evicted dir, or evictedCount counts rows that were in fact
-        // admitted this time
-        deleteDirIfExists(evictDir)
-        (batch, None)
-    }
-    // the admitted plan is executed up to three times below (the
-    // invalid-emptiness probe, the DLQ write, appendDF) — unpersisted,
-    // each execution re-runs the FULL upstream parse (FIX/CSV incl. the
-    // checksum kernel) per micro-batch; cache it for the batch's
-    // lifetime and release in the same finally that owns `ranked`
-    admitted.persist()
-    try {
+          r.filter(col("_rk") <= cap.toInt).drop("_rk")
+        case _ =>
+          // a REPLAYED batch that is no longer over the cap (cap raised,
+          // source shrank, cap removed) must clear the previous attempt's
+          // _evicted dir, or evictedCount counts rows that were in fact
+          // admitted this time
+          DataLakehouse.deleteRecursively(java.nio.file.Paths.get(evictDir))
+          parsed
+      }
       // coalesce: a row with NULL constraint fields (e.g. a malformed
       // feed line parsed permissively) must land in the DLQ — with bare
       // `!barValid` its three-valued NULL fails BOTH filters and the row
@@ -407,27 +406,14 @@ object Streaming {
         // whose invalid set became empty (ring cap now evicts what the
         // first attempt dead-lettered) must clear the previous attempt's
         // DLQ partition or those rows double-count against _evicted
-        deleteDirIfExists(dlqDir)
+        DataLakehouse.deleteRecursively(java.nio.file.Paths.get(dlqDir))
       // txn declares the per-stream monotone epoch (Delta txn action):
       // replays no-op against the checkpoint-carried high-water; the
       // batchId string stays for the audit trail
       lake.appendDF(valid, batchId = Some(s"$streamId-$batchId"),
         txn = Some((streamId, batchId)))
       ()
-    } finally {
-      admitted.unpersist(blocking = false)
-      ranked.foreach(_.unpersist(blocking = false))
-    }
-  }
-
-  private def deleteDirIfExists(dir: String): Unit = {
-    val p = java.nio.file.Paths.get(dir)
-    if (java.nio.file.Files.isDirectory(p)) {
-      val files = java.nio.file.Files.walk(p)
-      try files.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => java.nio.file.Files.deleteIfExists(f))
-      finally files.close()
-    }
+    } finally cached.foreach(_.unpersist(blocking = false))
   }
 
   /** Rows evicted by ring-buffer admission across all batches (the
@@ -440,18 +426,9 @@ object Streaming {
     // batch=… subdir deleted, parent left): reading it would throw
     // schema-inference AnalysisException instead of answering 0
     // the walk and the scan both race the replay hygiene's per-batch
-    // deleteDirIfExists: a vanished entry answers 0/lower, never throws
-    def hasFile: Boolean = {
-      val s = java.nio.file.Files.walk(dir)
-      try s.anyMatch(p => java.nio.file.Files.isRegularFile(p) &&
-        p.toString.endsWith(".parquet"))
-      catch {
-        case e: java.io.UncheckedIOException
-            if e.getCause.isInstanceOf[java.nio.file.NoSuchFileException] =>
-          false
-      }
-      finally s.close()
-    }
+    // delete: a vanished entry answers 0/lower, never throws
+    def hasFile: Boolean = DataLakehouse.walkFiles(dir).exists(p =>
+      p.toString.endsWith(".parquet") && java.nio.file.Files.isRegularFile(p))
     if (java.nio.file.Files.isDirectory(dir) && hasFile)
       try lake.spark.read.option("ignoreMissingFiles", "true")
         .parquet(s"${lake.root}/_evicted").count()
@@ -849,7 +826,7 @@ object Streaming {
     // staging residue from a crashed prior run was never reader-visible:
     // sweep it before this run stages its own
     listQuoteDirs(root, "_staged-base-")
-      .foreach(d => deleteDirIfExists(d.toString))
+      .foreach(DataLakehouse.deleteRecursively)
     // deferred deletion: partitions tombstoned by a PREVIOUS run and out
     // of retention go now — any scan still holding them listed before
     // that run's rename and has since had the full retention window
@@ -857,7 +834,7 @@ object Streaming {
     listQuoteDirs(root, "append=").foreach { d =>
       val ts = d.resolve(QuoteSupersededMarker)
       if (Files.exists(ts) && Files.getLastModifiedTime(ts).toMillis <= cutoff)
-        deleteDirIfExists(d.toString)
+        DataLakehouse.deleteRecursively(d)
     }
     // supersede set: committed partitions only (rule 2 above) — prior
     // base-* included; this run's replacement is created after the

@@ -2,13 +2,11 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
-import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import graft.sources.DataLakehouse
 
@@ -20,39 +18,11 @@ import graft.sources.DataLakehouse
   */
 class LakeReadSpec extends SparkSpec {
 
-  private val groups = new ConcurrentLinkedQueue[String]()
-  private lazy val listener = {
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
-    }
-    spark.sparkContext.addSparkListener(l)
-    l
-  }
+  private lazy val counter = new JobCounter(spark)
 
   override def afterAll(): Unit = {
-    spark.sparkContext.removeSparkListener(listener)
+    counter.close()
     super.afterAll()
-  }
-
-  /** `body`'s result and the jobs it started. A marker job after it
-    * proves the listener has seen every earlier job start (one listener
-    * queue delivers events in order).
-    */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    listener
-    val sc = spark.sparkContext
-    val tag = s"probe-${java.util.UUID.randomUUID()}"
-    sc.setJobGroup(tag, "planning probe")
-    val out = try body finally sc.clearJobGroup()
-    sc.setJobGroup(s"$tag-end", "marker")
-    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-    while (!groups.contains(s"$tag-end") && System.nanoTime() < deadline)
-      Thread.sleep(10)
-    assert(groups.contains(s"$tag-end"), "listener never saw the marker job")
-    (out, groups.asScala.count(_ == tag))
   }
 
   private def bar(sym: String, day: Int, minute: Int) = OhlcvBar(sym,
@@ -85,11 +55,11 @@ class LakeReadSpec extends SparkSpec {
     val snapshot = lake.txnLog.snapshotFiles().toSet
     assert(snapshot.size == 42)
 
-    val (all, j1) = jobsDuring(lake.query())
-    val (aapl, j2) = jobsDuring(lake.query(symbol = Some("AAPL")))
-    val (vwap, j3) = jobsDuring(lake.sql(
+    val (all, j1) = counter.during(lake.query())
+    val (aapl, j2) = counter.during(lake.query(symbol = Some("AAPL")))
+    val (vwap, j3) = counter.during(lake.sql(
       "SELECT symbol, SUM(close * volume) / SUM(volume) AS vwap FROM trades GROUP BY symbol"))
-    val (view, j4) = jobsDuring(lake.sql("SELECT * FROM trades"))
+    val (view, j4) = counter.during(lake.sql("SELECT * FROM trades"))
     assert((j1, j2, j3, j4) == ((0, 0, 0, 0)))
 
     assert(rels(lake, all.df) == snapshot)
@@ -136,12 +106,12 @@ class LakeReadSpec extends SparkSpec {
 
     val lake = new DataLakehouse(spark, root) // cold log caches
     assert(lake.txnLog.fileSizesAt().isEmpty)
-    val (q, jobs) = jobsDuring(lake.query())
+    val (q, jobs) = counter.during(lake.query())
     assert(jobs == 0)
     assert(lake.statFallbacks.get() == 12) // one stat per live file
     assert(rowsOf(q.df) == before)
     assert(rowsOf(lake.query(asOfVersion = Some(v4)).df) == before4)
-    val (sqlDf, sqlJobs) = jobsDuring(lake.sql("SELECT * FROM trades"))
+    val (sqlDf, sqlJobs) = counter.during(lake.sql("SELECT * FROM trades"))
     assert(sqlJobs == 0)
     assert(rowsOf(sqlDf) == before)
 

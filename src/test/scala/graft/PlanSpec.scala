@@ -181,6 +181,59 @@ class PlanSpec extends SparkSpec {
     assert(!lambdas.exists(l => splits(l.function)), plan)
   }
 
+  /** The exchanges q63's own executed plan ran (after the action, so
+    * AQE's final plan; the cached index's build plans are not part of
+    * the probe), one rendered node each.
+    */
+  private def q63Exchanges(sfDir: String): Seq[String] = {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.Exchange
+    val df = SparkEntry.queries("q63_incremental_minhash")(spark, sfDir)
+    df.collect()
+    object Aqe extends AdaptiveSparkPlanHelper
+    Aqe.collect(df.queryExecution.executedPlan) { case e: Exchange => e.simpleString(200) }
+  }
+
+  test("q63: the increment reads unspread and the probe result sorts locally") {
+    val ex = q63Exchanges(dir)
+    // the increment stays in one partition (no round-robin spread of the
+    // batch), and the one-partition result needs no sampled range
+    // exchange for q63's orderBy
+    assert(!ex.exists(_.contains("Exchange RoundRobinPartitioning")), ex.mkString("\n"))
+    assert(!ex.exists(_.contains("Exchange rangepartitioning")), ex.mkString("\n"))
+  }
+
+  test("q63: the corpus shingle hashes never shuffle on (corpus_id, h)") {
+    // verification probes the cached corpus shingles against ONE
+    // broadcast of the expected rows — a (corpus_id, h) hash exchange
+    // there would shuffle the standing corpus relation per increment
+    val ex = q63Exchanges(dir)
+    assert(!ex.exists("Exchange hashpartitioning\\(corpus_id#\\d+L?, h#".r
+      .findFirstIn(_).isDefined), ex.mkString("\n"))
+  }
+
+  test("q63: a warm probe of the sf0.01 increment runs at most six jobs, twice alike") {
+    // per-job fixed cost dominates a warm probe of a small increment; the
+    // repeat shows the count is the plan's, not one run's
+    val sf = "/root/testdata/sf0.01"
+    val q63 = SparkEntry.queries("q63_incremental_minhash")
+    val counter = new JobCounter(spark)
+    try {
+      q63(spark, sf).collect() // cold: builds the memoized standing index
+      val (rows1, jobs1) = counter.during(q63(spark, sf).collect())
+      val (rows2, jobs2) = counter.during(q63(spark, sf).collect())
+      assert(jobs1 <= 6, s"warm probe ran $jobs1 jobs")
+      assert(jobs2 <= 6, s"warm probe ran $jobs2 jobs")
+      assert(jobs2 == jobs1, s"warm probe job counts differ: $jobs1 then $jobs2")
+      assert(rows1.toSeq == rows2.toSeq)
+    } finally {
+      counter.close()
+      // release the sf0.01 index the memo now holds (a later q63 call
+      // re-caches it, as after a Bench teardown)
+      Session.freeAllBlocks(spark)
+    }
+  }
+
   test("q17: as-of join plans as one shuffle + window, no join node") {
     val p = plan("q17_asof_join")
     // union-tagged formulation: no join operator of any kind, and exactly

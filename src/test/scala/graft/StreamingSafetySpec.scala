@@ -217,6 +217,65 @@ class StreamingSafetySpec extends SparkSpec {
     assert(acc.value == 1L, s"parse executed ${acc.value}x for one batch")
   }
 
+  for ((label, cap) <- Seq("over the ring cap" -> 3L, "under the ring cap" -> 100L))
+    test(s"processIngestBatch executes the upstream parse exactly once, $label") {
+      // with a cap set, the ring's count is the batch's first read: it
+      // must cache the parse it runs, so the ranking pass (over the cap)
+      // or the admitted rows (under it) read that cache, not the source
+      val lake = new DataLakehouse(spark, tempDir("probecap"))
+      val acc = spark.sparkContext.longAccumulator("parse-probe-cap")
+      val rows = (0 until 5).map { i =>
+        OhlcvBar(s"SYM$i", Timestamp.valueOf(s"2024-06-15 10:3$i:00"),
+          150, 155, 149, 153, 1000L + i, AssetClass.Equity)
+      } :+ OhlcvBar("BAD", Timestamp.valueOf("2024-06-15 10:39:00"),
+        150, 155, 149, 153, -5L, AssetClass.Equity) // negative volume → DLQ
+      val batch = spark.createDataset(rows).coalesce(1)
+        .mapPartitions { it => acc.add(1); it }.toDF()
+      Streaming.processIngestBatch(lake, batch, 0L, "probecap", Some(cap))
+      // newest 3 admitted over the cap: BAD (to the DLQ), SYM4, SYM3
+      val (admitted, evicted) = if (cap < rows.size) (2L, 3L) else (5L, 0L)
+      assert(lake.query().count == admitted)
+      assert(lake.deadLetterCount() == 1)
+      assert(Streaming.evictedCount(lake) == evicted)
+      assert(acc.value == 1L, s"parse executed ${acc.value}x for one batch")
+      // released in the batch's finally
+      assert(batch.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+    }
+
+  test("replay-dir delete tolerates entries vanishing under a concurrent attempt") {
+    // two attempts of one batch can clear the same _dlq/_evicted dir at
+    // once: a recursive delete must skip what the other removes mid-walk
+    import java.nio.file.{Files, Path}
+    import scala.jdk.CollectionConverters._
+    def tree(): Path = {
+      val root = Files.createTempDirectory("vanish")
+      for (d <- 0 until 40; f <- 0 until 10) {
+        val dir = Files.createDirectories(root.resolve(s"d$d/e${d % 3}"))
+        Files.write(dir.resolve(s"part-$f.parquet"), Array[Byte](1))
+      }
+      root
+    }
+    // the other attempt deletes children before parents from its own
+    // listing, taken before either starts
+    def otherAttempt(listed: List[Path]): Unit =
+      listed.reverse.foreach { p =>
+        try Files.deleteIfExists(p) catch {
+          case _: java.nio.file.DirectoryNotEmptyException => ()
+        }
+      }
+    for (_ <- 0 until 20) {
+      val root = tree()
+      val listed = {
+        val w = Files.walk(root)
+        try w.iterator().asScala.toList finally w.close()
+      }
+      val other = new Thread(() => otherAttempt(listed))
+      other.start()
+      try DataLakehouse.deleteRecursively(root) finally other.join()
+      assert(!Files.exists(root))
+    }
+  }
+
   test("ring admission end-to-end: ingestStream caps a real micro-batch") {
     val lake = new DataLakehouse(spark, tempDir("ringe2e"))
     val src = tempDir("ringe2esrc")
