@@ -97,16 +97,22 @@ final class DataLakehouse(
   private def withMicrosTimestamps[T](body: => T): T =
     DataLakehouse.withMicrosTimestamps(spark)(body)
 
-  import DataLakehouse.{AddedMeta, deleteRecursively, walkFiles}
+  import DataLakehouse.{AddedMeta, deleteRecursively, maxSymbolRows, walkFiles}
 
   val txnLog = new TxnLog(root)
   private val buffer = ArrayBuffer.empty[OhlcvBar]
   private var totalErrors: Long = 0L
 
-  // Pruned reads at or below this many scanned rows sort in ONE task
-  // instead of a sampled range shuffle (see query()): 1M OHLCV rows is
-  // ~150 MB — comfortably one task's work, far below where a distributed
-  // sort starts paying for itself.
+  // Pruned reads whose result is bounded by this many rows sort in ONE
+  // task instead of a sampled range shuffle (see query()): 1M OHLCV rows
+  // is ~150 MB — comfortably one task's work, far below where a
+  // distributed sort starts paying for itself. The gate has three sides:
+  // scanned rows under it → one task scans and sorts (coalesce(1));
+  // scanned rows over it but a one-symbol read's logged bound under it →
+  // a parallel scan, then one sorting task after a single-partition
+  // exchange; else the distributed sort. Point reads keep coalesce(1):
+  // their scan is a few row groups, so the exchange would cost more than
+  // the parallelism saves.
   private val SmallSortRows = 1L * 1000 * 1000
 
   private val schemaWithDate: StructType =
@@ -768,9 +774,11 @@ final class DataLakehouse(
       metas.map { case (k, v) => k -> v._3 }.toMap)
   }
 
-  /** Row count, (symbol, ts) bounds when trustworthy, and length + mtime
-    * of one published file. One Hadoop stat gives the length and mtime
-    * (the same call `readRels` falls back to) and opens a parquet footer.
+  /** Row count, (symbol, ts) bounds and largest one-symbol row count when
+    * trustworthy, and length + mtime of one published file. One Hadoop
+    * stat gives the length and mtime (the same call `readRels` falls back
+    * to) and opens a parquet footer; the count reads the `symbol` column
+    * chunk only.
     */
   private def fileMeta(rel: String)
       : (Long, Option[TxnLog.FileStat], TxnLog.FileSize) = {
@@ -821,7 +829,11 @@ final class DataLakehouse(
               _.asInstanceOf[java.lang.Long].longValue())
           } yield TxnLog.FileStat(sMin, sMax, tMin, tMax)
           catch { case scala.util.control.NonFatal(_) => None }
-        (reader.getRecordCount, stat, size)
+        // an unreadable count keeps the bounds: reads fall back to the
+        // file's row count, pruning is unaffected
+        val counted = stat.map(_.copy(maxSymbolRows =
+          scala.util.Try(maxSymbolRows(reader)).toOption))
+        (reader.getRecordCount, counted, size)
       } finally reader.close()
     }
   }
@@ -918,6 +930,16 @@ final class DataLakehouse(
     * file and starts no job before its own scan (a log written before
     * lengths were recorded costs one stat per such file).
     *
+    * The sort is planned from the log's statistics too, on three sides of
+    * [[SmallSortRows]]: a read that SCANS few rows (a point read) is
+    * scanned and sorted by one task, `coalesce(1)`, which for a scan of a
+    * few row groups beats any exchange; a one-symbol read that scans many
+    * rows but RETURNS few — bounded by each pruned file's largest
+    * one-symbol row count, recorded at commit — scans in parallel and
+    * sorts in one task after a single-partition exchange (no sampling
+    * job, the scan runs once); any other read takes the distributed
+    * `orderBy`. All three return the same rows in the same order.
+    *
     * `totalRowsScanned` (A2) is the row count of the pruned file set, from
     * the log's commit-time counts — metadata-only, no data IO.
     */
@@ -937,7 +959,17 @@ final class DataLakehouse(
     // Commit-time row counts from the log; footer IO only for files from
     // pre-rowCount commits (none in practice).
     val recorded = txnLog.rowCountsAt(version)
-    val rowsScanned = pruned.map(r => recorded.getOrElse(r, footerRowCount(r))).sum
+    val fileRows = pruned.map(r => r -> recorded.getOrElse(r, footerRowCount(r)))
+    val rowsScanned = fileRows.map(_._2).sum
+    // A one-symbol read returns at most each file's largest one-symbol
+    // row count (recorded at commit); a file without one may return all
+    // of its rows.
+    val resultBound = if (symbol.isEmpty) rowsScanned else {
+      val stats = txnLog.fileStatsAt(version)
+      fileRows.map { case (r, n) =>
+        stats.get(r).flatMap(_.maxSymbolRows).fold(n)(math.min(n, _))
+      }.sum
+    }
 
     // Schema evolution (§1.2): read with the schema RECORDED at the target
     // version — a time-travel read across a later schema change must
@@ -954,19 +986,16 @@ final class DataLakehouse(
       end.map(ts => col("timestamp") <= lit(ts)))
       .flatten ++ eq.map { case (c, v) => col(c) === lit(v) })
       .foldLeft(base)((df, cond) => df.filter(cond))
-    // Sort strategy picked from table METADATA (recorded row counts of
-    // the pruned file set — an upper bound on result rows): a global
-    // orderBy costs a range-partitioning sampling job + a shuffle, pure
-    // overhead when the pruned result fits one task. Small reads sort in
-    // a single partition (one job, no sampling, no exchange); anything
-    // above the bound keeps the distributed sort — the gate is what a
-    // cost-based planner would do with the same statistics, and it can
-    // only engage when pruning already bounded the data.
+    // Sort strategy picked from table METADATA (see SmallSortRows): a
+    // global orderBy costs a range-partitioning sampling job + a shuffle,
+    // pure overhead when the result fits one task.
+    val byTime = Seq(col("timestamp"), col("symbol"))
     val filtered =
       if (rowsScanned <= SmallSortRows)
-        unsorted.coalesce(1)
-          .sortWithinPartitions(col("timestamp"), col("symbol"))
-      else unsorted.orderBy(col("timestamp"), col("symbol"))
+        unsorted.coalesce(1).sortWithinPartitions(byTime: _*)
+      else if (resultBound <= SmallSortRows)
+        unsorted.repartition(1).sortWithinPartitions(byTime: _*)
+      else unsorted.orderBy(byTime: _*)
 
     QueryResult(filtered, (System.nanoTime() - t0) / 1e6, rowsScanned)
   }
@@ -1913,15 +1942,16 @@ final class DataLakehouse(
     * record. Catches vanished files, truncated/corrupted objects
     * (parquet's footer-at-end makes any truncation unreadable), and
     * swapped files (same name, different contents → row-count or stats
-    * drift). Footer IO only — no data pages are read — parallel across
-    * files like `commitMeta`, and the file list is txn-log-resident like
-    * every metadata op, so cost is O(live files), not O(bytes).
+    * drift). Footer IO plus the `symbol` column chunk (the one-symbol
+    * count) — no other data pages are read — parallel across files like
+    * `commitMeta`, and the file list is txn-log-resident like every
+    * metadata op, so cost is O(live files), not O(bytes).
     *
     * Returns one row per live file, ordered by path:
     * (file, status ∈ ok|missing|unreadable|row_count_mismatch|
     * stats_mismatch, expected_rows, actual_rows). `stats_mismatch`
-    * compares recomputed (symbol, ts) bounds against the recorded ones
-    * only when bounds were recorded for the file.
+    * compares recomputed (symbol, ts) bounds and one-symbol count against
+    * the recorded ones only when they were recorded for the file.
     */
   def verifyIntegrity(): DataFrame = {
     import java.util.stream.Collectors
@@ -1941,7 +1971,10 @@ final class DataLakehouse(
         case Some((actualRows, recomputed, _)) =>
           if (expected.exists(_ != actualRows))
             (rel, "row_count_mismatch", expected, Some(actualRows))
-          else if (stats.get(rel).exists(rec => !recomputed.contains(rec)))
+          // a count absent from the record (an older log) is not compared
+          else if (stats.get(rel).exists(rec => !recomputed.map(r =>
+              if (rec.maxSymbolRows.isEmpty) r.copy(maxSymbolRows = None) else r)
+              .contains(rec)))
             (rel, "stats_mismatch", expected, Some(actualRows))
           else (rel, "ok", expected, Some(actualRows))
       }
@@ -2084,6 +2117,58 @@ private final class LogFileIndex(root: HadoopPath,
 }
 
 object DataLakehouse {
+  /** The largest number of non-null `symbol` values any one symbol holds
+    * in an open parquet file, read from the `symbol` column chunks alone.
+    * Dictionary-encoded pages are counted by dictionary id (no string is
+    * decoded per row); pages that fell back to plain encoding count the
+    * values themselves.
+    */
+  private def maxSymbolRows(reader: ParquetFileReader): Long = {
+    import org.apache.parquet.column.Dictionary
+    import org.apache.parquet.column.impl.ColumnReadStoreImpl
+    import org.apache.parquet.io.api.{Binary, Converter, GroupConverter, PrimitiveConverter}
+    import org.apache.parquet.schema.MessageType
+    val meta = reader.getFooter.getFileMetaData
+    val projected = new MessageType(meta.getSchema.getName, meta.getSchema.getType(Seq("symbol"): _*))
+    reader.setRequestedSchema(projected)
+    val desc = projected.getColumns.get(0)
+    val counts = scala.collection.mutable.HashMap.empty[String, Long]
+    def add(sym: String, n: Long): Unit = counts(sym) = counts.getOrElse(sym, 0L) + n
+    object symbols extends PrimitiveConverter {
+      var dict: Dictionary = _
+      var byId: Array[Long] = _
+      override def hasDictionarySupport: Boolean = true
+      override def setDictionary(d: Dictionary): Unit = {
+        dict = d; byId = new Array[Long](d.getMaxId + 1)
+      }
+      override def addValueFromDictionary(id: Int): Unit = byId(id) += 1
+      override def addBinary(v: Binary): Unit = add(v.toStringUsingUTF8, 1L)
+    }
+    val root = new GroupConverter {
+      override def getConverter(i: Int): Converter = symbols
+      override def start(): Unit = ()
+      override def end(): Unit = ()
+    }
+    var rowGroup = reader.readNextRowGroup()
+    while (rowGroup != null) {
+      symbols.dict = null
+      val column = new ColumnReadStoreImpl(rowGroup, root, projected, meta.getCreatedBy)
+        .getColumnReader(desc)
+      var left = column.getTotalValueCount
+      while (left > 0) {
+        if (column.getCurrentDefinitionLevel == desc.getMaxDefinitionLevel)
+          column.writeCurrentValueToConverter()
+        column.consume()
+        left -= 1
+      }
+      if (symbols.dict != null)
+        for (id <- symbols.byId.indices if symbols.byId(id) > 0)
+          add(symbols.dict.decodeToBinary(id).toStringUsingUTF8, symbols.byId(id))
+      rowGroup = reader.readNextRowGroup()
+    }
+    counts.values.maxOption.getOrElse(0L)
+  }
+
   /** Per-file commit metadata of freshly published files, as the txn log
     * records it.
     */

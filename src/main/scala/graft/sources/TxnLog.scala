@@ -91,9 +91,16 @@ object TxnLog {
     * a single footer (the Delta-style skipping the reference describes:
     * "reads the transaction log, finds that AAPL data for that date
     * lives in specific Parquet files" — README.md:131).
+    *
+    * `maxSymbolRows` is the largest number of rows any one symbol holds
+    * in the file: a one-symbol read returns at most that many rows from
+    * it, which bounds the read's result far below the file's row count
+    * when every file spans every symbol. Absent in logs written before it
+    * was recorded; readers then fall back to the file's row count.
     */
   final case class FileStat(
-      symbolMin: String, symbolMax: String, tsMinUs: Long, tsMaxUs: Long)
+      symbolMin: String, symbolMax: String, tsMinUs: Long, tsMaxUs: Long,
+      maxSymbolRows: Option[Long] = None)
 
   /** Per-file Bloom filter over one column's values, recorded at commit
     * time — the log-side NEEDLE statistics. Min/max bounds prune range
@@ -398,7 +405,8 @@ final class TxnLog(root: String, checkpointInterval: Int = 10,
       fs.fields().asScala.map { e =>
         val v = e.getValue
         e.getKey -> FileStat(v.get("sMin").asText(), v.get("sMax").asText(),
-          v.get("tMin").asLong(), v.get("tMax").asLong())
+          v.get("tMin").asLong(), v.get("tMax").asLong(),
+          Option(v.get("sRowsMax")).map(_.asLong()))
       }.toMap
     }.getOrElse(Map.empty)
 
@@ -409,6 +417,7 @@ final class TxnLog(root: String, checkpointInterval: Int = 10,
         val o = fs.putObject(k)
         o.put("sMin", st.symbolMin); o.put("sMax", st.symbolMax)
         o.put("tMin", st.tsMinUs); o.put("tMax", st.tsMaxUs)
+        st.maxSymbolRows.foreach(o.put("sRowsMax", _))
       }
     }
 

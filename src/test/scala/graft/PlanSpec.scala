@@ -384,6 +384,32 @@ class PlanSpec extends SparkSpec {
       assert(!p.contains("rangepartitioning"), p)
       assert(!p.contains("Coalesce"), p)
       assert(df.count() == 50)
+
+      // query()'s one-symbol reads, on each side of the gate
+      val day0 = new java.sql.Timestamp(1718409600000L)
+      if (rows == 1000L) {
+        // a point read scans few rows: one coalesced task, no exchange
+        val point = l.query(symbol = Some("S7"), start = Some(day0),
+          end = Some(new java.sql.Timestamp(day0.getTime + 86400000L - 1)))
+        val pp = point.df.queryExecution.executedPlan.toString
+        assert(pp.contains("Coalesce 1"), pp)
+        assert(!pp.contains("Exchange"), pp)
+        assert(point.df.count() == 20)
+      } else {
+        // over a million rows scanned, 20,004 returned (the logged
+        // one-symbol count): a parallel scan, then one sorting task
+        val s7 = l.query(symbol = Some("S7"))
+        assert(s7.totalRowsScanned == rows)
+        val sp = s7.df.queryExecution.executedPlan.toString
+        assert(!sp.contains("rangepartitioning"), sp)
+        assert(!sp.contains("Coalesce"), sp)
+        assert("Exchange SinglePartition".r.findAllIn(sp).size == 1, sp)
+        assert(sp.split("\n").count(_.contains("Exchange")) == 1, sp)
+        val ordered = l.sql("SELECT * FROM trades").filter(col("symbol") === "S7")
+          .orderBy(col("timestamp"), col("symbol")).collect().toSeq
+        assert(ordered.size == 20004)
+        assert(s7.df.collect().toSeq == ordered)
+      }
     }
   }
 }
